@@ -160,6 +160,85 @@ def test_multimodal_stub_contract(spark, docs):
         multimodal.decode_audio(corrupt)
 
 
+def test_map_doc_kernel_harness(spark):
+    """The one per-document kernel harness of the codec family: 0, 1 or
+    3 rows per doc (a whole input batch may yield zero rows), a None
+    field lands as SQL NULL, the output carries exactly the declared
+    Spark types, and a kernel exception fails the action."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("k", T.LongType()),
+            T.StructField("label", T.StringType()),
+            T.StructField("score", T.DoubleType()),
+            T.StructField("ok", T.BooleanType()),
+        ]
+    )
+
+    def kernel(doc_id):
+        if doc_id < 3:  # the whole first partition of ids 0..8
+            return
+        for k in range(1 if doc_id % 2 else 3):
+            yield {
+                "doc_id": doc_id,
+                "k": k,
+                "label": None if doc_id % 2 else f"d{doc_id}",
+                "score": doc_id / 2,
+                "ok": k == 0,
+            }
+
+    # three partitions of three ids; the INT key exercises the long cast
+    docs = spark.range(0, 9, 1, 3).select(F.col("id").cast("int").alias("key"))
+    out = multimodal.map_doc_kernel(docs, kernel, schema, id_col="key")
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        (f.name, f.dataType) for f in schema.fields
+    ]
+    rows = sorted(tuple(r) for r in out.collect())
+    assert rows == sorted(
+        (d, k, None if d % 2 else f"d{d}", d / 2, k == 0)
+        for d in range(3, 9)
+        for k in range(1 if d % 2 else 3)
+    )
+    assert out.filter(F.col("label").isNull()).count() == 3  # docs 3, 5, 7
+    # the same harness takes a DDL schema
+    ddl = multimodal.map_doc_kernel(
+        docs, kernel, "doc_id LONG, k LONG, label STRING, score DOUBLE, ok BOOLEAN", "key"
+    )
+    assert ddl.schema == out.schema and ddl.count() == len(rows)
+
+    def failing(doc_id):
+        if doc_id == 4:
+            raise RuntimeError(f"kernel failed on doc {doc_id}")
+        yield {"doc_id": doc_id}
+
+    with pytest.raises(Exception, match="kernel failed on doc 4"):
+        multimodal.map_doc_kernel(docs, failing, schema, "key").collect()
+
+
+def test_ship_package_failure_is_logged(spark, monkeypatch, caplog):
+    """A package zip that cannot be shipped to the Python workers is a
+    logged warning carrying the cause, not a silent pass: the kernels
+    unpickle by module reference, so a failed ship otherwise shows up
+    only later as an opaque worker ImportError."""
+    import logging
+
+    from trino_demo_spark import session
+
+    def refuse(path):
+        raise OSError(f"refused {path}")
+
+    monkeypatch.setattr(session, "_PYFILES_ADDED", set())
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", refuse)
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session._ship_package(spark)
+    assert any(
+        r.levelno == logging.WARNING and "refused" in r.getMessage()
+        for r in caplog.records
+    )
+
+
 def test_g711_telephony_wav():
     """G.711 µ-law/A-law WAV: decode tables hit the canonical ITU
     extrema (±32124 / ±32256, code 0xFF → 0), companding error stays

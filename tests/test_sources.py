@@ -288,6 +288,41 @@ def test_events_nanos_and_micros_encodings_normalize_identically(spark, tmp_path
     assert a == b and len(a) == 2
 
 
+def test_load_table_reinfers_a_table_rewritten_at_the_same_path(spark, tmp_path):
+    """The physical-schema memo must not outlive the file it describes:
+    a long-lived process that loads events, then sees the table rewritten
+    at the same path with an extra column and the other ts encoding,
+    must read the new file with the new layout (a path-only memo kept
+    the int64-nanos schema and misread the timestamp[us] column)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from trino_demo_spark.registry import load_table
+
+    nanos = [1_700_000_000_123_456_000, 1_700_000_060_500_000_000]
+    cols = {
+        "event_id": pa.array([1, 2], pa.int64()),
+        "user_id": pa.array([7, 8], pa.int64()),
+        "event_type": pa.array(["click", "view"]),
+        "value": pa.array([1.5, 2.5], pa.float64()),
+        "props": pa.array(['{"k": 1}', '{"k": 2}']),
+    }
+    path = tmp_path / "events.parquet"
+
+    def ts_ns():
+        return sorted(
+            r["ts_ns"] for r in load_table(spark, "events", str(tmp_path)).collect()
+        )
+
+    pq.write_table(pa.table({**cols, "ts": pa.array(nanos, pa.int64())}), path)
+    assert ts_ns() == nanos
+    micros = pa.array([n // 1000 for n in nanos], pa.timestamp("us"))
+    pq.write_table(
+        pa.table({**cols, "ts": micros, "extra": pa.array(["a", "b"])}), path
+    )
+    assert ts_ns() == [n // 1000 * 1000 for n in nanos]
+
+
 def test_observation_metrics_without_second_scan(spark):
     """Spark's Observation API: pipeline health metrics (row count,
     null count, value total) ride the SAME action as the real job —

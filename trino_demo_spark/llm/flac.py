@@ -22,8 +22,8 @@ same integer prediction the decoder reverses. Perceptual codecs
 
 Reference parity: the reference pipeline ships raw media bytes through
 Kafka/Trino as opaque blobs (reference producer scripts); decoding is
-client-side. Here the codec runs engine-side under Arrow mapInPandas
-(see llm.multimodal.flac_roundtrip_features).
+client-side. Here the codec runs engine-side through
+llm.multimodal.map_doc_kernel (see flac_roundtrip_features).
 """
 
 from __future__ import annotations

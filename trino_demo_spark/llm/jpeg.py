@@ -2,7 +2,7 @@
 (YCbCr 4:4:4 / 4:2:2 / 4:2:0), pure stdlib + numpy block DCT. Closes
 the JPEG half of the multimodal image stubs the same way the
 PNG/PPM/WAV kernels were closed: a REAL encoder + decoder pair
-exercised end-to-end through mapInPandas
+exercised end-to-end through multimodal.map_doc_kernel
 (multimodal.jpeg_roundtrip_features / jpeg_color_roundtrip_features),
 with the lossy-codec twist that the driver surface is a TOLERANCE
 VERDICT rather than a bit-exact feature compare (quantization + chroma

@@ -22,8 +22,8 @@ package's declared error contract.
 
 Reference parity: the reference ships media blobs opaquely
 (Kafka producer scripts); demux is client-side. Here it runs
-engine-side under Arrow mapInPandas
-(llm.multimodal.mp4_sample_features).
+engine-side through llm.multimodal.map_doc_kernel
+(mp4_sample_features).
 """
 
 from __future__ import annotations

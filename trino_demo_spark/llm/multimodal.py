@@ -1,10 +1,12 @@
 """Multimodal column plumbing (SURVEY.md §2.10 `llm_multimodal_cols`).
 
 Modality payloads are opaque BinaryType columns with a typed metadata
-struct alongside; decode / feature-extract run as Arrow-batched
-mapInPandas over those columns. Formats are decoded with REAL
-pure-stdlib kernels: WAV/RIFF audio — linear PCM16, G.711 µ-law/A-law
-telephony companding, and IMA ADPCM 4-bit differential
+struct alongside; every codec kernel runs per document through the one
+Arrow harness `map_doc_kernel` (mapInArrow), and the payload featurizer
+`extract_features` is a vectorized mapInPandas pass over the payload
+column. Formats are decoded with REAL pure-stdlib kernels: WAV/RIFF
+audio — linear PCM16, G.711 µ-law/A-law telephony companding, and IMA
+ADPCM 4-bit differential
 (`decode_audio` / `encode_wav_pcm16` / `encode_wav_g711` /
 `encode_wav_ima_adpcm`) — binary PPM/PGM images (`decode_image` /
 `encode_ppm`), PNG — stdlib zlib inflate + chunk-CRC walk + full
@@ -16,7 +18,7 @@ intervals, see llm.jpeg — (`jpeg_roundtrip_features` and kin,
 tolerance-verdict oracles since the codec is lossy), and
 concatenated-PPM video streams — ffmpeg's image2pipe/ppm raw-video
 format — (`frame_sample` / `encode_ppm_stream`), all exercised
-end-to-end through mapInPandas with DuckDB-oracle-checked features
+end-to-end through `map_doc_kernel` with DuckDB-oracle-checked features
 (parity_llm.llm_multimodal_wav/_ppm/_png/_png_palette/_png_adam7/
 _png_trns/_jpeg/_jpeg_color/_jpeg_progressive/_frames). MP4 (ISO-BMFF)
 containers are box-walk demuxed for real (llm.mp4 /
@@ -36,7 +38,7 @@ mp3/aac/opus, VPx video) — declared stubs.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -83,6 +85,40 @@ def attach_payload(
             F.lit(mime).alias("mime"), F.octet_length(payload).cast("long").alias("n_bytes")
         ).alias("meta"),
     )
+
+
+def map_doc_kernel(
+    docs: DataFrame,
+    kernel: Callable[[int], Iterable[dict]],
+    schema: T.StructType | str,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The per-document kernel harness of the codec family: select
+    `id_col` cast to long as `doc_id`, call `kernel(doc_id)` for each
+    id, and build each output batch from the row dicts it returns (zero,
+    one or many per doc; a missing or None field is SQL NULL) with
+    `pa.RecordBatch.from_pylist` under mapInArrow. `schema` is the
+    declared Spark output schema (StructType or DDL); its Arrow twin is
+    derived once, when the plan is built, not per batch. A kernel
+    exception fails the task, so it surfaces from the action."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def apply(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [
+                row
+                for doc_id in batch.column("doc_id").to_pylist()
+                for row in kernel(doc_id)
+            ]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    return ids.mapInArrow(apply, schema)
 
 
 def encode_wav_pcm16(samples: "list[int]", sample_rate: int = 8000, channels: int = 1) -> bytes:
@@ -1027,106 +1063,77 @@ def _synth_pixels(doc_id: int) -> "tuple[int, int, bytes]":
 def wav_roundtrip_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Audio decode exercised for real: synthesize a deterministic PCM16
     signal per row, ENCODE it to RIFF/WAVE bytes, DECODE those bytes with
-    decode_audio, and emit features computed from the decoded samples —
-    all inside one Arrow-batched mapInPandas pass (the exact shape a real
-    featurizer over object-store audio takes; at scale, repartition by
-    size bins first to even out media skew)."""
+    decode_audio, and emit features computed from the decoded samples
+    (at scale, repartition by size bins first to even out media skew)."""
     import math
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        rate = 8000 + (doc_id % 5) * 1000
+        payload = encode_wav_pcm16(_synth_samples(doc_id), rate)
+        decoded = decode_audio(payload)
+        s = decoded["samples"]
+        yield {
+            "doc_id": doc_id,
+            "sample_rate": decoded["sample_rate"],
+            "n_samples": len(s),
+            "sum_samples": sum(s),
+            "rms": round(
+                math.sqrt(sum(x * x for x in s) / len(s)) + 1e-9, 4
+            ),
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                rate = 8000 + (doc_id % 5) * 1000
-                payload = encode_wav_pcm16(_synth_samples(doc_id), rate)
-                decoded = decode_audio(payload)
-                s = decoded["samples"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "sample_rate": decoded["sample_rate"],
-                        "n_samples": len(s),
-                        "sum_samples": sum(s),
-                        "rms": round(
-                            math.sqrt(sum(x * x for x in s) / len(s)) + 1e-9, 4
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=WAV_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, WAV_FEATURE_SCHEMA, id_col)
 
 
 def ppm_roundtrip_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Image decode exercised for real: deterministic RGB raster → binary
-    PPM bytes → decode_image → features from the decoded raster, one
-    Arrow-batched mapInPandas pass (see wav_roundtrip_features)."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    PPM bytes → decode_image → features from the decoded raster."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, pixels = _synth_pixels(doc_id)
-                decoded = decode_image(encode_ppm(w, h, pixels))
-                raster = decoded["pixels"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": decoded["width"],
-                        "height": decoded["height"],
-                        "n_pixel_bytes": len(raster),
-                        "pix_sum": sum(raster),
-                        "mean_pixel": round(sum(raster) / len(raster) + 1e-9, 4),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h, pixels = _synth_pixels(doc_id)
+        decoded = decode_image(encode_ppm(w, h, pixels))
+        raster = decoded["pixels"]
+        yield {
+            "doc_id": doc_id,
+            "width": decoded["width"],
+            "height": decoded["height"],
+            "n_pixel_bytes": len(raster),
+            "pix_sum": sum(raster),
+            "mean_pixel": round(sum(raster) / len(raster) + 1e-9, 4),
+        }
 
-    return ids.mapInPandas(run, schema=PPM_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, PPM_FEATURE_SCHEMA, id_col)
 
 
 def png_roundtrip_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """PNG decode exercised for real: deterministic RGB raster → REAL
     PNG bytes (zlib deflate, per-scanline filters varying with height so
     all five filter reversals run across the corpus) → decode_png →
-    features from the decoded raster, one Arrow-batched mapInPandas
-    pass (see wav_roundtrip_features). Any chunk-walk / CRC / inflate /
+    features from the decoded raster. Any chunk-walk / CRC / inflate /
     unfilter bug breaks the cross-engine match against the oracle's
     source-formula recomputation."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, pixels = _synth_pixels(doc_id)
-                decoded = decode_png(encode_png(w, h, pixels, channels=3))
-                raster = decoded["pixels"]
-                if raster != pixels:  # bit-exact roundtrip, always
-                    # explicit raise, not assert: must survive python -O
-                    # and surface a typed error (ADVICE r7)
-                    raise RuntimeError(
-                        f"PNG roundtrip not bit-exact for doc {doc_id}"
-                    )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": decoded["width"],
-                        "height": decoded["height"],
-                        "channels": decoded["channels"],
-                        "n_pixel_bytes": len(raster),
-                        "pix_sum": sum(raster),
-                        "mean_pixel": round(sum(raster) / len(raster) + 1e-9, 4),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h, pixels = _synth_pixels(doc_id)
+        decoded = decode_png(encode_png(w, h, pixels, channels=3))
+        raster = decoded["pixels"]
+        if raster != pixels:  # bit-exact roundtrip, always
+            # explicit raise, not assert: must survive python -O
+            # and surface a typed error (ADVICE r7)
+            raise RuntimeError(
+                f"PNG roundtrip not bit-exact for doc {doc_id}"
+            )
+        yield {
+            "doc_id": doc_id,
+            "width": decoded["width"],
+            "height": decoded["height"],
+            "channels": decoded["channels"],
+            "n_pixel_bytes": len(raster),
+            "pix_sum": sum(raster),
+            "mean_pixel": round(sum(raster) / len(raster) + 1e-9, 4),
+        }
 
-    return ids.mapInPandas(run, schema=PNG_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, PNG_FEATURE_SCHEMA, id_col)
 
 
 def png_adam7_roundtrip_features(
@@ -1139,38 +1146,30 @@ def png_adam7_roundtrip_features(
     DECODED raster (bit-exact-roundtrip-guarded); the oracle recomputes
     them from the source formula, identical to llm_multimodal_png's
     (interlacing must be output-invisible)."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, pixels = _synth_pixels(doc_id)
-                decoded = decode_png(
-                    encode_png(w, h, pixels, channels=3, interlace=True)
-                )
-                raster = decoded["pixels"]
-                if raster != pixels:
-                    raise RuntimeError(
-                        f"Adam7 PNG roundtrip not bit-exact for doc {doc_id}"
-                    )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": decoded["width"],
-                        "height": decoded["height"],
-                        "channels": decoded["channels"],
-                        "n_pixel_bytes": len(raster),
-                        "pix_sum": sum(raster),
-                        "mean_pixel": round(
-                            sum(raster) / len(raster) + 1e-9, 4
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h, pixels = _synth_pixels(doc_id)
+        decoded = decode_png(
+            encode_png(w, h, pixels, channels=3, interlace=True)
+        )
+        raster = decoded["pixels"]
+        if raster != pixels:
+            raise RuntimeError(
+                f"Adam7 PNG roundtrip not bit-exact for doc {doc_id}"
+            )
+        yield {
+            "doc_id": doc_id,
+            "width": decoded["width"],
+            "height": decoded["height"],
+            "channels": decoded["channels"],
+            "n_pixel_bytes": len(raster),
+            "pix_sum": sum(raster),
+            "mean_pixel": round(
+                sum(raster) / len(raster) + 1e-9, 4
+            ),
+        }
 
-    return ids.mapInPandas(run, schema=PNG_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, PNG_FEATURE_SCHEMA, id_col)
 
 
 PNG_PALETTE_FEATURE_SCHEMA = T.StructType(
@@ -1211,39 +1210,31 @@ def png_palette_roundtrip_features(
     parse, unfilter, palette expansion back to RGB) → features from the
     DECODED raster, bit-exact-roundtrip-guarded; the oracle recomputes
     them from the source formula (lossless codec — same discipline as
-    llm_multimodal_png). One Arrow mapInPandas pass."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    llm_multimodal_png)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, pixels = _synth_indexed(doc_id)
-                decoded = decode_png(encode_png_palette(w, h, pixels))
-                raster = decoded["pixels"]
-                if raster != pixels or decoded["channels"] != 3:
-                    raise RuntimeError(
-                        f"palette PNG roundtrip not bit-exact for doc "
-                        f"{doc_id}"
-                    )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": decoded["width"],
-                        "height": decoded["height"],
-                        "channels": decoded["channels"],
-                        "n_colors": min(16, w * h),
-                        "n_pixel_bytes": len(raster),
-                        "pix_sum": sum(raster),
-                        "mean_pixel": round(
-                            sum(raster) / len(raster) + 1e-9, 4
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h, pixels = _synth_indexed(doc_id)
+        decoded = decode_png(encode_png_palette(w, h, pixels))
+        raster = decoded["pixels"]
+        if raster != pixels or decoded["channels"] != 3:
+            raise RuntimeError(
+                f"palette PNG roundtrip not bit-exact for doc "
+                f"{doc_id}"
+            )
+        yield {
+            "doc_id": doc_id,
+            "width": decoded["width"],
+            "height": decoded["height"],
+            "channels": decoded["channels"],
+            "n_colors": min(16, w * h),
+            "n_pixel_bytes": len(raster),
+            "pix_sum": sum(raster),
+            "mean_pixel": round(
+                sum(raster) / len(raster) + 1e-9, 4
+            ),
+        }
 
-    return ids.mapInPandas(run, schema=PNG_PALETTE_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, PNG_PALETTE_FEATURE_SCHEMA, id_col)
 
 
 G711_FEATURE_SCHEMA = T.StructType(
@@ -1267,44 +1258,36 @@ def g711_roundtrip_features(
     is the jpeg pattern: exact codec/rate/count columns oracle-checked,
     plus bounds — companding error within the top-segment half-step
     (+clip), and decode∘encode idempotent on the codec lattice."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                law = "ulaw" if doc_id % 2 == 0 else "alaw"
-                n = 200 + (doc_id % 7) * 50
-                samples = [
-                    ((doc_id * 131 + i * 7919) % 65536) - 32768
-                    for i in range(n)
-                ]
-                wav = encode_wav_g711(samples, 8000, 1, law)
-                dec = decode_audio(wav)
-                if dec["codec"] != law or len(dec["samples"]) != n:
-                    raise RuntimeError(
-                        f"G.711 decode shape mismatch for doc {doc_id}"
-                    )
-                bound = 650 if law == "ulaw" else 520
-                max_err = max(
-                    abs(s - d) for s, d in zip(samples, dec["samples"])
-                )
-                wav2 = encode_wav_g711(dec["samples"], 8000, 1, law)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "codec": law,
-                        "sample_rate": dec["sample_rate"],
-                        "n_samples": n,
-                        "max_err_ok": max_err <= bound,
-                        "idempotent_ok": decode_audio(wav2)["samples"]
-                        == dec["samples"],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        law = "ulaw" if doc_id % 2 == 0 else "alaw"
+        n = 200 + (doc_id % 7) * 50
+        samples = [
+            ((doc_id * 131 + i * 7919) % 65536) - 32768
+            for i in range(n)
+        ]
+        wav = encode_wav_g711(samples, 8000, 1, law)
+        dec = decode_audio(wav)
+        if dec["codec"] != law or len(dec["samples"]) != n:
+            raise RuntimeError(
+                f"G.711 decode shape mismatch for doc {doc_id}"
+            )
+        bound = 650 if law == "ulaw" else 520
+        max_err = max(
+            abs(s - d) for s, d in zip(samples, dec["samples"])
+        )
+        wav2 = encode_wav_g711(dec["samples"], 8000, 1, law)
+        yield {
+            "doc_id": doc_id,
+            "codec": law,
+            "sample_rate": dec["sample_rate"],
+            "n_samples": n,
+            "max_err_ok": max_err <= bound,
+            "idempotent_ok": decode_audio(wav2)["samples"]
+            == dec["samples"],
+        }
 
-    return ids.mapInPandas(run, schema=G711_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, G711_FEATURE_SCHEMA, id_col)
 
 
 MJPEG_FEATURE_SCHEMA = T.StructType(
@@ -1332,8 +1315,6 @@ def mjpeg_sample_features(
     alone — any boundary-walk error shifts an offset and breaks it."""
     from . import jpeg as _jpeg
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
-
     def synth_frame(doc_id: int, j: int) -> "tuple[int, int, bytes]":
         w, h = 6 + j, 5 + j
         px = bytearray()
@@ -1344,38 +1325,31 @@ def mjpeg_sample_features(
             px.append(80 + x + 2 * y + (doc_id * 11 + j * 17) % 60)
         return w, h, bytes(px)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n_frames = 4 + doc_id % 4
-                encs = []
-                for j in range(n_frames):
-                    w, h, px = synth_frame(doc_id, j)
-                    encs.append(
-                        _jpeg.encode_jpeg_color(
-                            w, h, px, 90, _JPEG_SUBSAMPLINGS[j % 3]
-                        )
-                    )
-                stream = b"".join(encs)
-                for f in frame_sample(stream, every_n):
-                    j = f["frame_idx"]
-                    single = _jpeg.decode_jpeg(encs[j])
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": j,
-                            "width": f["width"],
-                            "height": f["height"],
-                            "n_pixel_bytes": len(f["pixels"]),
-                            "matches_single": f["pixels"]
-                            == single["pixels"],
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        n_frames = 4 + doc_id % 4
+        encs = []
+        for j in range(n_frames):
+            w, h, px = synth_frame(doc_id, j)
+            encs.append(
+                _jpeg.encode_jpeg_color(
+                    w, h, px, 90, _JPEG_SUBSAMPLINGS[j % 3]
+                )
+            )
+        stream = b"".join(encs)
+        for f in frame_sample(stream, every_n):
+            j = f["frame_idx"]
+            single = _jpeg.decode_jpeg(encs[j])
+            yield {
+                "doc_id": doc_id,
+                "frame_idx": j,
+                "width": f["width"],
+                "height": f["height"],
+                "n_pixel_bytes": len(f["pixels"]),
+                "matches_single": f["pixels"]
+                == single["pixels"],
+            }
 
-    return ids.mapInPandas(run, schema=MJPEG_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, MJPEG_FEATURE_SCHEMA, id_col)
 
 
 ADPCM_FEATURE_SCHEMA = T.StructType(
@@ -1399,40 +1373,32 @@ def adpcm_roundtrip_features(
     reconstruction error bounded at 3000 for the slope-bounded input
     (measured worst 2468 over the doc grid — the lattice-tracking
     property; a table/step/clamp bug blows it)."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 400 + (doc_id % 5) * 101
-                period = 200 + (doc_id % 7) * 40
-                amp = 20000 + (doc_id % 11) * 1000
-                s = [
-                    int(amp * (abs(((i % period) / period) * 4 - 2) - 1))
-                    for i in range(n)
-                ]
-                dec = decode_audio(encode_wav_ima_adpcm(s, 8000))
-                if dec["codec"] != "ima_adpcm" or len(dec["samples"]) < n:
-                    raise RuntimeError(
-                        f"ADPCM decode shape mismatch for doc {doc_id}"
-                    )
-                max_err = max(
-                    abs(a - b) for a, b in zip(s, dec["samples"])
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "codec": "ima_adpcm",
-                        "n_samples": n,
-                        "first_sample": dec["samples"][0],
-                        "max_err_ok": max_err <= 3000,  # measured worst 2468 over the doc grid
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        n = 400 + (doc_id % 5) * 101
+        period = 200 + (doc_id % 7) * 40
+        amp = 20000 + (doc_id % 11) * 1000
+        s = [
+            int(amp * (abs(((i % period) / period) * 4 - 2) - 1))
+            for i in range(n)
+        ]
+        dec = decode_audio(encode_wav_ima_adpcm(s, 8000))
+        if dec["codec"] != "ima_adpcm" or len(dec["samples"]) < n:
+            raise RuntimeError(
+                f"ADPCM decode shape mismatch for doc {doc_id}"
+            )
+        max_err = max(
+            abs(a - b) for a, b in zip(s, dec["samples"])
+        )
+        yield {
+            "doc_id": doc_id,
+            "codec": "ima_adpcm",
+            "n_samples": n,
+            "first_sample": dec["samples"][0],
+            "max_err_ok": max_err <= 3000,  # measured worst 2468 over the doc grid
+        }
 
-    return ids.mapInPandas(run, schema=ADPCM_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, ADPCM_FEATURE_SCHEMA, id_col)
 
 
 PNG16_FEATURE_SCHEMA = T.StructType(
@@ -1456,42 +1422,34 @@ def png_16bit_roundtrip_features(
     u16 RGB rasters → encode_png(depth=16) (filter distance 6 bytes per
     spec §9.2) → decode_png → features from the DECODED u16 samples,
     bit-exact-roundtrip-guarded; the oracle recomputes them from the
-    source formula. One Arrow mapInPandas pass."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    source formula."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = (doc_id % 5) + 2, (doc_id % 3) + 2
-                n = 3 * w * h
-                vals = [(doc_id * 257 + j * 4099) % 65536 for j in range(n)]
-                px = struct.pack(f">{n}H", *vals)
-                decoded = decode_png(
-                    encode_png(w, h, px, channels=3, depth=16)
-                )
-                if decoded["pixels"] != px or decoded["depth"] != 16:
-                    raise RuntimeError(
-                        f"16-bit PNG roundtrip not bit-exact for doc "
-                        f"{doc_id}"
-                    )
-                got = struct.unpack(f">{n}H", decoded["pixels"])
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "channels": 3,
-                        "depth": 16,
-                        "n_pixel_bytes": len(decoded["pixels"]),
-                        "sample_sum": sum(got),
-                        "mean_sample": round(sum(got) / n + 1e-9, 4),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h = (doc_id % 5) + 2, (doc_id % 3) + 2
+        n = 3 * w * h
+        vals = [(doc_id * 257 + j * 4099) % 65536 for j in range(n)]
+        px = struct.pack(f">{n}H", *vals)
+        decoded = decode_png(
+            encode_png(w, h, px, channels=3, depth=16)
+        )
+        if decoded["pixels"] != px or decoded["depth"] != 16:
+            raise RuntimeError(
+                f"16-bit PNG roundtrip not bit-exact for doc "
+                f"{doc_id}"
+            )
+        got = struct.unpack(f">{n}H", decoded["pixels"])
+        yield {
+            "doc_id": doc_id,
+            "width": w,
+            "height": h,
+            "channels": 3,
+            "depth": 16,
+            "n_pixel_bytes": len(decoded["pixels"]),
+            "sample_sum": sum(got),
+            "mean_sample": round(sum(got) / n + 1e-9, 4),
+        }
 
-    return ids.mapInPandas(run, schema=PNG16_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, PNG16_FEATURE_SCHEMA, id_col)
 
 
 def png_trns_roundtrip_features(
@@ -1502,52 +1460,43 @@ def png_trns_roundtrip_features(
     entries → encode_png_palette(channels=4) (alpha-ascending palette
     sort, truncated tRNS table) → decode_png (PLTE + tRNS expansion to
     RGBA, entries past the table opaque). Lossless; the oracle
-    recomputes features from the source formula. One Arrow mapInPandas
-    pass."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    recomputes features from the source formula."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = (doc_id % 6) + 3, (doc_id % 4) + 3
-                px = bytearray()
-                for i in range(w * h):
-                    c = (doc_id + i) % 12
-                    a = 255 if c % 3 else (40 + 17 * c) % 255
-                    px += bytes(
-                        (
-                            (40 + 13 * c) % 256,
-                            (60 + 29 * c) % 256,
-                            (80 + 41 * c) % 256,
-                            a,
-                        )
-                    )
-                decoded = decode_png(
-                    encode_png_palette(w, h, bytes(px), channels=4)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h = (doc_id % 6) + 3, (doc_id % 4) + 3
+        px = bytearray()
+        for i in range(w * h):
+            c = (doc_id + i) % 12
+            a = 255 if c % 3 else (40 + 17 * c) % 255
+            px += bytes(
+                (
+                    (40 + 13 * c) % 256,
+                    (60 + 29 * c) % 256,
+                    (80 + 41 * c) % 256,
+                    a,
                 )
-                raster = decoded["pixels"]
-                if raster != bytes(px) or decoded["channels"] != 4:
-                    raise RuntimeError(
-                        f"tRNS PNG roundtrip not bit-exact for doc {doc_id}"
-                    )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": decoded["width"],
-                        "height": decoded["height"],
-                        "channels": decoded["channels"],
-                        "n_pixel_bytes": len(raster),
-                        "pix_sum": sum(raster),
-                        "mean_pixel": round(
-                            sum(raster) / len(raster) + 1e-9, 4
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+            )
+        decoded = decode_png(
+            encode_png_palette(w, h, bytes(px), channels=4)
+        )
+        raster = decoded["pixels"]
+        if raster != bytes(px) or decoded["channels"] != 4:
+            raise RuntimeError(
+                f"tRNS PNG roundtrip not bit-exact for doc {doc_id}"
+            )
+        yield {
+            "doc_id": doc_id,
+            "width": decoded["width"],
+            "height": decoded["height"],
+            "channels": decoded["channels"],
+            "n_pixel_bytes": len(raster),
+            "pix_sum": sum(raster),
+            "mean_pixel": round(
+                sum(raster) / len(raster) + 1e-9, 4
+            ),
+        }
 
-    return ids.mapInPandas(run, schema=PNG_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, PNG_FEATURE_SCHEMA, id_col)
 
 
 JPEG_FEATURE_SCHEMA = T.StructType(
@@ -1582,46 +1531,37 @@ def jpeg_roundtrip_features(docs: DataFrame, id_col: str = "doc_id") -> DataFram
     instead the exact dims/byte counts are oracle-checked and the error
     bounds (max |err| ≤ 16, mean |err| ≤ 4 at Q90 — measured max 1 on
     smooth rasters, 12 on pure noise) are boolean verdicts (the
-    llm_dedup_minhash verdict pattern). One Arrow mapInPandas pass."""
+    llm_dedup_minhash verdict pattern)."""
     import numpy as np
 
     from . import jpeg as _jpeg
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h, px = _synth_gray(doc_id)
+        dec = _jpeg.decode_jpeg_gray(
+            _jpeg.encode_jpeg_gray(w, h, px, quality=90)
+        )
+        if (dec["width"], dec["height"]) != (w, h):
+            # explicit raise, not assert: must survive python -O
+            # and surface a typed error (ADVICE r7)
+            raise RuntimeError(
+                f"JPEG decode dims mismatch for doc {doc_id}"
+            )
+        a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        b = np.frombuffer(dec["pixels"], dtype=np.uint8).astype(
+            np.int64
+        )
+        err = np.abs(a - b)
+        yield {
+            "doc_id": doc_id,
+            "width": w,
+            "height": h,
+            "n_pixel_bytes": len(dec["pixels"]),
+            "max_err_ok": bool(err.max() <= 16),
+            "mean_err_ok": bool(err.mean() <= 4.0),
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, px = _synth_gray(doc_id)
-                dec = _jpeg.decode_jpeg_gray(
-                    _jpeg.encode_jpeg_gray(w, h, px, quality=90)
-                )
-                if (dec["width"], dec["height"]) != (w, h):
-                    # explicit raise, not assert: must survive python -O
-                    # and surface a typed error (ADVICE r7)
-                    raise RuntimeError(
-                        f"JPEG decode dims mismatch for doc {doc_id}"
-                    )
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                b = np.frombuffer(dec["pixels"], dtype=np.uint8).astype(
-                    np.int64
-                )
-                err = np.abs(a - b)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixel_bytes": len(dec["pixels"]),
-                        "max_err_ok": bool(err.max() <= 16),
-                        "mean_err_ok": bool(err.mean() <= 4.0),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=JPEG_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, JPEG_FEATURE_SCHEMA, id_col)
 
 
 JPEG_COLOR_FEATURE_SCHEMA = T.StructType(
@@ -1671,53 +1611,43 @@ def jpeg_color_roundtrip_features(
     the source-relative bounds stay tight (max |err| ≤ 8, mean ≤ 2 at
     Q90; measured max 2 / mean 0.4); the pure-noise worst case — where
     subsampling loss dominates — is decomposed against the ideal-
-    subsampling reference in tests/test_llm.py instead. One Arrow
-    mapInPandas pass."""
+    subsampling reference in tests/test_llm.py instead."""
     import numpy as np
 
     from . import jpeg as _jpeg
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h, px = _synth_rgb(doc_id)
+        sub = _JPEG_SUBSAMPLINGS[doc_id % 3]
+        dec = _jpeg.decode_jpeg(
+            _jpeg.encode_jpeg_color(
+                w, h, px, quality=90, subsampling=sub
+            )
+        )
+        if (dec["width"], dec["height"], dec["channels"]) != (
+            w,
+            h,
+            3,
+        ):
+            raise RuntimeError(
+                f"color JPEG decode shape mismatch for doc {doc_id}"
+            )
+        a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        b = np.frombuffer(dec["pixels"], dtype=np.uint8).astype(
+            np.int64
+        )
+        err = np.abs(a - b)
+        yield {
+            "doc_id": doc_id,
+            "width": w,
+            "height": h,
+            "n_pixel_bytes": len(dec["pixels"]),
+            "subsampling": sub,
+            "max_err_ok": bool(err.max() <= 8),
+            "mean_err_ok": bool(err.mean() <= 2.0),
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, px = _synth_rgb(doc_id)
-                sub = _JPEG_SUBSAMPLINGS[doc_id % 3]
-                dec = _jpeg.decode_jpeg(
-                    _jpeg.encode_jpeg_color(
-                        w, h, px, quality=90, subsampling=sub
-                    )
-                )
-                if (dec["width"], dec["height"], dec["channels"]) != (
-                    w,
-                    h,
-                    3,
-                ):
-                    raise RuntimeError(
-                        f"color JPEG decode shape mismatch for doc {doc_id}"
-                    )
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                b = np.frombuffer(dec["pixels"], dtype=np.uint8).astype(
-                    np.int64
-                )
-                err = np.abs(a - b)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixel_bytes": len(dec["pixels"]),
-                        "subsampling": sub,
-                        "max_err_ok": bool(err.max() <= 8),
-                        "mean_err_ok": bool(err.mean() <= 2.0),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=JPEG_COLOR_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, JPEG_COLOR_FEATURE_SCHEMA, id_col)
 
 
 JPEG_PROGRESSIVE_FEATURE_SCHEMA = T.StructType(
@@ -1745,65 +1675,58 @@ def jpeg_progressive_roundtrip_features(
     encodings share the exact quantized coefficients, so the decode
     must be BIT-IDENTICAL to the baseline decode (`matches_baseline`) —
     any scan-ordering, EOB-run, spectral-band, or component-grid bug
-    flips it false. One Arrow mapInPandas pass."""
+    flips it false."""
     import numpy as np
 
     from . import jpeg as _jpeg
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h, px = _synth_rgb(doc_id)
+        sub = _JPEG_SUBSAMPLINGS[doc_id % 3]
+        prog = _jpeg.decode_jpeg(
+            _jpeg.encode_jpeg_progressive(
+                w, h, px, quality=90, subsampling=sub
+            )
+        )
+        sa = _jpeg.decode_jpeg(
+            _jpeg.encode_jpeg_progressive(
+                w, h, px, quality=90, subsampling=sub,
+                successive=True,
+            )
+        )
+        base = _jpeg.decode_jpeg(
+            _jpeg.encode_jpeg_color(
+                w, h, px, quality=90, subsampling=sub
+            )
+        )
+        if (prog["width"], prog["height"], prog["channels"]) != (
+            w,
+            h,
+            3,
+        ):
+            raise RuntimeError(
+                f"progressive JPEG shape mismatch for doc {doc_id}"
+            )
+        a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        b = np.frombuffer(prog["pixels"], dtype=np.uint8).astype(
+            np.int64
+        )
+        yield {
+            "doc_id": doc_id,
+            "width": w,
+            "height": h,
+            "n_pixel_bytes": len(prog["pixels"]),
+            "subsampling": sub,
+            "matches_baseline": prog["pixels"]
+            == base["pixels"],
+            "sa_matches_baseline": sa["pixels"]
+            == base["pixels"],
+            "max_err_ok": bool(np.abs(a - b).max() <= 8),
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, px = _synth_rgb(doc_id)
-                sub = _JPEG_SUBSAMPLINGS[doc_id % 3]
-                prog = _jpeg.decode_jpeg(
-                    _jpeg.encode_jpeg_progressive(
-                        w, h, px, quality=90, subsampling=sub
-                    )
-                )
-                sa = _jpeg.decode_jpeg(
-                    _jpeg.encode_jpeg_progressive(
-                        w, h, px, quality=90, subsampling=sub,
-                        successive=True,
-                    )
-                )
-                base = _jpeg.decode_jpeg(
-                    _jpeg.encode_jpeg_color(
-                        w, h, px, quality=90, subsampling=sub
-                    )
-                )
-                if (prog["width"], prog["height"], prog["channels"]) != (
-                    w,
-                    h,
-                    3,
-                ):
-                    raise RuntimeError(
-                        f"progressive JPEG shape mismatch for doc {doc_id}"
-                    )
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                b = np.frombuffer(prog["pixels"], dtype=np.uint8).astype(
-                    np.int64
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixel_bytes": len(prog["pixels"]),
-                        "subsampling": sub,
-                        "matches_baseline": prog["pixels"]
-                        == base["pixels"],
-                        "sa_matches_baseline": sa["pixels"]
-                        == base["pixels"],
-                        "max_err_ok": bool(np.abs(a - b).max() <= 8),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=JPEG_PROGRESSIVE_FEATURE_SCHEMA)
+    return map_doc_kernel(
+        docs, kernel, JPEG_PROGRESSIVE_FEATURE_SCHEMA, id_col
+    )
 
 
 def extract_features(media: DataFrame, head: int = 16) -> DataFrame:
@@ -1868,32 +1791,23 @@ def video_roundtrip_features(
     deterministic frame sequence per row, ENCODE it to a
     concatenated-PPM stream (ffmpeg image2pipe/ppm bytes), walk it back
     with frame_sample keeping every `every_n`-th frame, and emit
-    per-sampled-frame features from the DECODED rasters — one
-    Arrow-batched mapInPandas pass, one output row per sampled frame
-    (row-fanout through the iterator, like a real frame featurizer)."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    per-sampled-frame features from the DECODED rasters — one output
+    row per sampled frame (row-fanout, like a real frame featurizer)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                stream = encode_ppm_stream(_synth_frames(doc_id))
-                for fr in frame_sample(stream, every_n=every_n):
-                    px = fr["pixels"]
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": fr["frame_idx"],
-                            "width": fr["width"],
-                            "height": fr["height"],
-                            "pix_sum": sum(px),
-                            "mean_pixel": round(sum(px) / len(px) + 1e-9, 4),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        stream = encode_ppm_stream(_synth_frames(doc_id))
+        for fr in frame_sample(stream, every_n=every_n):
+            px = fr["pixels"]
+            yield {
+                "doc_id": doc_id,
+                "frame_idx": fr["frame_idx"],
+                "width": fr["width"],
+                "height": fr["height"],
+                "pix_sum": sum(px),
+                "mean_pixel": round(sum(px) / len(px) + 1e-9, 4),
+            }
 
-    return ids.mapInPandas(run, schema=FRAME_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, FRAME_FEATURE_SCHEMA, id_col)
 
 
 RESIZE_FEATURE_SCHEMA = (
@@ -1913,44 +1827,34 @@ def ppm_resize_features(
     nearest-neighbor resample the decoded raster to (out_w, out_h)
     with numpy index arithmetic (``sx = x·w // out_w`` — the floor
     mapping, vectorized, no Python pixel loop), and emit features of
-    the RESIZED raster. Same Arrow mapInPandas shape as the decode
-    kernels: binary in, fixed-schema features out, batch-vectorized;
-    swap the numpy body for cv2/PIL and the plan is unchanged (those
-    libs aren't in this container — nearest-neighbor IS the real
-    kernel here, not a stub)."""
+    the RESIZED raster. Same per-doc kernel shape as the decode
+    kernels: fixed-schema features out; swap the numpy body for cv2/PIL
+    and the plan is unchanged (those libs aren't in this container —
+    nearest-neighbor IS the real kernel here, not a stub)."""
     import numpy as np
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        w, h, pixels = _synth_pixels(doc_id)
+        decoded = decode_image(encode_ppm(w, h, pixels))
+        raster = np.frombuffer(
+            bytes(decoded["pixels"]), dtype=np.uint8
+        ).reshape(decoded["height"], decoded["width"], 3)
+        sy = (np.arange(out_h) * decoded["height"]) // out_h
+        sx = (np.arange(out_w) * decoded["width"]) // out_w
+        resized = raster[sy][:, sx, :]
+        total = int(resized.sum())
+        n = resized.size
+        yield {
+            "doc_id": doc_id,
+            "src_width": decoded["width"],
+            "src_height": decoded["height"],
+            "out_width": out_w,
+            "out_height": out_h,
+            "resized_sum": total,
+            "resized_mean": round(total / n + 1e-9, 4),
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, pixels = _synth_pixels(doc_id)
-                decoded = decode_image(encode_ppm(w, h, pixels))
-                raster = np.frombuffer(
-                    bytes(decoded["pixels"]), dtype=np.uint8
-                ).reshape(decoded["height"], decoded["width"], 3)
-                sy = (np.arange(out_h) * decoded["height"]) // out_h
-                sx = (np.arange(out_w) * decoded["width"]) // out_w
-                resized = raster[sy][:, sx, :]
-                total = int(resized.sum())
-                n = resized.size
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "src_width": decoded["width"],
-                        "src_height": decoded["height"],
-                        "out_width": out_w,
-                        "out_height": out_h,
-                        "resized_sum": total,
-                        "resized_mean": round(total / n + 1e-9, 4),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=RESIZE_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, RESIZE_FEATURE_SCHEMA, id_col)
 
 
 RESAMPLE_FEATURE_SCHEMA = (
@@ -1967,44 +1871,34 @@ def wav_resample_features(
     RIFF/WAVE payload, decimate the PCM stream by `factor` (keep every
     factor-th sample — the real integer-factor downsampling kernel;
     swap in a polyphase filter via scipy when available, same plan
-    shape), emit features of the RESAMPLED signal. One Arrow
-    mapInPandas pass, numpy-vectorized slicing, no per-sample Python
-    loop."""
+    shape), emit features of the RESAMPLED signal. Numpy-vectorized
+    slicing, no per-sample Python loop."""
     import math
 
     import numpy as np
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        rate = 8000 + (doc_id % 5) * 1000
+        payload = encode_wav_pcm16(_synth_samples(doc_id), rate)
+        decoded = decode_audio(payload)
+        src = np.asarray(decoded["samples"], dtype=np.int64)
+        out = src[::factor]
+        total = int(out.sum())
+        yield {
+            "doc_id": doc_id,
+            "src_rate": decoded["sample_rate"],
+            "out_rate": decoded["sample_rate"] // factor,
+            "n_src": len(src),
+            "n_out": len(out),
+            "sum_out": total,
+            "rms_out": round(
+                math.sqrt(float((out * out).sum()) / len(out))
+                + 1e-9,
+                4,
+            ),
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                rate = 8000 + (doc_id % 5) * 1000
-                payload = encode_wav_pcm16(_synth_samples(doc_id), rate)
-                decoded = decode_audio(payload)
-                src = np.asarray(decoded["samples"], dtype=np.int64)
-                out = src[::factor]
-                total = int(out.sum())
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "src_rate": decoded["sample_rate"],
-                        "out_rate": decoded["sample_rate"] // factor,
-                        "n_src": len(src),
-                        "n_out": len(out),
-                        "sum_out": total,
-                        "rms_out": round(
-                            math.sqrt(float((out * out).sum()) / len(out))
-                            + 1e-9,
-                            4,
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=RESAMPLE_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, RESAMPLE_FEATURE_SCHEMA, id_col)
 
 
 FLAC_FEATURE_SCHEMA = T.StructType(
@@ -2025,10 +1919,9 @@ def flac_roundtrip_features(docs: DataFrame, id_col: str = "doc_id") -> DataFram
     """FLAC (lossless audio) through the engine: deterministic PCM per
     doc — mono/stereo alternating, LPC subframes on every third doc,
     stereo docs cycling all three decorrelations per block — encoded to
-    a real FLAC stream (llm.flac) and decoded back inside one Arrow
-    mapInPandas pass. Lossless admits the strongest verdicts:
-    `bit_exact_ok` is decode(encode(pcm)) == pcm sample-for-sample,
-    `md5_ok` is the decoder's STREAMINFO-MD5 check of the
+    a real FLAC stream (llm.flac) and decoded back. Lossless admits the
+    strongest verdicts: `bit_exact_ok` is decode(encode(pcm)) == pcm
+    sample-for-sample, `md5_ok` is the decoder's STREAMINFO-MD5 check of the
     reconstructed interleaved PCM, `compressed_ok` asserts the stream
     beat raw PCM16 size (these smooth signals must compress — a rice
     parameter/predictor regression shows up as blowup)."""
@@ -2036,50 +1929,41 @@ def flac_roundtrip_features(docs: DataFrame, id_col: str = "doc_id") -> DataFram
 
     from . import flac as _flac
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        n = 400 + (doc_id % 5) * 80
+        s0 = (doc_id % 9) * 100 - 400
+        k = doc_id % 5 + 3
+        ch0 = [
+            s0
+            + (i * k) % 801
+            + int(1500 * math.sin(i / 8.0))
+            for i in range(n)
+        ]
+        nch = 1 + doc_id % 2
+        channels = [ch0]
+        if nch == 2:
+            channels.append(
+                [ch0[i] - 200 + (i * 3) % 7 for i in range(n)]
+            )
+        enc = _flac.encode_flac(
+            channels,
+            sample_rate=8000,
+            block_size=256,
+            use_lpc=doc_id % 3 == 0,
+        )
+        dec = _flac.decode_flac(enc)
+        yield {
+            "doc_id": doc_id,
+            "codec": "flac",
+            "channels": nch,
+            "n_samples": dec["n_samples"],
+            "first_sample": dec["samples"][0][0],
+            "bit_exact_ok": dec["samples"] == channels,
+            "md5_ok": dec["md5_ok"],
+            "compressed_ok": len(enc) < 2 * n * nch,
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 400 + (doc_id % 5) * 80
-                s0 = (doc_id % 9) * 100 - 400
-                k = doc_id % 5 + 3
-                ch0 = [
-                    s0
-                    + (i * k) % 801
-                    + int(1500 * math.sin(i / 8.0))
-                    for i in range(n)
-                ]
-                nch = 1 + doc_id % 2
-                channels = [ch0]
-                if nch == 2:
-                    channels.append(
-                        [ch0[i] - 200 + (i * 3) % 7 for i in range(n)]
-                    )
-                enc = _flac.encode_flac(
-                    channels,
-                    sample_rate=8000,
-                    block_size=256,
-                    use_lpc=doc_id % 3 == 0,
-                )
-                dec = _flac.decode_flac(enc)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "codec": "flac",
-                        "channels": nch,
-                        "n_samples": dec["n_samples"],
-                        "first_sample": dec["samples"][0][0],
-                        "bit_exact_ok": dec["samples"] == channels,
-                        "md5_ok": dec["md5_ok"],
-                        "compressed_ok": len(enc) < 2 * n * nch,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=FLAC_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, FLAC_FEATURE_SCHEMA, id_col)
 
 
 MP4_FEATURE_SCHEMA = T.StructType(
@@ -2115,8 +1999,6 @@ def mp4_sample_features(
     from . import jpeg as _jpeg
     from . import mp4 as _mp4
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
-
     def synth_frame(doc_id: int, j: int) -> "tuple[int, int, bytes]":
         w, h = 6 + j, 5 + j
         px = bytearray()
@@ -2127,48 +2009,41 @@ def mp4_sample_features(
             px.append(30 + 2 * x + 2 * y + (doc_id * 17 + j * 19) % 50)
         return w, h, bytes(px)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n_frames = 4 + doc_id % 4
-                encs = []
-                for j in range(n_frames):
-                    w, h, px = synth_frame(doc_id, j)
-                    encs.append(
-                        _jpeg.encode_jpeg_color(
-                            w, h, px, 90, _JPEG_SUBSAMPLINGS[j % 3]
-                        )
-                    )
-                durations = [1000 + 100 * j for j in range(n_frames)]
-                stream = _mp4.encode_mp4_samples(
-                    encs, durations, timescale=30000, width=6, height=5
+    def kernel(doc_id: int) -> Iterator[dict]:
+        n_frames = 4 + doc_id % 4
+        encs = []
+        for j in range(n_frames):
+            w, h, px = synth_frame(doc_id, j)
+            encs.append(
+                _jpeg.encode_jpeg_color(
+                    w, h, px, 90, _JPEG_SUBSAMPLINGS[j % 3]
                 )
-                demux = _mp4.mp4_demux(stream)
-                for s in demux["samples"]:
-                    j = s["sample_idx"]
-                    if j % every_n != 0:
-                        continue  # skipped: sliced by the walk, never decoded
-                    frame = _jpeg.decode_jpeg(s["data"])
-                    single = _jpeg.decode_jpeg(encs[j])
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": j,
-                            "dts": s["dts"],
-                            "codec": demux["codec"],
-                            "width": frame["width"],
-                            "height": frame["height"],
-                            "n_pixel_bytes": len(frame["pixels"]),
-                            "matches_single": frame["pixels"]
-                            == single["pixels"]
-                            and s["data"] == encs[j],
-                        }
-                    )
-            yield pd.DataFrame(rows)
+            )
+        durations = [1000 + 100 * j for j in range(n_frames)]
+        stream = _mp4.encode_mp4_samples(
+            encs, durations, timescale=30000, width=6, height=5
+        )
+        demux = _mp4.mp4_demux(stream)
+        for s in demux["samples"]:
+            j = s["sample_idx"]
+            if j % every_n != 0:
+                continue  # skipped: sliced by the walk, never decoded
+            frame = _jpeg.decode_jpeg(s["data"])
+            single = _jpeg.decode_jpeg(encs[j])
+            yield {
+                "doc_id": doc_id,
+                "frame_idx": j,
+                "dts": s["dts"],
+                "codec": demux["codec"],
+                "width": frame["width"],
+                "height": frame["height"],
+                "n_pixel_bytes": len(frame["pixels"]),
+                "matches_single": frame["pixels"]
+                == single["pixels"]
+                and s["data"] == encs[j],
+            }
 
-    return ids.mapInPandas(run, schema=MP4_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, MP4_FEATURE_SCHEMA, id_col)
 
 
 WEBM_FEATURE_SCHEMA = T.StructType(
@@ -2206,8 +2081,6 @@ def webm_sample_features(
     from . import jpeg as _jpeg
     from . import webm as _webm
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
-
     def synth_frame(doc_id: int, j: int) -> "tuple[int, int, bytes]":
         w, h = 6 + j, 5 + j
         px = bytearray()
@@ -2218,48 +2091,41 @@ def webm_sample_features(
             px.append(20 + x + 2 * y + (doc_id * 11 + j * 13) % 50)
         return w, h, bytes(px)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n_frames = 4 + doc_id % 4
-                encs = []
-                for j in range(n_frames):
-                    w, h, px = synth_frame(doc_id, j)
-                    encs.append(
-                        _jpeg.encode_jpeg_color(
-                            w, h, px, 90, _JPEG_SUBSAMPLINGS[j % 3]
-                        )
-                    )
-                pts = [40 * j + j * (j - 1) for j in range(n_frames)]
-                stream = _webm.encode_webm_frames(
-                    encs, pts, width=6, height=5, cluster_every=3, lace_from=1
+    def kernel(doc_id: int) -> Iterator[dict]:
+        n_frames = 4 + doc_id % 4
+        encs = []
+        for j in range(n_frames):
+            w, h, px = synth_frame(doc_id, j)
+            encs.append(
+                _jpeg.encode_jpeg_color(
+                    w, h, px, 90, _JPEG_SUBSAMPLINGS[j % 3]
                 )
-                demux = _webm.webm_demux(stream)
-                for s in demux["samples"]:
-                    j = s["sample_idx"]
-                    if j % every_n != 0:
-                        continue  # skipped: sliced by the walk, never decoded
-                    frame = _jpeg.decode_jpeg(s["data"])
-                    single = _jpeg.decode_jpeg(encs[j])
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": j,
-                            "pts_ms": s["pts"],
-                            "codec_id": demux["codec_id"],
-                            "width": frame["width"],
-                            "height": frame["height"],
-                            "n_pixel_bytes": len(frame["pixels"]),
-                            "matches_single": frame["pixels"]
-                            == single["pixels"]
-                            and s["data"] == encs[j],
-                        }
-                    )
-            yield pd.DataFrame(rows)
+            )
+        pts = [40 * j + j * (j - 1) for j in range(n_frames)]
+        stream = _webm.encode_webm_frames(
+            encs, pts, width=6, height=5, cluster_every=3, lace_from=1
+        )
+        demux = _webm.webm_demux(stream)
+        for s in demux["samples"]:
+            j = s["sample_idx"]
+            if j % every_n != 0:
+                continue  # skipped: sliced by the walk, never decoded
+            frame = _jpeg.decode_jpeg(s["data"])
+            single = _jpeg.decode_jpeg(encs[j])
+            yield {
+                "doc_id": doc_id,
+                "frame_idx": j,
+                "pts_ms": s["pts"],
+                "codec_id": demux["codec_id"],
+                "width": frame["width"],
+                "height": frame["height"],
+                "n_pixel_bytes": len(frame["pixels"]),
+                "matches_single": frame["pixels"]
+                == single["pixels"]
+                and s["data"] == encs[j],
+            }
 
-    return ids.mapInPandas(run, schema=WEBM_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, WEBM_FEATURE_SCHEMA, id_col)
 
 
 OGG_FEATURE_SCHEMA = T.StructType(
@@ -2302,61 +2168,52 @@ def ogg_packet_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     crawl shard needs to slice without paying a codec."""
     from . import ogg as _ogg
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        n = 5 + doc_id % 4
+        pkts = [
+            bytes(
+                (doc_id * 7 + j * 11 + 3 * i) % 256
+                for i in range(100 + 10 * j)
+            )
+            for j in range(n)
+        ]
+        grans = [960 * (j + 1) for j in range(n)]
+        stream_a = _ogg.encode_ogg_opus(
+            pkts,
+            grans,
+            channels=1 + doc_id % 2,
+            pre_skip=312 + doc_id % 7,
+            max_segments_per_page=2,
+        )
+        da = _ogg.ogg_demux(stream_a)
+        # stream B: 300/555-byte packets (2/3 lacing segments)
+        # under a 3-segment page cap => guaranteed spanning
+        pkts_b = [
+            bytes((doc_id * 3 + j * 5 + i) % 256 for i in range(300 + 255 * (j % 2)))
+            for j in range(n)
+        ]
+        db = _ogg.ogg_demux(
+            _ogg.encode_ogg_opus(
+                pkts_b, grans, max_segments_per_page=3
+            )
+        )
+        spanning_ok = [p["data"] for p in db["packets"][2:]] == pkts_b
+        for j, p in enumerate(da["packets"][2:]):
+            yield {
+                "doc_id": doc_id,
+                "packet_idx": j,
+                "size": p["size"],
+                "head_sig": sum(p["data"][:16]) % 997,
+                "granule": p["granule"],
+                "channels": da["channels"],
+                "pre_skip": da["pre_skip"],
+                "n_pages": da["n_pages"],
+                "matches_original": p["data"] == pkts[j],
+                "n_pages_spanning": db["n_pages"],
+                "spanning_ok": spanning_ok,
+            }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 5 + doc_id % 4
-                pkts = [
-                    bytes(
-                        (doc_id * 7 + j * 11 + 3 * i) % 256
-                        for i in range(100 + 10 * j)
-                    )
-                    for j in range(n)
-                ]
-                grans = [960 * (j + 1) for j in range(n)]
-                stream_a = _ogg.encode_ogg_opus(
-                    pkts,
-                    grans,
-                    channels=1 + doc_id % 2,
-                    pre_skip=312 + doc_id % 7,
-                    max_segments_per_page=2,
-                )
-                da = _ogg.ogg_demux(stream_a)
-                # stream B: 300/555-byte packets (2/3 lacing segments)
-                # under a 3-segment page cap => guaranteed spanning
-                pkts_b = [
-                    bytes((doc_id * 3 + j * 5 + i) % 256 for i in range(300 + 255 * (j % 2)))
-                    for j in range(n)
-                ]
-                db = _ogg.ogg_demux(
-                    _ogg.encode_ogg_opus(
-                        pkts_b, grans, max_segments_per_page=3
-                    )
-                )
-                spanning_ok = [p["data"] for p in db["packets"][2:]] == pkts_b
-                for j, p in enumerate(da["packets"][2:]):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "packet_idx": j,
-                            "size": p["size"],
-                            "head_sig": sum(p["data"][:16]) % 997,
-                            "granule": p["granule"],
-                            "channels": da["channels"],
-                            "pre_skip": da["pre_skip"],
-                            "n_pages": da["n_pages"],
-                            "matches_original": p["data"] == pkts[j],
-                            "n_pages_spanning": db["n_pages"],
-                            "spanning_ok": spanning_ok,
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=OGG_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, OGG_FEATURE_SCHEMA, id_col)
 
 
 OGG_FLAC_FEATURE_SCHEMA = T.StructType(
@@ -2381,55 +2238,46 @@ def ogg_flac_roundtrip_features(
     deterministic PCM as flac_roundtrip_features is encoded, its
     frames packetized into CRC'd Ogg pages (one frame per packet,
     frame-last-sample granules, STREAMINFO riding the BOS mapping
-    packet), then demuxed and decoded back inside one Arrow
-    mapInPandas pass. `bit_exact_ok` asserts PCM identity through BOTH
-    layers — any paging/lacing bug corrupts a frame and the FLAC CRCs
-    or MD5 catch it; `last_granule` must equal the sample count and
-    `n_frame_packets` the block arithmetic, both oracle-recomputed."""
+    packet), then demuxed and decoded back. `bit_exact_ok` asserts PCM
+    identity through BOTH layers — any paging/lacing bug corrupts a
+    frame and the FLAC CRCs or MD5 catch it; `last_granule` must equal
+    the sample count and `n_frame_packets` the block arithmetic, both
+    oracle-recomputed."""
     import math
 
     from . import ogg as _ogg
 
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    def kernel(doc_id: int) -> Iterator[dict]:
+        n = 400 + (doc_id % 5) * 80
+        s0 = (doc_id % 9) * 100 - 400
+        k = doc_id % 5 + 3
+        ch0 = [
+            s0 + (i * k) % 801 + int(1500 * math.sin(i / 8.0))
+            for i in range(n)
+        ]
+        nch = 1 + doc_id % 2
+        channels = [ch0]
+        if nch == 2:
+            channels.append(
+                [ch0[i] - 200 + (i * 3) % 7 for i in range(n)]
+            )
+        enc = _ogg.encode_ogg_flac(
+            channels,
+            sample_rate=8000,
+            block_size=256,
+            use_lpc=doc_id % 3 == 0,
+        )
+        dec = _ogg.decode_ogg_flac(enc)
+        yield {
+            "doc_id": doc_id,
+            "codec": "ogg-flac",
+            "channels": nch,
+            "n_samples": dec["n_samples"],
+            "first_sample": dec["samples"][0][0],
+            "n_frame_packets": dec["n_frame_packets"],
+            "last_granule": dec["last_granule"],
+            "bit_exact_ok": dec["samples"] == channels,
+            "md5_ok": dec["md5_ok"],
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 400 + (doc_id % 5) * 80
-                s0 = (doc_id % 9) * 100 - 400
-                k = doc_id % 5 + 3
-                ch0 = [
-                    s0 + (i * k) % 801 + int(1500 * math.sin(i / 8.0))
-                    for i in range(n)
-                ]
-                nch = 1 + doc_id % 2
-                channels = [ch0]
-                if nch == 2:
-                    channels.append(
-                        [ch0[i] - 200 + (i * 3) % 7 for i in range(n)]
-                    )
-                enc = _ogg.encode_ogg_flac(
-                    channels,
-                    sample_rate=8000,
-                    block_size=256,
-                    use_lpc=doc_id % 3 == 0,
-                )
-                dec = _ogg.decode_ogg_flac(enc)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "codec": "ogg-flac",
-                        "channels": nch,
-                        "n_samples": dec["n_samples"],
-                        "first_sample": dec["samples"][0][0],
-                        "n_frame_packets": dec["n_frame_packets"],
-                        "last_granule": dec["last_granule"],
-                        "bit_exact_ok": dec["samples"] == channels,
-                        "md5_ok": dec["md5_ok"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=OGG_FLAC_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, OGG_FLAC_FEATURE_SCHEMA, id_col)

@@ -27,7 +27,7 @@ package's declared error contract.
 
 Reference parity: the reference ships media blobs opaquely (Kafka
 producer scripts); demux is client-side. Here it runs engine-side
-under Arrow mapInPandas (llm.multimodal.ogg_packet_features).
+through llm.multimodal.map_doc_kernel (ogg_packet_features).
 """
 
 from __future__ import annotations

@@ -25,8 +25,8 @@ NotImplementedError per this package's declared error contract.
 
 Reference parity: the reference ships documents as opaque rows
 (Kafka producer scripts); crawl-shard ingestion is upstream of it.
-Here it runs engine-side under Arrow mapInPandas
-(warc_scan_features).
+Here it runs engine-side through the codec family's per-document
+kernel harness (warc_scan_features → multimodal.map_doc_kernel).
 """
 
 from __future__ import annotations
@@ -35,10 +35,10 @@ import gzip
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .multimodal import map_doc_kernel
 
 _CRLF = b"\r\n"
 
@@ -216,70 +216,61 @@ def warc_scan_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """WARC ingestion exercised for real: per doc, a deterministic
     2-response crawl shard in the Common-Crawl gzip layout (one gzip
     member per record: warcinfo + 2 HTTP responses) is written and
-    read back inside one Arrow mapInPandas pass — member walk, header
-    parse, Content-Length body slicing, record-terminator check, inner
-    HTTP parse. One row per RESPONSE record; `body_exact` asserts the
+    read back — member walk, header parse, Content-Length body slicing,
+    record-terminator check, inner HTTP parse. One row per RESPONSE record; `body_exact` asserts the
     sliced HTTP entity equals the synthesized body byte-for-byte (any
     framing bug shifts an offset and breaks it), `body_sig` and the
     rest are recomputed independently by the SQL oracle."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                recs = [
-                    {
-                        "type": "warcinfo",
-                        "record_id": f"<urn:uuid:{doc_id:032x}>",
-                        "date": "2024-01-01T00:00:00Z",
-                        "content_type": "application/warc-fields",
-                        "body": b"software: trino_demo_spark.llm.warc\r\n",
-                    }
-                ]
-                bodies = []
-                for j in range(2):
-                    body = _synth_body(doc_id, j)
-                    bodies.append(body)
-                    recs.append(
-                        {
-                            "type": "response",
-                            "record_id": f"<urn:uuid:{doc_id:028x}{j:04x}>",
-                            "date": "2024-01-01T00:00:00Z",
-                            "uri": f"https://site{doc_id % 7}.example/d{doc_id}/p{j}",
-                            "content_type": (
-                                "application/http; msgtype=response"
-                            ),
-                            "body": encode_http_response(
-                                200 + 4 * (j % 2),
-                                "OK" if j % 2 == 0 else "No Content",
-                                "application/octet-stream",
-                                body,
-                            ),
-                        }
-                    )
-                shard = encode_warc_gz(recs)
-                parsed = warc_records(shard)
-                resp_idx = 0
-                for rec in parsed["records"]:
-                    if rec["type"] != "response":
-                        continue
-                    http = parse_http_response(rec["body"])
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "record_idx": resp_idx,
-                            "gzip_members": parsed["gzip_members"],
-                            "uri": rec["uri"],
-                            "http_status": http["status"],
-                            "body_len": len(http["body"]),
-                            "body_sig": sum(http["body"][:16]) % 997,
-                            "body_exact": http["body"]
-                            == bodies[resp_idx],
-                        }
-                    )
-                    resp_idx += 1
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        recs = [
+            {
+                "type": "warcinfo",
+                "record_id": f"<urn:uuid:{doc_id:032x}>",
+                "date": "2024-01-01T00:00:00Z",
+                "content_type": "application/warc-fields",
+                "body": b"software: trino_demo_spark.llm.warc\r\n",
+            }
+        ]
+        bodies = []
+        for j in range(2):
+            body = _synth_body(doc_id, j)
+            bodies.append(body)
+            recs.append(
+                {
+                    "type": "response",
+                    "record_id": f"<urn:uuid:{doc_id:028x}{j:04x}>",
+                    "date": "2024-01-01T00:00:00Z",
+                    "uri": f"https://site{doc_id % 7}.example/d{doc_id}/p{j}",
+                    "content_type": (
+                        "application/http; msgtype=response"
+                    ),
+                    "body": encode_http_response(
+                        200 + 4 * (j % 2),
+                        "OK" if j % 2 == 0 else "No Content",
+                        "application/octet-stream",
+                        body,
+                    ),
+                }
+            )
+        shard = encode_warc_gz(recs)
+        parsed = warc_records(shard)
+        resp_idx = 0
+        for rec in parsed["records"]:
+            if rec["type"] != "response":
+                continue
+            http = parse_http_response(rec["body"])
+            yield {
+                "doc_id": doc_id,
+                "record_idx": resp_idx,
+                "gzip_members": parsed["gzip_members"],
+                "uri": rec["uri"],
+                "http_status": http["status"],
+                "body_len": len(http["body"]),
+                "body_sig": sum(http["body"][:16]) % 997,
+                "body_exact": http["body"]
+                == bodies[resp_idx],
+            }
+            resp_idx += 1
 
-    return ids.mapInPandas(run, schema=WARC_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, WARC_FEATURE_SCHEMA, id_col)

@@ -21,8 +21,9 @@ framing errors this reader must surface as data-quality signals; the
 512-byte header walk is ~40 lines and keeps the error contract ours.)
 
 Reference parity: the reference ships rows opaquely (Kafka producer
-scripts); shard ingestion is upstream of it. Runs engine-side under
-Arrow mapInPandas (webdataset_scan_features).
+scripts); shard ingestion is upstream of it. Runs engine-side through
+the codec family's per-document kernel harness
+(webdataset_scan_features → multimodal.map_doc_kernel).
 """
 
 from __future__ import annotations
@@ -30,9 +31,7 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _BLOCK = 512
@@ -165,16 +164,13 @@ def webdataset_scan_features(
 ) -> DataFrame:
     """WebDataset ingestion exercised for real: per doc, a 2-sample
     shard (key.ppm raster + key.json metadata + key.txt caption per
-    sample) is written as genuine ustar and read back inside one Arrow
-    mapInPandas pass — header walk with checksum verification, sample
-    regrouping by key, PPM decode of the image member, JSON parse of
-    the metadata member. `image_exact` asserts the decoded raster is
+    sample) is written as genuine ustar and read back — header walk
+    with checksum verification, sample regrouping by key, PPM decode of
+    the image member, JSON parse of the metadata member. `image_exact` asserts the decoded raster is
     byte-identical to the one packed (any 512-block arithmetic bug
     shifts an offset and breaks it); dims/pixel-sum/caption-length/
     label are recomputed independently by the SQL oracle."""
     from . import multimodal
-
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
 
     def synth_raster(doc_id: int, j: int) -> "tuple[int, int, bytes]":
         w, h = 4 + j, 3 + j
@@ -183,46 +179,39 @@ def webdataset_scan_features(
         )
         return w, h, px
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                members = []
-                rasters = []
-                for j in range(2):
-                    w, h, px = synth_raster(doc_id, j)
-                    rasters.append(px)
-                    key = f"{doc_id:09d}_{j}"
-                    members += [
-                        (key + ".ppm", multimodal.encode_ppm(w, h, px)),
-                        (
-                            key + ".json",
-                            json.dumps(
-                                {"label": (doc_id * 3 + j) % 10},
-                                sort_keys=True,
-                            ).encode(),
-                        ),
-                        (key + ".txt", b"c" * (20 + 7 * j + doc_id % 5)),
-                    ]
-                shard = encode_tar(members)
-                for j, s in enumerate(webdataset_samples(shard)):
-                    frame = multimodal.decode_image(s["ppm"])
-                    meta = json.loads(s["json"])
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "sample_idx": j,
-                            "key": s["__key__"],
-                            "n_members": len(s) - 1,
-                            "width": frame["width"],
-                            "height": frame["height"],
-                            "pix_sum": sum(frame["pixels"]),
-                            "caption_len": len(s["txt"]),
-                            "meta_label": meta["label"],
-                            "image_exact": frame["pixels"] == rasters[j],
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        members = []
+        rasters = []
+        for j in range(2):
+            w, h, px = synth_raster(doc_id, j)
+            rasters.append(px)
+            key = f"{doc_id:09d}_{j}"
+            members += [
+                (key + ".ppm", multimodal.encode_ppm(w, h, px)),
+                (
+                    key + ".json",
+                    json.dumps(
+                        {"label": (doc_id * 3 + j) % 10},
+                        sort_keys=True,
+                    ).encode(),
+                ),
+                (key + ".txt", b"c" * (20 + 7 * j + doc_id % 5)),
+            ]
+        shard = encode_tar(members)
+        for j, s in enumerate(webdataset_samples(shard)):
+            frame = multimodal.decode_image(s["ppm"])
+            meta = json.loads(s["json"])
+            yield {
+                "doc_id": doc_id,
+                "sample_idx": j,
+                "key": s["__key__"],
+                "n_members": len(s) - 1,
+                "width": frame["width"],
+                "height": frame["height"],
+                "pix_sum": sum(frame["pixels"]),
+                "caption_len": len(s["txt"]),
+                "meta_label": meta["label"],
+                "image_exact": frame["pixels"] == rasters[j],
+            }
 
-    return ids.mapInPandas(run, schema=WDS_FEATURE_SCHEMA)
+    return multimodal.map_doc_kernel(docs, kernel, WDS_FEATURE_SCHEMA, id_col)

@@ -29,7 +29,7 @@ raise NotImplementedError per this package's declared error contract.
 
 Reference parity: the reference ships media blobs opaquely (Kafka
 producer scripts); demux is client-side. Here it runs engine-side
-under Arrow mapInPandas (llm.multimodal.webm_sample_features).
+through llm.multimodal.map_doc_kernel (webm_sample_features).
 """
 
 from __future__ import annotations

@@ -23,7 +23,8 @@ declared error contract. (stdlib `zipfile` exists; the hand walk keeps
 framing errors OURS to surface as data-quality signals, mirrors
 llm.webdataset's rationale, and is ~80 lines.)
 
-Runs engine-side under Arrow mapInPandas (zip_scan_features).
+Runs engine-side through the codec family's per-document kernel
+harness (zip_scan_features → multimodal.map_doc_kernel).
 """
 
 from __future__ import annotations
@@ -32,10 +33,10 @@ import struct
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .multimodal import map_doc_kernel
 
 _LOCAL = b"PK\x03\x04"
 _CENTRAL = b"PK\x01\x02"
@@ -280,49 +281,41 @@ def zip_scan_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """ZIP ingestion exercised for real: per doc, a 3-member shard
     (one STORED member + two DEFLATE members, one of them highly
     compressible) is written and read back through the central-
-    directory walk inside one Arrow mapInPandas pass. `body_exact`
-    asserts byte-identical recovery through inflate+CRC (any
-    offset/length bug in the directory arithmetic breaks it);
+    directory walk. `body_exact` asserts byte-identical recovery
+    through inflate+CRC (any offset/length bug in the directory
+    arithmetic breaks it);
     name/method/size/checksum are recomputed independently by the
     oracle, and `compressed_smaller` pins that deflate actually
     engaged on the compressible member."""
-    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                bodies = [
-                    bytes((doc_id * 3 + i) % 256 for i in range(80)),
-                    bytes(
-                        (doc_id * 7 + (i * i) % 97) % 256
-                        for i in range(200)
-                    ),
-                    bytes([doc_id % 256]) * 300,  # compressible
-                ]
-                members = [
-                    (f"m{doc_id}_0.bin", bodies[0], False),
-                    (f"m{doc_id}_1.bin", bodies[1], True),
-                    (f"m{doc_id}_2.bin", bodies[2], True),
-                ]
-                shard = encode_zip(members)
-                parsed = zip_members(shard)
-                comp_len = len(shard)
-                for i, m in enumerate(parsed):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "member_idx": i,
-                            "name": m["name"],
-                            "method": m["method"],
-                            "size": m["size"],
-                            "body_sig": sum(m["data"][:16]) % 997,
-                            "body_exact": m["data"] == bodies[i],
-                            "compressed_smaller": comp_len
-                            < sum(len(b) for b in bodies) + 3 * 80,
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id: int) -> Iterator[dict]:
+        bodies = [
+            bytes((doc_id * 3 + i) % 256 for i in range(80)),
+            bytes(
+                (doc_id * 7 + (i * i) % 97) % 256
+                for i in range(200)
+            ),
+            bytes([doc_id % 256]) * 300,  # compressible
+        ]
+        members = [
+            (f"m{doc_id}_0.bin", bodies[0], False),
+            (f"m{doc_id}_1.bin", bodies[1], True),
+            (f"m{doc_id}_2.bin", bodies[2], True),
+        ]
+        shard = encode_zip(members)
+        parsed = zip_members(shard)
+        comp_len = len(shard)
+        for i, m in enumerate(parsed):
+            yield {
+                "doc_id": doc_id,
+                "member_idx": i,
+                "name": m["name"],
+                "method": m["method"],
+                "size": m["size"],
+                "body_sig": sum(m["data"][:16]) % 997,
+                "body_exact": m["data"] == bodies[i],
+                "compressed_smaller": comp_len
+                < sum(len(b) for b in bodies) + 3 * 80,
+            }
 
-    return ids.mapInPandas(run, schema=ZIP_FEATURE_SCHEMA)
+    return map_doc_kernel(docs, kernel, ZIP_FEATURE_SCHEMA, id_col)

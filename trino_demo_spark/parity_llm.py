@@ -817,7 +817,7 @@ def llm_multimodal_features(spark, sf_dir):
     """,
     doc="REAL audio decode through the engine: a deterministic PCM16 "
     "signal per doc is encoded to RIFF/WAVE bytes and decoded back with "
-    "the pure-stdlib WAV kernel inside one Arrow mapInPandas pass; "
+    "the pure-stdlib WAV kernel inside one map_doc_kernel pass; "
     "features (rate, count, sum, rms) come from the DECODED samples "
     "while the oracle recomputes them from the source formula — any "
     "header/endianness/chunk-walk bug breaks the cross-engine match. "
@@ -847,7 +847,7 @@ def llm_multimodal_wav(spark, sf_dir):
     """,
     doc="REAL image decode through the engine: a deterministic RGB raster "
     "per doc is encoded to binary PPM (P6) and decoded back with the "
-    "pure-stdlib netpbm kernel inside one Arrow mapInPandas pass; "
+    "pure-stdlib netpbm kernel inside one map_doc_kernel pass; "
     "features come from the DECODED raster, the oracle recomputes them "
     "from the source formula. Converts the image stub into a tested "
     "kernel (multimodal.py decode_image); PNG/JPEG remain declared "
@@ -881,7 +881,7 @@ def llm_multimodal_ppm(spark, sf_dir):
     "with image height so all five PNG filters (None/Sub/Up/Average/"
     "Paeth) are exercised across the corpus — then decoded back with "
     "the pure-stdlib kernel (chunk-CRC walk, inflate, full filter "
-    "reversal) inside one Arrow mapInPandas pass. Features come from "
+    "reversal) inside one map_doc_kernel pass. Features come from "
     "the DECODED raster (a bit-exact roundtrip assert guards the rest), "
     "the oracle recomputes them from the source formula. Converts the "
     "PNG stub into a tested kernel (multimodal.py decode_png); "
@@ -1014,7 +1014,7 @@ def llm_multimodal_flac(spark, sf_dir):
     # parquet scan task, serializing the pure-Python FLAC encode+decode
     # on a single core while the rest idle (guide §2.6). Round-robin
     # spread (<= 50 one-long rows after pruning — constant at any
-    # corpus scale) parallelizes the mapInPandas work; results
+    # corpus scale) parallelizes the kernel work; results
     # unchanged. Interleaved A/B at sf0.1: plain 1.26/0.92s vs spread
     # 0.85/0.90s. The same spread was tried and REJECTED for the
     # mp4/webm demux twins — their box-walk kernels are cheap enough
@@ -2333,7 +2333,7 @@ def udtf_lateral_words(spark, sf_dir):
     "frame sequence per doc is encoded to a concatenated-PPM stream "
     "(ffmpeg's image2pipe/ppm raw-video bytes) and walked back with "
     "the pure-stdlib frame_sample kernel keeping every 2nd frame, "
-    "inside one Arrow mapInPandas pass with row fanout (one row per "
+    "inside one map_doc_kernel pass with row fanout (one row per "
     "sampled frame). Features come from the DECODED rasters while the "
     "oracle recomputes them from the source formula — any header-walk "
     "or frame-boundary bug breaks the cross-engine match. Converts the "
@@ -4227,8 +4227,8 @@ def llm_dataset_card(spark, sf_dir):
     doc="Image RESIZE through the engine (the pre-batching geometric "
     "transform): binary PPM decoded, nearest-neighbor resampled to "
     "4x4 with vectorized numpy index arithmetic (sx = x*w // 4 floor "
-    "mapping — a real kernel, not a stub) inside one Arrow "
-    "mapInPandas pass; features come from the RESIZED raster and the "
+    "mapping — a real kernel, not a stub) inside one "
+    "map_doc_kernel pass; features come from the RESIZED raster and the "
     "oracle recomputes every resampled pixel from the source formula "
     "and the same floor mapping, so an off-by-one in the index "
     "arithmetic breaks the match "
@@ -4258,7 +4258,7 @@ def llm_multimodal_resize(spark, sf_dir):
     doc="Audio RESAMPLE through the engine (rate normalization before "
     "batching): WAV decode + integer-factor decimation (keep every "
     "2nd sample — numpy-vectorized, the real downsampling kernel) in "
-    "one Arrow mapInPandas pass; features come from the RESAMPLED "
+    "one map_doc_kernel pass; features come from the RESAMPLED "
     "signal and the oracle recomputes them from the source formula "
     "restricted to even sample indexes, so an off-by-one in the "
     "decimation stride breaks the match "

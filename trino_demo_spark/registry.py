@@ -206,11 +206,11 @@ def _normalize_events(df: DataFrame) -> DataFrame:
 # (local[32], warm) — and every query calls load_table once per table
 # per execution. This memoizes the INFERRED SCHEMA ONLY (metadata — the
 # role a metastore/catalog plays in production; reads still scan the
-# parquet in full), keyed by path so different sf_dirs never mix. The
-# first call per path still infers, so a regenerated file with a new
-# layout is picked up by any fresh process (the driver/bench contract —
-# one process per run — makes staleness impossible in practice).
-_PHYSICAL_SCHEMA_MEMO: dict[str, T.StructType] = {}
+# parquet in full), keyed by path so different sf_dirs never mix, and
+# stamped with the file's (mtime_ns, size): a table rewritten at the same
+# path — even with a new layout, inside one long-lived process — is
+# re-inferred, and its entry replaced rather than added to.
+_PHYSICAL_SCHEMA_MEMO: dict[str, tuple[tuple[int, int], T.StructType]] = {}
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
@@ -219,12 +219,14 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     sf_dir = sf_dir or DEFAULT_SF_DIR
     name = resolve_name(name)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    phys = _PHYSICAL_SCHEMA_MEMO.get(path)
-    if phys is None:
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    memo = _PHYSICAL_SCHEMA_MEMO.get(path)
+    if memo is None or memo[0] != stamp:
         df = spark.read.parquet(path)
-        _PHYSICAL_SCHEMA_MEMO[path] = df.schema
+        _PHYSICAL_SCHEMA_MEMO[path] = (stamp, df.schema)
     else:
-        df = spark.read.schema(phys).parquet(path)
+        df = spark.read.schema(memo[1]).parquet(path)
     if name == "events":
         df = _normalize_events(df)
     # Conform column order/casing to the declared schema (schema-on-read).

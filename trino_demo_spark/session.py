@@ -9,9 +9,12 @@ coercion semantics (SURVEY.md §7 "hard parts").
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # Runtime-settable confs every entry point re-asserts (the driver may hand
 # us a session we didn't build). nanosAsLong is required because the
@@ -111,11 +114,13 @@ def _pkg_zip_path() -> str:
 def _ship_package(spark: SparkSession) -> None:
     """Make ``trino_demo_spark`` importable on Python WORKERS regardless
     of the driver process's CWD (the driver contract imports this repo
-    by file path and may run from any directory; module-level pandas
-    UDFs — llm.multimodal — and the Python DataSource — sources.pyjsonl
-    — unpickle BY MODULE REFERENCE on the worker, so the worker must be
-    able to import the package itself). addPyFile distributes a zip of
-    the package and prepends it to every worker's sys.path."""
+    by file path and may run from any directory; the codec kernels run
+    through llm.multimodal.map_doc_kernel and the Python DataSource —
+    sources.pyjsonl — unpickle BY MODULE REFERENCE on the worker, so the
+    worker must be able to import the package itself). addPyFile
+    distributes a zip of the package and prepends it to every worker's
+    sys.path. A failed ship is logged as a warning with its cause, since
+    it otherwise surfaces later as an opaque worker ImportError."""
     try:
         sc = spark.sparkContext
         key = sc.applicationId
@@ -125,8 +130,12 @@ def _ship_package(spark: SparkSession) -> None:
         return
     try:
         sc.addPyFile(_pkg_zip_path())
-    except Exception:
-        pass  # already added under another name, or cluster refuses — fine
+    except Exception as exc:
+        _log.warning(
+            "could not ship trino_demo_spark to Python workers (%r); "
+            "worker-side imports of the package may fail",
+            exc,
+        )
     _PYFILES_ADDED.add(key)
 
 
