@@ -24,7 +24,6 @@ _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
-from trino_demo_spark import parity as _parity
 from trino_demo_spark import parity_llm as _parity_llm  # noqa: F401  (registers entries)
 from trino_demo_spark import parity_ml as _parity_ml  # noqa: F401  (registers entries)
 from trino_demo_spark.parity import PARITY
@@ -39,30 +38,26 @@ def entry(spark: SparkSession) -> DataFrame:
     return PARITY["join_inner_eq"].fn(spark, "/root/testdata/sf0.001")
 
 
-def _driver_history() -> tuple[dict[str, str], dict[str, int]]:
-    """Driver verdicts per query from committed CORRECTNESS_r*.json.
+def _driver_history() -> dict[str, tuple[str, int]]:
+    """Latest driver verdict per query from committed CORRECTNESS_r*.json.
 
-    Returns ``(status, green_round)``:
-      ``status[name]`` is the LATEST verdict, one of:
-        ``green``     fully proven: rows + schema + value-hash all matched
-                      (a round-2 bug treated rows_match alone as proven,
-                      which parked two hash-failing queries forever)
-        ``fail``      driver tested it and something mismatched or errored
-        ``rows_only`` no-oracle entry; driver saw rows without error
-      ``green_round[name]`` is the HIGHEST round number whose row was
-        fully green — used to auto-retire ``_RECHECK`` entries once a
-        green row post-dates the engine change they guard.
-    Names never driver-tested are absent. Later rounds override earlier.
-    """
+    Returns ``{name: (verdict, round)}`` where ``round`` is the round of
+    the latest row for ``name`` and ``verdict`` is ``green`` only when
+    that row has no error and rows, schema AND value-hash all matched
+    (a rows-only match is not proof), else ``fail``. Names the driver
+    never tested are absent. This is the one reader of the history:
+    ``queries()`` and ``scripts/regen_coverage.py`` both use it."""
     import glob
     import json
     import re
 
-    status: dict[str, str] = {}
-    green_round: dict[str, int] = {}
-    for p in sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))):
+    rounds = []
+    for p in glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        rnd = int(m.group(1)) if m else 0
+        if m:
+            rounds.append((int(m.group(1)), p))
+    history: dict[str, tuple[str, int]] = {}
+    for rnd, p in sorted(rounds):
         try:
             with open(p) as fh:
                 data = json.load(fh)
@@ -71,392 +66,21 @@ def _driver_history() -> tuple[dict[str, str], dict[str, int]]:
         for name, row in data.items():
             if not isinstance(row, dict):
                 continue
-            err = row.get("err")
-            if err == "no_oracle" and row.get("spark_rows") is not None:
-                status[name] = "rows_only"
-            elif (
-                err is None
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                status[name] = "green"
-                green_round[name] = max(green_round.get(name, 0), rnd)
-            else:
-                status[name] = "fail"
-    return status, green_round
-
-
-def _driver_status() -> dict[str, str]:
-    """Latest driver verdict per query (see _driver_history)."""
-    return _driver_history()[0]
-
-
-# Entries whose ENGINE implementation changed after their last green
-# CORRECTNESS row (round-4 continuation: star-CC rewrite, identical-
-# signature/vector/shingle-set collapses, BPE distinct-word apply,
-# iterutil stats reset). A proven row for the OLD code proves nothing
-# about the new one, so these re-enter the driver queue ahead of the
-# never-tested backlog — the inverse of the r3 bug where changed code
-# hid behind stale green rows. Value = the first round whose green row
-# PROVES the changed code; an entry auto-retires (sorts with proven,
-# freeing its driver-cap slot) once green_round >= that value, so a
-# forgotten manual cleanup can't burn cap slots forever.
-_RECHECK = {
-    "llm_dedup_clusters": 10,  # r10: oracle gained the identical-text collapse
-    # (ngram/minhash/simhash stale 4-entries removed r11 — the r11
-    # block below carries their current values)
-    # r11: capped oracle got the same collapse (text, then distinct-
-    # shingle-set regroup over the ~distinct texts) — its per-doc
-    # list-keyed GROUP BY spilled >50GB DuckDB temp at sf10.
-    "llm_dedup_ngram_capped": 11,
-    # r11 OPTIMIZATION round: both tokenizer entries were restructured
-    # (BPE segmentation as padded-string replace chain, single
-    # exploded-corpus aggregate in _apply, shared word_freqs in _bpe) —
-    # result-identical by the fold↔replace differential test + sf0.01/
-    # sf1 preflight, but the driver artifact must agree (supersedes
-    # their round-4 Arrow-argmin recheck values).
-    "llm_tokenizer_apply": 11,
-    "llm_tokenizer_bpe": 11,
-    # r11 OPTIMIZATION round: the 50-doc FLAC corpus is now round-robin
-    # spread before the codec mapInPandas (one scan task serialized the
-    # pure-Python encode on one core) — plan change to a green-row
-    # entry; re-proven at sf0.01 in-session.
-    "llm_multimodal_flac": 11,
-    # r11: the pagerank oracle's CTEs are now MATERIALIZED (DuckDB was
-    # re-evaluating the 60M-row DISTINCT per unrolled iteration — the
-    # r10 sf10 oracle-disk exclusion). Semantics-free by DuckDB
-    # contract, but it IS an oracle change to a green-row query. Late
-    # r11: the ENGINE also changed (pre-partitioned edge frame for
-    # exchange-free iterations) — re-proven green at sf0.01/sf1/sf10
-    # in-session, but the driver artifact must agree.
-    "ml_pagerank": 11,
-    # late r11: ALS ratings materialized as two co-partitioned copies
-    # (the MLlib in/out-block discipline) — engine change to a
-    # green-row entry; re-proven at sf0.01/sf1/sf10 in-session.
-    "ml_als_recommend_dist": 11,
-    # r11: the exact-Jaccard truth oracles behind these four entries
-    # were rewritten with the identical-text collapse (the per-doc
-    # posting join spilled 42GB of DuckDB temp at sf10's 100x
-    # multiplicity — caught live by the r11 sweep). Row-identical by
-    # the same argument the capped/clusters collapse oracles proved,
-    # but the driver artifact must agree.
-    "llm_dedup_ngram": 11,
-    "llm_dedup_minhash": 11,
-    "llm_dedup_minhash_pr": 11,
-    "llm_dedup_simhash": 11,
-    # Arrow argmin assignment replaced the expression fold (round-4 cont.)
-    "llm_similarity_ivf": 4,
-    "llm_similarity_pq": 4,
-    "llm_similarity_ivfpq": 4,
-    "ml_kmeans_profile": 4,
-    # NULL-text drop-at-ingest hardening (commit 0a6dbc0) touched these
-    # green-row engines/oracles
-    "llm_multimodal_features": 4,
-    "llm_eval_overlap": 4,
-    # hostile-embeddings hardening: finite/dim ingest guards + the
-    # normalize oracle's own-length norm + quantize TRY_CAST oracle
-    # (llm_embed_neardup's stale 4-entry removed r11 — the r10 block
-    # below carries its current value)
-    "llm_similarity_topk": 4,
-    "llm_embed_normalize": 4,
-    "llm_embed_quantize": 4,
-    # hostile-events hardening (tests/test_hostile_events.py): NULL-ts
-    # ingest policy, NaN-as-missing oracle mirrors, VARCHAR surfaces
-    # for nullable date/int keys — all touched these green-row engines
-    # or their oracles
-    "scan_kafka_json": 4,
-    "filter_notnull": 4,
-    "null_fill": 4,
-    "parse_date": 4,
-    "f_date_strptime": 4,
-    "stream_dedup_late": 4,
-    "stream_window_agg": 4,
-    "agg_pivot": 4,
-    # hostile-orders hardening (tests/test_hostile_orders.py): date
-    # VARCHAR surfaces, exact-unit band contracts, NULL-key/measure
-    # policies — all touched these green-row engines or their oracles
-    "scan_csv_typed_header": 4,
-    "sink_csv": 4,
-    "project_cols": 4,
-    "bday_period": 4,
-    "join_left_outer": 4,
-    "join_asof": 4,
-    "f_date_arith": 4,
-    "win_split_chrono": 4,
-    "sort_global_asc": 4,
-    "cast_f32": 4,
-    "agg_quantiles": 4,
-    "agg_corr": 4,
-    "agg_error_metrics": 4,
-    "f_agg_stats": 4,
-    "f_argminmax": 4,
-    # hostile-dims hardening (tests/test_hostile_dims.py): lossless CSV
-    # text-boundary options + NULL-propagating name concat
-    "scan_csv_header": 4,
-    "f_str_funcs": 4,
-    # review-pass fixes: NULL-poisoning fold mirrors in the array/
-    # normalize oracles (already in _RECHECK: the geometric family)
-    "f_array_funcs": 4,
-    # sf0.1 sweep: negative-zero normalization (+ 0.0) on the DSIR
-    # log-importance surface
-    "llm_select_dsir": 4,
-    # round-5 broadcast-side audit (VERDICT r4 §next-round-6): q18 now
-    # broadcasts the HAVING-bounded side (never customer); q10 aggregates
-    # by custkey first and broadcasts only the 20-row top-k into customer.
-    # round-6 ADVICE fix: q10's pre-top-k guard now also requires
-    # c_nationkey IN nation (dataflow change — the semi join gained a
-    # nation probe), so the r5 green row proves the old guard only.
-    # (q18/q10 values live in the r9 usum block below — the r5/r6
-    # entries were stale duplicates, removed r11.)
-    # Round-6 no-recheck rationale (deliberate, documented): (a) tpch_q18
-    # only gated its broadcast(big) HINT behind SPARK_GRAFT_LOCAL_HINTS —
-    # join-strategy hints are semantics-free by Spark contract, the
-    # dataflow is byte-identical either way; (b) sources/pyjsonl.py only
-    # widened the PERMISSIVE except clause to RecursionError — an
-    # exception-path-only change that cannot alter output on input that
-    # doesn't raise (scan_jsonl_pysource round-trips to_json output, every
-    # line parses); both are pytest-gated instead of burning driver slots.
-    # Round-7 no-recheck rationale (deliberate, documented): (a) tpch_q18's
-    # SPARK_GRAFT_LOCAL_HINTS branch was DELETED — with the flag unset
-    # (every driver run ever) the constructed plan is byte-identical to
-    # before, so the r6 green row still proves the shipped dataflow;
-    # (b) session.py gained an os.register_at_fork child-cache reset —
-    # process-lifecycle only, no query dataflow touched; (c) the r7
-    # additions (llm_multimodal_png, stream_join_attrib_outer,
-    # llm_dedup_minhash_pr) are NEW entries already leading the pending
-    # queue, and the engine functions they compose (minhash_lsh_pairs,
-    # ngram_jaccard_pairs, stream_stream_join) are unchanged.
-    # Round-8: decode_jpeg_gray was rewritten as a thin wrapper over the
-    # new general 1-/3-component decoder (color JPEG support), so the r7
-    # green row proves the OLD grayscale-only decoder. Round-8 no-recheck
-    # rationale: png_roundtrip_features/jpeg_roundtrip_features only
-    # swapped bare asserts for explicit raises (exception-path-only, no
-    # dataflow change on non-erroring input), and llm_multimodal_png's
-    # decode path is untouched.
-    "llm_multimodal_jpeg": 8,
-    # Round-8: tpch_q21 gained a repartition(l_orderkey) so the groupBy
-    # and the window share ONE fact shuffle (2x at sf1) — a dataflow
-    # change to a green-row query.
-    "tpch_q21": 8,
-    # Round-8: decode_png's chunk walk gained PLTE/tRNS handling and the
-    # color-type-3 branch for palette support; gray/RGB/RGBA dataflow is
-    # output-identical, but the shared walk changed — re-prove.
-    "llm_multimodal_png": 8,
-    # Round-8: decode_audio gained the G.711 format branch and a codec
-    # tag in its return dict — the WAV entry's features are unchanged
-    # (verified locally) but the shared kernel changed — re-prove.
-    "llm_multimodal_wav": 8,
-    # Round-8: frame_sample gained the MJPEG dispatch ahead of the PPM
-    # walk — re-proven green r8; superseded by the r9 entry below (the
-    # same shared entry point changed again).
-    # Round-8 no-recheck rationale (deliberate, documented): (a) the AC
-    # huffman alphabet gained 14 EOBn symbols — this re-codes every
-    # emitted JPEG byte stream, but the only green-row consumer
-    # (llm_multimodal_jpeg) is already re-queued above and the other
-    # JPEG entries are NEW r8 entries leading the pending queue; (b)
-    # bench.py's vs-pin hatch and the plan gates are harness/test-only;
-    # (c) png_roundtrip_features / jpeg_roundtrip_features swapped bare
-    # asserts for explicit raises (exception-path-only); (d)
-    # scan_jdbc_live's hostile-money policy landed BEFORE its first
-    # driver row (new entry), so there is no stale green to invalidate.
-    # Round-9: frame_sample gained the ISO-BMFF(MP4) dispatch between
-    # the MJPEG branch and the PPM walk — MJPEG/PPM dataflow is
-    # unchanged (verified locally: the new branch keys on bytes 4:8 ==
-    # 'ftyp', unreachable for JPEG/PPM payloads), but the shared entry
-    # point changed — re-prove both green-row consumers, per the r8
-    # frame_sample precedent.
-    "llm_multimodal_frames": 9,
-    "llm_multimodal_mjpeg": 9,
-    # r9 usum/USUM surfacing fix (double(S)/10^scale replaces the
-    # DECIMAL(38,s)→DOUBLE route, which double-rounded in DuckDB past
-    # 2^53 units — caught by the r9 sf1 sweep on tpch_q1): every entry
-    # whose engine AND oracle route money sums through the shared
-    # helpers changed and must re-prove green.
-    "join_fact_fact_merge": 9,
-    "join_skew_salted": 9,
-    "join_bucketed_flagship": 9,
-    "agg_groupby_key": 9,
-    "tpch_q1": 9,
-    "tpch_q3": 9,
-    "tpch_q5": 9,
-    "tpch_q6": 9,
-    "tpch_q7": 9,
-    "tpch_q8": 9,
-    "tpch_q9": 9,
-    "tpch_q9_full": 9,
-    "tpch_q10": 9,
-    "tpch_q11": 9,
-    "tpch_q11_full": 9,
-    "tpch_q14": 9,
-    "tpch_q15": 9,
-    "tpch_q17": 9,
-    "tpch_q18": 9,
-    "tpch_q19": 9,
-    "tpch_q22": 9,
-    "agg_rollup": 9,
-    "udaf_weighted_mean": 9,
-    # r9 signed-zero fix (sf1 sweep): weighted-sample keys rounding to
-    # zero rendered '-0.0' (DuckDB) vs '0.0' (Spark); both sides now
-    # normalize with + 0.0.
-    "llm_sample_weighted": 9,
-    # r9 sf10 sweep: Spark's 1M cteRecursionRowLimit safety valve trips
-    # at 100k suppliers; the entry now sizes it from the data (65·N).
-    # r10 (ADVICE r9): the valve is now clamped to [default, int32 max],
-    # restored after an eager localCheckpoint materialization (the
-    # session is shared), so the r9 green row proves the old dataflow.
-    "sql_recursive_cte": 10,
-    # r10 (VERDICT r9 §next-round-1): the five all-pairs-oracle entries
-    # were rewritten — oracles now collapse identical vectors (exact,
-    # exhaustive, distinct²-bounded → sf1/sf10-tractable), the planted
-    # id offset became data-derived (the fixed +10000 collided with
-    # real vec_ids past 10k rows), and cosine_near_dup_pairs gained the
-    # same engine-side collapse the LSH path already had. All five are
-    # re-proven locally (sf0.01 preflight + sf1 sweep) but the driver
-    # artifact must agree.
-    "llm_embed_neardup": 10,
-    "llm_embed_neardup_arrow": 10,
-    "llm_embed_neardup_lsh": 10,
-    "llm_dedup_semantic": 10,
-    "llm_dedup_semantic_lsh": 10,
-    # r10: retiring the LAST sf1 exclusion (oracle made tractable with
-    # MATERIALIZED CTEs) immediately caught a real engine bug — Spark
-    # 4.1's iterator grouped-map streams one group as multiple Arrow
-    # batches and the greedy fill reset its bin state per batch, wrong
-    # for any group > 10k rows. Fold now spans the whole group
-    # (llm/packing.py); green at sf0.01 AND sf1, but the driver
-    # artifact must agree.
-    "llm_pack_sequences": 10,
-}
-
-# Round-11 OPTIMIZATION-round no-recheck rationale (deliberate,
-# documented): iterutil.materialize no longer runs a separate count()
-# before the eager checkpoint — action-scheduling only (the checkpoint
-# pass populates the persisted cache and the stats snapshot reads it
-# after), the constructed per-round dataflow of every caller (CC loop,
-# pagerank, ALS, pack/corpus materializations) is unchanged and the
-# stats-reset property is pytest-gated
-# (tests/test_iterutil.py::test_materialize_stats_reset_iterated_self_join);
-# all materialize-consuming entries re-proven green at sf0.01 (8/8) and
-# the touched family at sf1 (6/6) in-session. Entries whose PLAN did
-# change this round (tokenizer pair, flac spread, ALS round-boundary
-# fusion) are queued in _RECHECK above instead.
-
-# Round-11 no-recheck rationale (deliberate, documented — all four
-# ADVICE r10 fixes are unreachable-branch-only on driver corpora):
-# (a) cosine_near_dup_pairs/_arrow now REJECT threshold <= 0 — every
-# registry entry calls them at 0.4/0.95, so the constructed plan is
-# byte-identical (pytest-gated:
-# tests/test_llm.py::test_cosine_near_dup_rejects_nonpositive_threshold);
-# (b) zipshard._zip64_extra gained a full-block positional fallback —
-# on any archive that previously PARSED (spec-strict layout, incl.
-# every encode_zip output the green rows exercise) the read bytes are
-# identical; only previously-REJECTED Java/Info-ZIP-style archives now
-# parse (pytest-gated: ::test_zipshard_zip64_full_block_layout);
-# (c) ml_als_recommend/_dist treat base <= 1e-9 as degenerate — the
-# driver corpora have stddev_pop(rating) ≈ 13.6 at sf0.001/0.01/0.1
-# (verified r11), so the branch is unreachable there (pytest-gated:
-# ::test_als_zero_variance_baseline_degenerate);
-# (d) the _RECHECK stale-duplicate-key cleanup is harness-only.
-# (e) the r11 anti-hang pass (VERDICT r10 item 4) hardened
-# webdataset.tar_members (negative/non-octal size fields — a crafted
-# -0o1000 size was a REAL infinite loop) and multimodal._parse_netpbm
-# (unterminated comment, negative/garbage header tokens): all are
-# reject-paths on inputs that previously hung or raised the wrong
-# type; any input that previously PARSED takes a byte-identical path
-# (pytest-gated: tests/test_hostile_parsers.py, 34 cases incl. one
-# deliberate stall mutant per parser family). The follow-up review
-# pass tightened the numeral grammars (netpbm tokens must be ASCII
-# digits — Python int() also took '+12'/'1_2'; tar octal fields must
-# be strict octal digits — int(x, 8) also took '0o10'/'_'/'+'; netpbm
-# magic must be whitespace/comment-delimited, so 'P6123' no longer
-# parses as P6 + width 123): same reject-path-only class, every
-# well-formed input byte-identical, pinned in the same battery.
-# (f) iterutil.materialize now takes RELIABLE checkpoint() when the
-# SparkContext has a checkpoint dir set (localCheckpoint blocks are
-# block-manager state; an evicted round-N block killed ml_pagerank at
-# sf100-equivalent twice). No driver/test/preflight session sets one,
-# so the shipped default path is byte-identical; the reliable branch
-# is pytest-gated (tests/test_iterutil.py) and sf100-proven.
-
-# Round-10 no-recheck rationale (deliberate, documented): the ADVICE r9
-# hardening of llm/warc.py (Content-Length now rejects negative/
-# non-numeric values as NotImplementedError) and llm/zipshard.py (zip64
-# sentinel/locator detection fails fast) are exception-path-only
-# changes — on any input that previously parsed, the byte-for-byte
-# dataflow is unchanged (the new branches raise or are skipped), so the
-# r9 green rows for scan_warc_gz / scan_zip_shard / the multimodal
-# shard entries still prove the shipped parse. Both paths are
-# pytest-gated (tests/test_llm.py::test_warc_hostile_content_length,
-# ::test_zipshard_zip64_fails_fast) instead of burning driver slots.
-
-# NO-RECHECK rationale for the r9 repo-wide oracle rewrite
-# (ROUND(x + 1e-9, n) → (ROUND(x + 1e-9, n) + 0.0), 187 sites): the
-# wrap is provably value-identity wherever a compare is currently
-# green — IEEE r + 0.0 == r for every r except -0.0, and an oracle
-# emitting -0.0 against Spark's +0.0 would already be a RED hash row
-# (the driver compares strings), so no green row's oracle value can
-# change. Verified empirically by a full 307-entry sf0.01 preflight
-# after the rewrite (green; .scratch record committed to PERF.md r9)
-# plus the string-level hypothesis pin in tests/test_round_epsilon.py.
-# The rotation's stalest-first refresh re-proves the block organically.
-
-# Never-driver-tested entries most valuable to a reference user, verified
-# first when the driver caps its per-round sample (VERDICT r3 §next-round-2).
-_PRIORITY = [
-    # VERDICT r5 §next-round-2: the north-star composition — benched every
-    # round (1.02× pin) but never driver-proven; leads the round-6 queue.
-    "e2e_llm_data_pipeline",
-    "llm_multimodal_wav",
-    "llm_multimodal_ppm",
-    "tpch_q1",
-    "tpch_q11",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q20",
-    "tpch_q21",
-    "win_ranking",
-    "win_running_total",
-    "win_moving_avg",
-    "agg_grouping_sets",
-    "sql_recursive_cte",
-    "udaf_weighted_mean",
-    "e2e_forecast_pipeline",
-    "ml_linreg_fit",
-    "ml_linreg_predict",
-    "ml_ar_forecast",
-    "ml_pandas_udf_infer",
-    "llm_search_bm25",
-    "llm_perplexity",
-    "llm_quality_filter",
-    # round-4-continuation additions — verify at first opportunity
-    "profile_quarantine",
-    "llm_dedup_span",
-    "llm_search_hybrid",
-    "llm_best_of_n",
-    "ts_subseq_search",
-    "llm_similarity_topk_arrow",
-    "llm_embed_neardup_arrow",
-    # r4 verdict's multimodal row named these the remaining untested
-    # kernels — pull them inside the driver's ~50-slot window
-    "llm_multimodal_resize",
-    "llm_multimodal_resample",
-    # r10 addition: the catalog-scale distributed ALS twin — verify at
-    # first opportunity
-    "ml_als_recommend_dist",
-]
+            green = row.get("err") is None and all(
+                row.get(k) for k in ("rows_match", "schema_match", "hash_match")
+            )
+            history[name] = ("green" if green else "fail", rnd)
+    return history
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Ordering is deliberate: round 1 showed the driver verifies queries
-    in dict order and may cap how many it runs (50 of 131 got
-    CORRECTNESS rows). Entries with no green CORRECTNESS row yet are
-    listed FIRST — core and llm/ml extensions interleaved so a cap
-    still samples both — and already-proven entries last, so every
-    round's driver check extends the proven set instead of re-proving
-    round 1."""
+    The driver runs entries in dict order and caps how many it checks
+    per round, so the order decides what gets (re-)proven: entries whose
+    latest driver row failed first, then never-tested entries, then
+    green entries by OLDEST green round, so each round refreshes the
+    stalest proof. Ties keep registry order."""
 
     def wrap(name):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,56 +90,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         run.__doc__ = PARITY[name].doc
         return run
 
-    names = list(PARITY)
-    status, green_round = _driver_history()
-    failed = [n for n in names if status.get(n) == "fail"]
-    pending = [n for n in names if n not in status]
-    # A rows-only entry that has since GAINED oracle SQL is effectively
-    # unproven under its new contract — verify it ahead of the backlog.
-    upgraded = [
-        n
-        for n in names
-        if status.get(n) == "rows_only" and PARITY[n].sql is not None
-    ]
-    rows_only = [
-        n
-        for n in names
-        if status.get(n) == "rows_only" and PARITY[n].sql is None
-    ]
-    # Green-row rotation (VERDICT r7 §next-round-7): with the backlog at
-    # zero, the driver's ~50 per-round slots would otherwise re-prove the
-    # same head forever. Order the proven tail OLDEST green round first
-    # (ties broken by registry order, deterministic) so every round
-    # refreshes the stalest rows — 67 entries were last proven in r1–r2
-    # under a much older engine.
-    proven = sorted(
-        (n for n in names if status.get(n) == "green"),
-        key=lambda n: (green_round.get(n, 0), names.index(n)),
-    )
-    # Within never-tested: explicit user-impact priorities first, then the
-    # rest with core and llm/ml extensions interleaved so a driver cap
-    # still samples both families.
-    recheck = [
-        n
-        for n, min_round in _RECHECK.items()
-        if n in names and n not in failed and green_round.get(n, 0) < min_round
-    ]
-    prio = [n for n in _PRIORITY if n in pending]
-    rest = [n for n in pending if n not in prio]
-    core = [n for n in rest if not n.startswith(("llm_", "ml_", "udtf_"))]
-    ext = [n for n in rest if n.startswith(("llm_", "ml_", "udtf_"))]
-    interleaved: list[str] = []
-    for i in range(max(len(core), len(ext))):
-        if i < len(core):
-            interleaved.append(core[i])
-        if i < len(ext):
-            interleaved.append(ext[i])
-    ordered = failed + upgraded + recheck + prio + interleaved + rows_only + proven
-    # de-dup while preserving first position (a recheck name may also be
-    # pending/rows_only/proven)
-    seen: set[str] = set()
-    ordered = [n for n in ordered if not (n in seen or seen.add(n))]
-    return {name: wrap(name) for name in ordered}
+    history = _driver_history()
+
+    def rank(name: str) -> tuple[int, int]:
+        if name not in history:
+            return (1, 0)
+        verdict, rnd = history[name]
+        return (0, 0) if verdict == "fail" else (2, rnd)
+
+    return {name: wrap(name) for name in sorted(PARITY, key=rank)}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,5 +1,6 @@
 """Regenerate COVERAGE.md's evidence ("check") column from the driver's
-CORRECTNESS_r*.json history plus the live _RECHECK queue state.
+CORRECTNESS_r*.json history, read through __spark_entry__._driver_history
+(the one reader of that history).
 
 The check column is the judge-facing truth about what each queries()
 entry has actually proven — regenerating it per round (instead of
@@ -29,54 +30,14 @@ def main() -> None:
 
     from trino_demo_spark.parity import PARITY
 
-    status_latest: dict[str, tuple[str, int]] = {}
-    import glob
-    import json
-
-    for p in sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)\.json$", p).group(1))
-        for name, row in json.load(open(p)).items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                status_latest[name] = ("rows_only", rnd)
-            elif (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                status_latest[name] = ("green", rnd)
-            else:
-                status_latest[name] = ("fail", rnd)
-
-    _, green_round = entry._driver_history()
+    history = entry._driver_history()
 
     def check(name: str) -> str:
-        st = status_latest.get(name)
-        has_sql = PARITY[name].sql is not None
-        if st is None:
-            return (
-                "pytest-only (oracle ready)" if has_sql else "pytest-only (rows-only)"
-            )
-        kind, rnd = st
-        if kind == "fail":
-            return f"driver-FAIL r{rnd:02d} — queued first"
-        if kind == "rows_only":
-            return (
-                f"rows-only r{rnd:02d} → oracle pending"
-                if has_sql
-                else f"rows-only r{rnd:02d}"
-            )
-        # green — but an ACTIVE recheck means the engine changed after it
-        pinned = entry._RECHECK.get(name)
-        grnd = green_round.get(name, rnd)
-        if pinned is not None and grnd < pinned:
-            return (
-                f"driver-green r{grnd:02d} (stale: engine changed r{pinned:02d}, "
-                "re-queued)"
-            )
-        return f"driver-green r{grnd:02d}"
+        if name not in history:
+            return "pytest-only"
+        verdict, rnd = history[name]
+        label = "green" if verdict == "green" else "FAIL"
+        return f"driver-{label} r{rnd:02d}"
 
     # Footers the script OWNS (VERDICT r5 §what's-wrong-1: the hand-written
     # totals line and "Deliberate gaps" note rotted — 154 vs the real 278,

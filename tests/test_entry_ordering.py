@@ -1,4 +1,4 @@
-"""Pins for __spark_entry__'s driver-queue logic — the exact spot where
+"""Pins for __spark_entry__'s driver-queue rule — the exact spot where
 round 3 lost verification coverage (a rows_match-only green test parked
 two hash-failing queries in the 'proven' tail forever)."""
 
@@ -24,7 +24,7 @@ def test_hash_fail_is_not_proven():
     classify as 'fail' (→ re-verified first), never 'green' — the
     round-3 regression."""
     E = _load_entry()
-    st = E._driver_status()
+    history = E._driver_history()
     # every green entry must have come from a fully matching row
     import glob
     import json
@@ -35,7 +35,7 @@ def test_hash_fail_is_not_proven():
             for name, row in json.load(fh).items():
                 if isinstance(row, dict):
                     latest[name] = row
-    for name, verdict in st.items():
+    for name, (verdict, _rnd) in history.items():
         row = latest[name]
         if verdict == "green":
             assert row.get("rows_match") and row.get("schema_match") and row.get(
@@ -51,23 +51,12 @@ def test_hash_fail_is_not_proven():
 
 def test_unproven_entries_ordered_before_proven():
     """queries() must list every non-green entry before every green one
-    so a driver cap always extends the proven set. ACTIVE _RECHECK names
-    are exempt: their green rows pre-date an engine change, so they are
-    deliberately re-queued at the front (they count as unproven here).
-    A RETIRED recheck (green row post-dates the change,
-    green_round >= pinned round — the auto-retire rule in
-    __spark_entry__.queries) is proven like any other green entry."""
+    so a driver cap always extends the proven set."""
     E = _load_entry()
-    st, green_round = E._driver_history()
-    names = list(E.queries())
-    recheck = {
-        n
-        for n, min_round in E._RECHECK.items()
-        if green_round.get(n, 0) < min_round
-    }
+    history = E._driver_history()
     seen_green = False
-    for n in names:
-        if st.get(n) == "green" and n not in recheck:
+    for n in E.queries():
+        if n in history and history[n][0] == "green":
             seen_green = True
         else:
             assert not seen_green, (
@@ -75,95 +64,79 @@ def test_unproven_entries_ordered_before_proven():
             )
 
 
-def test_recheck_entries_self_retire_on_postdating_green_row():
-    """A _RECHECK entry whose green row post-dates the engine change
-    (green_round >= its pinned round) must sort with the proven tail —
-    otherwise it burns a driver-cap slot every round forever. One whose
-    green rows all PRE-date the change must still jump the queue."""
-    E = _load_entry()
-    status, green_round = E._driver_history()
-    names = list(E.queries())
-    for n, min_round in E._RECHECK.items():
-        if n not in names or status.get(n) == "fail":
-            continue
-        pos = names.index(n)
-        retired = green_round.get(n, 0) >= min_round
-        # active recheck entries must appear before every never-tested
-        # BACKLOG entry (pending entries that are not themselves
-        # recheck/priority names); retired ones must NOT occupy the
-        # front block
-        front = set(E._RECHECK) | set(E._PRIORITY)
-        first_pending = next(
-            (
-                names.index(p)
-                for p in names
-                if p not in status and p not in front
-            ),
-            len(names),
-        )
-        if retired:
-            if first_pending < len(names):
-                assert pos > first_pending or status.get(n) != "green", (
-                    f"retired recheck entry {n} still jumps the queue"
-                )
-            # else: backlog-zero terminal state — every entry has a
-            # driver status, so there is no never-tested "front block"
-            # to jump (the r7 red: `pos > len(names)` is unsatisfiable).
-            # Ordering among greens is pinned by the rotation test below.
-        elif status.get(n) == "green":
-            assert pos < first_pending, (
-                f"active recheck entry {n} (green pre-change) ordered "
-                f"after the never-tested backlog"
-            )
-
-
 def test_proven_tail_rotates_stalest_green_first():
     """Green-row rotation (r8): within the proven tail, entries must be
     ordered by OLDEST green round first so the driver's per-round cap
-    refreshes stale rows instead of re-proving the same head forever.
-    Active _RECHECK entries are excluded (they sort in the front block)."""
+    refreshes stale rows instead of re-proving the same head forever."""
     E = _load_entry()
-    status, green_round = E._driver_history()
-    names = list(E.queries())
-    active_recheck = {
-        n for n, r in E._RECHECK.items() if green_round.get(n, 0) < r
-    }
+    history = E._driver_history()
     greens = [
-        n
-        for n in names
-        if status.get(n) == "green" and n not in active_recheck
+        (n, history[n][1])
+        for n in E.queries()
+        if n in history and history[n][0] == "green"
     ]
-    rounds = [green_round[n] for n in greens]
+    rounds = [r for _n, r in greens]
     assert rounds == sorted(rounds), (
-        "proven tail not ordered stalest-green-first: "
-        + str([(n, r) for n, r in zip(greens, rounds)][:10])
+        "proven tail not ordered stalest-green-first: " + str(greens[:10])
     )
 
 
 def test_queue_is_total_and_deterministic_in_backlog_zero_state():
     """Regression for the r7 red (test harness, not engine): synthesize
-    the all-green state — every registry entry green, mixed rounds,
-    every _RECHECK retired — and require queries() to (a) return the
-    full registry exactly once each, (b) order it stalest-green-first,
-    (c) not crash on retired rechecks with no pending front block."""
+    the all-green state — every registry entry green, mixed rounds —
+    and require queries() to (a) return the full registry exactly once
+    each, (b) order it stalest-green-first."""
     E = _load_entry()
     names = list(E.PARITY)
     # deterministic mixed rounds: cycle 1..7 over registry order
-    synth_green = {n: 1 + (i % 7) for i, n in enumerate(names)}
-    for n in E._RECHECK:
-        if n in synth_green:
-            synth_green[n] = max(synth_green[n], E._RECHECK[n])  # retired
-    synth_status = {n: "green" for n in names}
+    synth = {n: ("green", 1 + (i % 7)) for i, n in enumerate(names)}
     orig = E._driver_history
-    E._driver_history = lambda: (synth_status, synth_green)
+    E._driver_history = lambda: synth
     try:
         ordered = list(E.queries())
     finally:
         E._driver_history = orig
     assert sorted(ordered) == sorted(names)
     assert len(ordered) == len(set(ordered))
-    rounds = [synth_green[n] for n in ordered]
+    rounds = [synth[n][1] for n in ordered]
     assert rounds == sorted(rounds), "backlog-zero queue not rotated"
+
+
+def test_queue_order_rule_on_synthetic_history(tmp_path, monkeypatch):
+    """The whole rule, end to end from CORRECTNESS files: the failed
+    entry first, then never-tested entries in registry order, then
+    greens by latest round (ties in registry order). The latest row
+    wins: join_inner_eq was green in r01 and hash-failed in r09, and
+    scan_jdbc's r10 green supersedes its r05 one."""
+    import json
+
+    E = _load_entry()
+    names = list(E.PARITY)
+    failed, untested = "join_inner_eq", ["llm_dedup_exact", "scan_warc_gz"]
+    assert names.index(untested[0]) < names.index(untested[1])
+    green = {"err": None, "rows_match": True, "schema_match": True,
+             "hash_match": True}
+    tested = [n for n in names if n not in untested]
+    even = {n for i, n in enumerate(names) if i % 2 == 0}
+    rows = {
+        1: {n: green for n in tested},
+        5: {n: green for n in tested if n in even and n != failed},
+        9: {failed: dict(green, hash_match=False)},
+        10: {"scan_jdbc": green},
+    }
+    for rnd, data in rows.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(data))
+    monkeypatch.setattr(E, "_REPO_ROOT", str(tmp_path))
+
+    rest = [n for n in tested if n != failed and n != "scan_jdbc"]
+    expected = (
+        [failed]
+        + untested
+        + [n for n in rest if n not in even]
+        + [n for n in rest if n in even]
+        + ["scan_jdbc"]
+    )
+    assert list(E.queries()) == expected
 
 
 def test_oracle_keys_subset_of_queries():

@@ -239,6 +239,47 @@ def test_ship_package_failure_is_logged(spark, monkeypatch, caplog):
     )
 
 
+def test_ship_package_without_application_id_is_logged(caplog):
+    """A session whose SparkContext cannot be read (stopped, or not a
+    classic session) ships nothing; that is a logged warning carrying
+    the exception, not a silent early return."""
+    import logging
+
+    from trino_demo_spark import session
+
+    class NoContext:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("context is stopped")
+
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session._ship_package(NoContext())
+    assert any(
+        r.levelno == logging.WARNING and "context is stopped" in r.getMessage()
+        for r in caplog.records
+    )
+
+
+def test_static_runtime_conf_is_logged(spark, monkeypatch, caplog):
+    """apply_runtime_confs keeps the session's value of a conf it cannot
+    set (a static conf on this build) and logs a warning naming the
+    key, instead of passing silently."""
+    import logging
+
+    from trino_demo_spark import session
+
+    key = "spark.sql.globalTempDatabase"
+    before = spark.conf.get(key)
+    monkeypatch.setitem(session.RUNTIME_CONFS, key, before + "_other")
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session.apply_runtime_confs(spark)
+    assert spark.conf.get(key) == before
+    assert any(
+        r.levelno == logging.WARNING and key in r.getMessage()
+        for r in caplog.records
+    )
+
+
 def test_g711_telephony_wav():
     """G.711 µ-law/A-law WAV: decode tables hit the canonical ITU
     extrema (±32124 / ±32256, code 0xFF → 0), companding error stays
@@ -2322,12 +2363,34 @@ def test_observed_fingerprint_matches_agg(spark):
     ).distinct()
     observed, get = dedup._observe_fingerprint(e)
     ck = materialize(observed)
-    assert get() == dedup._edge_fingerprint(ck)
+    assert get(ck) == dedup._edge_fingerprint(ck)
 
     empty = spark.createDataFrame([], "u long, v long")
     observed0, get0 = dedup._observe_fingerprint(empty)
     ck0 = materialize(observed0)
-    assert get0() == dedup._edge_fingerprint(ck0) == (0, 0)
+    assert get0(ck0) == dedup._edge_fingerprint(ck0) == (0, 0)
+
+
+def test_observed_fingerprint_bounded_when_metrics_never_fire(
+    spark, monkeypatch, caplog
+):
+    """Observation.get blocks forever when the observed metrics never
+    fire. The getter must instead give up after _OBSERVE_WAIT_S, log a
+    warning, and return the aggregate fingerprint of the frame it is
+    handed — here the observed frame's action is never run at all."""
+    import logging
+    import time
+
+    monkeypatch.setattr(dedup, "_OBSERVE_WAIT_S", 0.5)
+    e = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], "u long, v long")
+    _observed, get = dedup._observe_fingerprint(e)
+    t0 = time.monotonic()
+    with caplog.at_level(logging.WARNING, logger=dedup.__name__):
+        got = get(e)
+    assert time.monotonic() - t0 < 30
+    assert got == dedup._edge_fingerprint(e)
+    assert got[0] == 3
+    assert any("did not arrive" in r.getMessage() for r in caplog.records)
 
 
 def test_capped_jaccard_keeps_exact_dup_clusters(spark):

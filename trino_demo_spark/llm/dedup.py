@@ -15,6 +15,8 @@ slice, xxhash64) so everything stays in whole-stage codegen.
 
 from __future__ import annotations
 
+import logging
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -22,8 +24,15 @@ from pyspark.sql import functions as F
 from ..genutil import explode_col
 from ..iterutil import materialize
 
+_log = logging.getLogger(__name__)
+
 # Tie-safe rounding epsilon (see trino_demo_spark.parity.EPS).
 EPS = 1e-9
+
+# How long an observed-fingerprint getter waits, AFTER the materializing
+# action has returned, for its metrics to arrive before falling back to
+# the aggregate (see _observe_fingerprint).
+_OBSERVE_WAIT_S = 30.0
 
 
 def tokens_col(text_col: str):
@@ -711,8 +720,8 @@ def ngram_jaccard_edges(
 def _edge_fingerprint(df: DataFrame) -> tuple:
     """Order-insensitive (count, xor-of-xxhash64) fingerprint of a
     (u, v) edge frame — one map-side-combined aggregate, 1 row to the
-    driver. Kept as the reference implementation for the observed
-    (in-action) fingerprint below, pinned equal by
+    driver. The fallback of the observed (in-action) fingerprint below
+    when its metrics never arrive, pinned equal to it by
     tests/test_llm.py::test_observed_fingerprint_matches_agg."""
     row = df.agg(
         F.count("*").alias("n"),
@@ -731,7 +740,12 @@ def _observe_fingerprint(df: DataFrame):
     iterutil.materialize — so the CC loop's convergence check costs no
     separate job and, at scale, no second full read of the just-
     checkpointed edge frame per round. Returns (df_with_metrics, getter);
-    call the getter AFTER the materializing action."""
+    call ``getter(materialized)`` AFTER the materializing action, with
+    the frame it produced. The getter waits at most _OBSERVE_WAIT_S for
+    the metrics (Observation.get alone blocks forever if they never
+    fire — e.g. an action that skips the CollectMetrics node); on
+    timeout it logs a warning and returns _edge_fingerprint(materialized)."""
+    from py4j.protocol import Py4JJavaError
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -741,7 +755,23 @@ def _observe_fingerprint(df: DataFrame):
         F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
     )
 
-    def get() -> tuple:
+    def get(materialized: DataFrame) -> tuple:
+        jvm = obs._jvm
+        deadline = jvm.scala.concurrent.duration.Duration.create(
+            int(_OBSERVE_WAIT_S * 1000), "ms"
+        )
+        try:
+            jvm.scala.concurrent.Await.ready(obs._jo.future(), deadline)
+        except Py4JJavaError as exc:
+            cls = exc.java_exception.getClass().getName()
+            if cls != "java.util.concurrent.TimeoutException":
+                raise
+            _log.warning(
+                "observed edge fingerprint did not arrive within %.1f s; "
+                "recomputing it with a separate aggregate job",
+                _OBSERVE_WAIT_S,
+            )
+            return _edge_fingerprint(materialized)
         got = obs.get
         return (got["n"], got["h"])
 
@@ -874,8 +904,8 @@ def dedup_clusters(
         # fingerprint aggregate re-read the full checkpointed edge
         # frame every round.
         if fp_prev is None:
-            fp_prev = fp_get()
-        fp_new = ss_fp_get()
+            fp_prev = fp_get(e)
+        fp_new = ss_fp_get(ss)
         e = ss
         if fp_new == fp_prev:
             converged = True

@@ -124,7 +124,12 @@ def _ship_package(spark: SparkSession) -> None:
     try:
         sc = spark.sparkContext
         key = sc.applicationId
-    except Exception:
+    except Exception as exc:
+        _log.warning(
+            "could not read the SparkContext application id (%r); "
+            "trino_demo_spark is not shipped to Python workers",
+            exc,
+        )
         return
     if key in _PYFILES_ADDED:
         return
@@ -144,9 +149,15 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except Exception as exc:
             # Static conf on this build — leave whatever the session has.
-            pass
+            _log.warning(
+                "could not set %s=%s on this session (%r); keeping the "
+                "session's value",
+                k,
+                v,
+                exc,
+            )
     _ship_package(spark)
     return spark
 
