@@ -1296,6 +1296,42 @@ def test_neardup_lsh_matches_brute_force_on_planted(spark, emb):
     assert lsh == brute
 
 
+_PAIR_OPS = {
+    "cosine_near_dup_pairs": similarity.cosine_near_dup_pairs,
+    "cosine_near_dup_pairs_arrow": similarity.cosine_near_dup_pairs_arrow,
+    "cosine_near_dup_pairs_lsh": similarity.cosine_near_dup_pairs_lsh,
+    "cosine_near_dup_edges_lsh": similarity.cosine_near_dup_edges_lsh,
+    "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs,
+    "ngram_jaccard_pairs_capped": dedup.ngram_jaccard_pairs_capped,
+    "minhash_lsh_pairs": dedup.minhash_lsh_pairs,
+    "ngram_jaccard_edges": dedup.ngram_jaccard_edges,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PAIR_OPS))
+def test_identical_pair_obeys_threshold(spark, op):
+    """Two identical rows have similarity exactly 1.0, so every pair and
+    edge op emits their pair at threshold 1.0 and nothing at 1.5 (the
+    value >= threshold contract; the within-group pairs and stars of
+    the collapsed ops used to ignore it). The third row shares nothing
+    with them."""
+    if op.startswith("cosine"):
+        vec = [1.0] * 64
+        df = spark.createDataFrame(
+            [(1, vec), (2, vec), (3, [1.0, -1.0] * 32)],
+            "vec_id long, embedding array<float>",
+        )
+    else:
+        txt = "the quick brown fox jumps over the lazy dog"
+        df = spark.createDataFrame(
+            [(1, txt), (2, txt), (3, "lorem ipsum dolor sit amet consectetur")],
+            "doc_id long, text string",
+        )
+    want = (1, 2) if "edges" in op else (1, 2, 1.0)
+    assert [tuple(r) for r in _PAIR_OPS[op](df, threshold=1.0).collect()] == [want]
+    assert _PAIR_OPS[op](df, threshold=1.5).collect() == []
+
+
 def test_pack_sequences_invariants(spark, docs):
     from trino_demo_spark.llm import packing
 
@@ -1735,6 +1771,26 @@ def test_ivfpq_topk_recall(spark, emb):
     }
     recall = len(exact & got) / len(exact)
     assert recall >= 0.6, recall
+
+
+def test_ann_stages_exact_when_nothing_is_pruned(spark, emb):
+    """Probing every IVF list and refining over the whole corpus leaves
+    nothing approximate: ivf_topk, pq_topk and ivfpq_topk must equal
+    brute_force_topk row for row. The recall tests above only bound
+    these paths; this pins their shared probe, ADC, refine and rank
+    stages exactly."""
+    queries = emb.filter(F.col("vec_id") < 20)
+    n = emb.count()
+    exact = sorted(
+        map(tuple, similarity.brute_force_topk(emb, queries, k=3).collect())
+    )
+    assert len(exact) == 60
+    for got in (
+        similarity.ivf_topk(emb, queries, k=3, num_centroids=8, nprobe=8, iters=2),
+        similarity.pq_topk(emb, queries, k=3, refine=n),
+        similarity.ivfpq_topk(emb, queries, k=3, nprobe=8, m=4, refine=n),
+    ):
+        assert sorted(map(tuple, got.collect())) == exact
 
 
 def test_bpe_matches_reference(spark, docs):

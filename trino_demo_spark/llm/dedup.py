@@ -10,7 +10,10 @@ Four tiers, each a pure DataFrame plan (no Python in the hot path):
 4. simhash      — 64-bit SimHash per doc + banded near-pair search.
 
 Design: all shingling/hashing uses built-in expressions (split, transform,
-slice, xxhash64) so everything stays in whole-stage codegen.
+slice, xxhash64) so everything stays in whole-stage codegen. The pair ops
+that collapse identical inputs first (exact and capped Jaccard,
+MinHash-LSH, and the cosine near-dup ops in similarity.py) all finish
+through member_pairs, or member_edges for the clustering edge frames.
 """
 
 from __future__ import annotations
@@ -178,10 +181,17 @@ def collapse_identical(df: DataFrame, key_col: str, id_col: str):
     return groups, mem
 
 
-def within_group_pairs(mem: DataFrame, value_name: str, value: float) -> DataFrame:
+def within_group_pairs(mem: DataFrame, value_name: str) -> DataFrame:
     """All (id_a < id_b) pairs inside each collapse group, tagged with
-    the constant similarity an identical pair has (Jaccard/cosine of a
-    value with itself is exactly 1.0 after the +EPS round)."""
+    the similarity an identical pair has: Jaccard/cosine of a value
+    with itself is exactly 1.0 after the +EPS round.
+
+    The pairs come from a rep-keyed self-join of the exploded member
+    frame, NOT from materializing the C(m,2) combination array inside
+    one row: a boilerplate cluster of ~200k identical docs would
+    otherwise build ~2e10 structs in a single task's single row before
+    exploding (executor OOM), while the join streams the same quadratic
+    OUTPUT through spillable operators."""
     return (
         mem.alias("wa")
         .join(
@@ -192,7 +202,7 @@ def within_group_pairs(mem: DataFrame, value_name: str, value: float) -> DataFra
         .select(
             F.col("wa.mid").alias("id_a"),
             F.col("wb.mid").alias("id_b"),
-            F.lit(value).alias(value_name),
+            F.lit(1.0).alias(value_name),
         )
     )
 
@@ -220,6 +230,38 @@ def expand_cross_pairs(
         )
         .filter(F.col("id_a") != F.col("id_b"))
     )
+
+
+def member_pairs(
+    mem: DataFrame, rep_pairs: DataFrame, value_name: str, threshold: float
+) -> DataFrame:
+    """Finish a collapsed pair op: the (id_a, id_b, <value>) member pairs
+    of threshold-surviving (rep_a, rep_b, <value>) rep pairs plus the
+    within-group pairs. An identical pair's value is exactly 1.0, so the
+    within-group pairs belong to the result only when 1.0 ≥ threshold —
+    the same ``value >= threshold`` contract the rep pairs were filtered
+    by."""
+    cross = expand_cross_pairs(rep_pairs, mem, value_name)
+    if 1.0 >= threshold:
+        return within_group_pairs(mem, value_name).unionByName(cross)
+    return cross
+
+
+def member_edges(
+    mem: DataFrame, rep_pairs: DataFrame, threshold: float
+) -> DataFrame:
+    """Connectivity-equivalent (id_a, id_b) edge frame of a collapsed
+    pair op, for dedup_clusters: a rep–member star per collapse group
+    plus the rep pairs themselves. The stars stand for within-group
+    pairs of value exactly 1.0, so they are emitted only when
+    1.0 ≥ threshold (see member_pairs)."""
+    edges = rep_pairs.select(F.col("rep_a").alias("id_a"), F.col("rep_b").alias("id_b"))
+    if 1.0 >= threshold:
+        stars = mem.filter(F.col("mid") != F.col("rep")).select(
+            F.col("rep").alias("id_a"), F.col("mid").alias("id_b")
+        )
+        return stars.unionByName(edges)
+    return edges
 
 
 def ngram_jaccard_pairs(
@@ -251,7 +293,8 @@ def ngram_jaccard_pairs(
     size, only the pair OUTPUT stays quadratic in cluster size
     (inherent to the pair contract — dedup_clusters is the
     linear-output representation)."""
-    return _set_jaccard_pairs(df, id_col, text_col, n, threshold, df_max=None)
+    mem, cpairs = _set_jaccard_rep_pairs(df, id_col, text_col, n, threshold, None)
+    return member_pairs(mem, cpairs, "jaccard", threshold)
 
 
 def minhash_signatures(
@@ -344,17 +387,10 @@ def minhash_lsh_pairs(
         F.col("mh_0").isNotNull()
     )
     sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(num_perm)])
-    # Within-cluster pairs: identical signatures estimate to exactly 1.0
-    # (and always share every band), so they bypass LSH entirely. The
-    # pairs come from a rep-keyed self-join of the exploded member list
-    # (id_a < id_b on the sorted ids), NOT from materializing the
-    # C(m,2) combination array inside one row: a boilerplate cluster of
-    # ~200k identical docs would otherwise build ~2e10 structs in a
-    # single task's single row before exploding (executor OOM), while
-    # the join streams the same quadratic OUTPUT through spillable
-    # operators.
+    # Identical signatures estimate to exactly 1.0 (and always share
+    # every band), so within-cluster pairs bypass LSH entirely
+    # (member_pairs).
     groups, mem = collapse_identical(sig.select("id", sig_arr.alias("sig")), "sig", "id")
-    within = within_group_pairs(mem, "est_jaccard", 1.0)
     # All bands in ONE pass over the distinct signatures (explode of a
     # literal band array), instead of `bands` unioned scans.
     band_arr = F.array(
@@ -402,7 +438,7 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("est_jaccard") >= threshold)
     )
-    return within.unionAll(expand_cross_pairs(cpairs, mem, "est_jaccard"))
+    return member_pairs(mem, cpairs, "est_jaccard", threshold)
 
 
 def minhash_verified_pairs(
@@ -484,10 +520,11 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     as an array column (behind an exchange barrier so projection collapse
     can't inline the hashing into all 64 bit-vote expressions), each bit's
     vote is a per-row array aggregate, and the fingerprint is assembled
-    with shifts."""
+    with shifts. The input is spread with _spread_few_splits, like
+    minhash_signatures'."""
     par = df.sparkSession.sparkContext.defaultParallelism
     hashed = (
-        df.repartition(par)
+        _spread_few_splits(df)
         .select(
             F.col(id_col).alias("id"),
             F.expr(
@@ -577,7 +614,8 @@ def ngram_jaccard_pairs_capped(
     shingles and produced zero pairs — a recall cliff on precisely the
     highest-confidence duplicates). Same identical-set collapse as
     ngram_jaccard_pairs, so compute is also linear in corpus size."""
-    return _set_jaccard_pairs(df, id_col, text_col, n, threshold, df_max=df_max)
+    mem, cpairs = _set_jaccard_rep_pairs(df, id_col, text_col, n, threshold, df_max)
+    return member_pairs(mem, cpairs, "jaccard", threshold)
 
 
 def _jaccard_posting_lists(
@@ -636,7 +674,8 @@ def _set_jaccard_rep_pairs(
     df_max: int | None,
 ):
     """Identical-set collapse + rep-level threshold Jaccard pairs —
-    the shared core of the pair-contract ops (_set_jaccard_pairs) and
+    the shared core of the exact and df-capped pair ops (which differ
+    only in the optional hot-shingle filter on the posting lists) and
     the connectivity-equivalent edge frame (ngram_jaccard_edges).
     Returns (mem, cpairs)."""
     groups, mem, rsh = _jaccard_posting_lists(df, id_col, text_col, n, df_max)
@@ -659,26 +698,6 @@ def _set_jaccard_rep_pairs(
         .filter(F.col("jaccard") >= threshold)
     )
     return mem, cpairs
-
-
-def _set_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    threshold: float,
-    df_max: int | None,
-) -> DataFrame:
-    """Shared body of the exact and df-capped n-gram Jaccard ops: the
-    only difference is the optional hot-shingle filter on the distinct-
-    set posting lists."""
-    mem, cpairs = _set_jaccard_rep_pairs(
-        df, id_col, text_col, n, threshold, df_max
-    )
-    # Identical sets: common = |A| = |A∪B| → Jaccard exactly 1.0 after
-    # the +EPS round; always ≥ any threshold ≤ 1.0.
-    within = within_group_pairs(mem, "jaccard", 1.0)
-    return within.unionByName(expand_cross_pairs(cpairs, mem, "jaccard"))
 
 
 def ngram_jaccard_edges(
@@ -709,12 +728,7 @@ def ngram_jaccard_edges(
     mem, cpairs = _set_jaccard_rep_pairs(
         df, id_col, text_col, n, threshold, df_max
     )
-    stars = mem.filter(F.col("mid") != F.col("rep")).select(
-        F.col("rep").alias("id_a"), F.col("mid").alias("id_b")
-    )
-    return stars.unionByName(
-        cpairs.select(F.col("rep_a").alias("id_a"), F.col("rep_b").alias("id_b"))
-    )
+    return member_edges(mem, cpairs, threshold)
 
 
 def _edge_fingerprint(df: DataFrame) -> tuple:

@@ -1,18 +1,36 @@
-"""Vector similarity search over an embedding column (SURVEY.md §2.10
-`llm_similarity_topk`).
+"""Vector similarity search and embedding near-duplicate detection over
+an embedding column (SURVEY.md §2.10 `llm_similarity_*`, `llm_embed_*`).
 
-Two paths:
-- brute-force top-k: broadcast the query set against the corpus; exact.
-  Cost O(|Q|·N·d) — the correctness baseline and fine whenever |Q| is
-  bounded (the common "search" shape).
-- sign-LSH (random hyperplanes) bucketed top-k: corpus and queries are
-  bucketed by the sign pattern of d·h for a fixed set of hyperplanes;
-  candidates only join within a bucket → shuffle-bounded, the 100 TB path
-  (IVF-style coarse quantization would slot in the same way with learned
-  centroids).
+Operators:
+- exact top-k on the (q_id, n_id, sim, rank) contract: brute_force_topk
+  (broadcast queries × corpus — the reference every approximate path is
+  tested against) and brute_force_topk_arrow (the same rows from an
+  Arrow-batched numpy matmul);
+- approximate top-k on the same contract: lsh_bucketed_topk (sign-LSH
+  hyperplane buckets), ivf_topk (k-means inverted lists), pq_topk
+  (product-quantization ADC scan with exact re-rank) and ivfpq_topk
+  (the two composed);
+- embedding near-dup pairs on the (id_a, id_b, sim) contract:
+  cosine_near_dup_pairs (all-pairs — the reference),
+  cosine_near_dup_pairs_arrow (blocked numpy matmul) and
+  cosine_near_dup_pairs_lsh (banded sign-LSH), plus
+  cosine_near_dup_edges_lsh, the connectivity-equivalent edge frame fed
+  to dedup.dedup_clusters;
+- the fits behind them (kmeans_fit, pq_codebooks, pca_fit /
+  pca_project) and rrf_fuse for hybrid lexical ⊕ vector search.
 
-All arithmetic uses built-in higher-order array functions (zip_with /
-aggregate) in DOUBLE precision — JVM codegen, no Python UDF.
+Each stage the operators share exists once: _vectors (ingest guard, id
+and vector aliases, norm), _rounded_cosine and its numpy mirror
+_np_rounded_cosine (cosine + EPS, rounded), _rank_top_k (the row_number
+tail over (sim desc, n_id)), _probe (IVF list probing), _pq_fit and
+_adc_refine (PQ codes, lookup tables, ADC score and exact re-rank), and
+_collapsed_vectors (the identical-vector collapse of the near-dup ops,
+whose rep pairs dedup.member_pairs / dedup.member_edges finish).
+
+Arithmetic uses built-in higher-order array functions (zip_with /
+aggregate) in DOUBLE precision — JVM codegen, no Python UDF — except in
+the Arrow twins and the corpus-side centroid assignment, which run
+numpy over Arrow batches.
 """
 
 from __future__ import annotations
@@ -22,6 +40,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..genutil import posexplode_col
+from .dedup import collapse_identical, member_edges, member_pairs
 
 # Tie-safe rounding epsilon (see trino_demo_spark.parity.EPS).
 EPS = 1e-9
@@ -33,6 +52,12 @@ DOT = (
 NORM = (
     "sqrt(aggregate({a}, CAST(0 AS DOUBLE), "
     "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+)
+# Squared L2 distance (centroid assignment, IVF probing, PQ encoding).
+L2SQ = (
+    "aggregate(zip_with({a}, {b}, "
+    "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+    "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
 )
 
 
@@ -77,6 +102,73 @@ def cosine_expr(a: str, b: str, norm_a: str, norm_b: str):
     )
 
 
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, dim: int | None, prefix: str = ""
+) -> DataFrame:
+    """The vector side of every operator: finite_vectors (with the
+    caller's declared dimensionality), then the id and vector aliased to
+    ``<prefix>id`` / ``<prefix>emb``, then their ``<prefix>norm``."""
+    return with_norm(
+        finite_vectors(df, vec_col, dim).select(
+            F.col(id_col).alias(prefix + "id"), F.col(vec_col).alias(prefix + "emb")
+        ),
+        prefix + "emb",
+        prefix + "norm",
+    )
+
+
+def _rounded_cosine(a: str, b: str, norm_a: str, norm_b: str, round_to: int):
+    """The ``sim`` column of every operator: cosine_expr plus the
+    tie-safe EPS, rounded, so rankings and thresholds are deterministic
+    and engine-independent."""
+    return F.round(cosine_expr(a, b, norm_a, norm_b) + F.lit(EPS), round_to).alias(
+        "sim"
+    )
+
+
+def _np_matrix(vectors):
+    """(float64 matrix, row norms) of an iterable of equal-length
+    vectors — the numpy side of _vectors."""
+    import numpy as np
+
+    m = np.asarray([np.asarray(v, dtype=np.float64) for v in vectors])
+    return m, np.sqrt((m * m).sum(axis=1))
+
+
+def _np_rounded_cosine(a, norm_a, b, norm_b, round_to: int):
+    """numpy mirror of _rounded_cosine: every row of ``a`` against every
+    row of ``b``. A zero-norm row gives cosine 0.0 (as cosine_expr), not
+    a silent inf/nan from the vectorized division. float64 matmul
+    differs from the fold only in summation order (~1e-15 relative),
+    which the EPS-before-round absorbs."""
+    import numpy as np
+
+    den = norm_a[:, None] * norm_b[None, :]
+    return np.round(
+        np.divide(a @ b.T, den, out=np.zeros_like(den), where=den != 0) + EPS,
+        round_to,
+    )
+
+
+def _rank_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The tail of every top-k operator: per q_id, row_number over
+    (sim desc, n_id) — ties broken by neighbor id — kept to rank ≤ k."""
+    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", "sim", "rank")
+    )
+
+
+def _array_lit(values):
+    """A (nested) list of numbers as a DOUBLE array literal — hyperplanes,
+    centroids and codebooks ride into the plan this way."""
+    if isinstance(values, (list, tuple)):
+        return F.array(*[_array_lit(v) for v in values])
+    return F.lit(float(values))
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -95,34 +187,14 @@ def brute_force_topk(
     — a finite wrong-length vector would otherwise NULL-pad the
     zip_with dot product (silent garbage) or crash the Arrow matmul.
     """
-    q = with_norm(
-        finite_vectors(queries, vec_col, dim).select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")
-        ),
-        "q_emb",
-        "q_norm",
-    )
-    c = with_norm(
-        finite_vectors(corpus, vec_col, dim).select(
-            F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_emb")
-        ),
-        "n_emb",
-        "n_norm",
-    )
-    sim = F.round(
-        cosine_expr("q_emb", "n_emb", "q_norm", "n_norm") + F.lit(EPS), round_to
-    ).alias("sim")
+    q = _vectors(queries, id_col, vec_col, dim, "q_")
+    c = _vectors(corpus, id_col, vec_col, dim, "n_")
     pairs = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", sim)
+        .select("q_id", "n_id", _rounded_cosine("q_emb", "n_emb", "q_norm", "n_norm", round_to))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
-    )
+    return _rank_top_k(pairs, k)
 
 
 def brute_force_topk_arrow(
@@ -162,9 +234,8 @@ def brute_force_topk_arrow(
             [], "q_id long, n_id long, sim double, rank long"
         )
     q_ids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    eps, kk, rt = EPS, k, round_to
+    q_mat, q_norm = _np_matrix(r[1] for r in qrows)
+    kk, rt = k, round_to
 
     def local_topk(batches):
         import pandas as pd
@@ -173,20 +244,8 @@ def brute_force_topk_arrow(
             if pdf.empty:
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            n_norm = np.sqrt((m * m).sum(axis=1))
-            # zero-norm rows → cosine 0.0 (matches cosine_expr), not
-            # a silent inf/nan from the vectorized division
-            den = n_norm[:, None] * q_norm[None, :]
-            sims = np.round(
-                np.divide(
-                    m @ q_mat.T, den, out=np.zeros_like(den), where=den != 0
-                )
-                + eps,
-                rt,
-            )
+            m, n_norm = _np_matrix(pdf[vec_col])
+            sims = _np_rounded_cosine(m, n_norm, q_mat, q_norm, rt)
             out_q, out_n, out_s = [], [], []
             for j in range(len(q_ids)):
                 col = sims[:, j]
@@ -205,12 +264,7 @@ def brute_force_topk_arrow(
     local = corpus.select(id_col, vec_col).mapInPandas(
         local_topk, "q_id long, n_id long, sim double"
     )
-    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
-    )
+    return _rank_top_k(local, k)
 
 
 def _hyperplanes(dim: int, num_planes: int) -> list[list[float]]:
@@ -244,56 +298,47 @@ def lsh_bucketed_topk(
     can be raised by multi-probe (flipping low-margin bits) or repeated
     tables; kept single-table here.
     """
-    planes = _hyperplanes(dim, num_planes)
-    planes_lit = F.array(
-        *[F.array(*[F.lit(x) for x in row]) for row in planes]
-    )
+    planes_lit = _array_lit(_hyperplanes(dim, num_planes))
 
-    def bucketed(df: DataFrame, idc: str, vecc: str) -> DataFrame:
-        out = df.withColumn("__planes", planes_lit)
+    def bucketed(df: DataFrame, vecc: str) -> DataFrame:
         sign_bits = F.expr(
             "aggregate(transform(__planes, p -> CASE WHEN "
             + DOT.format(a="p", b=vecc)
             + " >= 0 THEN 1 ELSE 0 END), 0, (acc, b) -> acc * 2 + b)"
         )
-        return out.withColumn("bucket", sign_bits).drop("__planes")
+        return (
+            df.withColumn("__planes", planes_lit)
+            .withColumn("bucket", sign_bits)
+            .drop("__planes")
+        )
 
     # dim doubles as the ingest dimensionality contract: a ragged vector
     # would mis-project against the fixed dim-sized hyperplanes.
-    q = bucketed(
-        with_norm(
-            finite_vectors(queries, vec_col, dim).select(
-                F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")
-            ),
-            "q_emb",
-            "q_norm",
-        ),
-        "q_id",
-        "q_emb",
-    )
-    c = bucketed(
-        with_norm(
-            finite_vectors(corpus, vec_col, dim).select(
-                F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_emb")
-            ),
-            "n_emb",
-            "n_norm",
-        ),
-        "n_id",
-        "n_emb",
-    )
-    sim = F.round(cosine_expr("q_emb", "n_emb", "q_norm", "n_norm") + F.lit(EPS), round_to).alias("sim")
+    q = bucketed(_vectors(queries, id_col, vec_col, dim, "q_"), "q_emb")
+    c = bucketed(_vectors(corpus, id_col, vec_col, dim, "n_"), "n_emb")
     pairs = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", sim)
+        .select("q_id", "n_id", _rounded_cosine("q_emb", "n_emb", "q_norm", "n_norm", round_to))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
+    return _rank_top_k(pairs, k)
+
+
+def _collapsed_vectors(
+    df: DataFrame, id_col: str, vec_col: str, dim: int | None
+):
+    """Prelude of the cosine near-dup ops: finite, non-zero vectors
+    collapsed to one rep per bit-identical vector. Returns
+    dedup.collapse_identical's (groups, mem) over (id, emb).
+
+    Zero vectors have no cosine (the guarded divide yields 0.0, below
+    any positive threshold), so they are dropped BEFORE the collapse,
+    where identical zero vectors would group together and masquerade as
+    sim-1.0 duplicates."""
+    rows = _vectors(df, id_col, vec_col, dim).filter(
+        F.col("emb").isNotNull() & (F.col("norm") > 0)
     )
+    return collapse_identical(rows.select("id", "emb"), "emb", "id")
 
 
 def cosine_near_dup_pairs(
@@ -305,25 +350,23 @@ def cosine_near_dup_pairs(
     dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim ≥ t).
-    Brute-force all-pairs — correctness baseline; the LSH bucket join above
-    is the scale path (same output contract).
+    Brute-force all-pairs — correctness baseline; the LSH bucket join
+    (cosine_near_dup_pairs_lsh) is the scale path (same output contract).
 
     Identical-vector collapse (r10, exact): all-pairs cosine runs over
     DISTINCT vectors only; identical vectors have bit-identical dot
     products, so within-group pairs are emitted directly at sim 1.0
-    (round(cos±ulp + EPS, 4) of a self-cosine is exactly 1.0 — the same
-    argument the LSH path's within_group_pairs relies on) and
+    (round(cos±ulp + EPS, 4) of a self-cosine is exactly 1.0) and
     cross-group rep pairs expand to member pairs after the threshold
-    filter. Output is row-identical to the naive n² form; compute drops
-    from corpus² to distinct² (the r9 scaled corpora replicate vectors
-    bit-identically, so this is the difference between 4·10⁸ and 2·10⁶
-    pair evaluations at sf1). Zero-norm vectors have no cosine (the
-    naive form's guarded divide yields 0.0 < any positive threshold),
-    so they are excluded from pair generation before the collapse —
-    identical zero vectors must not masquerade as sim-1.0 duplicates.
-    That exclusion makes threshold <= 0 ill-defined (the pre-r10 guarded
-    divide emitted zero-norm pairs at sim 0.0; this form cannot), so
-    non-positive thresholds are rejected (ADVICE r10)."""
+    filter (dedup.member_pairs). Output is row-identical to the naive n²
+    form; compute drops from corpus² to distinct² (the r9 scaled corpora
+    replicate vectors bit-identically, so this is the difference between
+    4·10⁸ and 2·10⁶ pair evaluations at sf1). Zero-norm vectors have no
+    cosine (the naive form's guarded divide yields 0.0 < any positive
+    threshold), so they are excluded from pair generation before the
+    collapse. That exclusion makes threshold <= 0 ill-defined (the
+    pre-r10 guarded divide emitted zero-norm pairs at sim 0.0; this form
+    cannot), so non-positive thresholds are rejected (ADVICE r10)."""
     if threshold <= 0.0:
         raise ValueError(
             "cosine_near_dup_pairs requires threshold > 0: zero-norm "
@@ -331,20 +374,7 @@ def cosine_near_dup_pairs(
             "threshold would silently return fewer pairs than the naive "
             "guarded-divide form"
         )
-    from .dedup import collapse_identical, expand_cross_pairs, within_group_pairs
-
-    rows = with_norm(
-        finite_vectors(df, vec_col, dim).select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("emb")
-        ),
-        "emb",
-        "norm",
-    ).filter(F.col("emb").isNotNull() & (F.col("norm") > 0))
-    groups, mem = collapse_identical(rows.select("id", "emb"), "emb", "id")
-    within = within_group_pairs(mem, "sim", 1.0).filter(
-        F.lit(1.0) >= F.lit(threshold)
-    )
-
+    groups, mem = _collapsed_vectors(df, id_col, vec_col, dim)
     reps = with_norm(groups.select(F.col("rep"), "emb"), "emb", "norm")
     a = reps.select(
         F.col("rep").alias("rep_a"),
@@ -356,16 +386,13 @@ def cosine_near_dup_pairs(
         F.col("emb").alias("emb_b"),
         F.col("norm").alias("norm_b"),
     )
-    sim = F.round(
-        cosine_expr("emb_a", "emb_b", "norm_a", "norm_b") + F.lit(EPS), round_to
-    ).alias("sim")
     rep_pairs = (
         a.crossJoin(b)
         .filter(F.col("rep_a") < F.col("rep_b"))
-        .select("rep_a", "rep_b", sim)
+        .select("rep_a", "rep_b", _rounded_cosine("emb_a", "emb_b", "norm_a", "norm_b", round_to))
         .filter(F.col("sim") >= threshold)
     )
-    return within.unionByName(expand_cross_pairs(rep_pairs, mem, "sim"))
+    return member_pairs(mem, rep_pairs, "sim", threshold)
 
 
 def cosine_near_dup_pairs_arrow(
@@ -406,31 +433,17 @@ def cosine_near_dup_pairs_arrow(
         )
     import numpy as np
 
-    from .dedup import collapse_identical, expand_cross_pairs, within_group_pairs
-
-    rows_df = with_norm(
-        finite_vectors(df, vec_col, dim).select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("emb")
-        ),
-        "emb",
-        "norm",
-    ).filter(F.col("emb").isNotNull() & (F.col("norm") > 0))
-    groups, mem = collapse_identical(rows_df.select("id", "emb"), "emb", "id")
-    within = within_group_pairs(mem, "sim", 1.0).filter(
-        F.lit(1.0) >= F.lit(threshold)
-    )
-
+    groups, mem = _collapsed_vectors(df, id_col, vec_col, dim)
     spark = df.sparkSession
     reps = groups.select(F.col("rep"), "emb").collect()
     if not reps:
         return spark.createDataFrame([], "id_a long, id_b long, sim double")
     all_ids = np.asarray([r[0] for r in reps], dtype=np.int64)
-    mat = np.asarray([list(r[1]) for r in reps], dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
+    mat, norms = _np_matrix(r[1] for r in reps)
     b_ids = spark.sparkContext.broadcast(all_ids)
     b_mat = spark.sparkContext.broadcast(mat)
     b_norms = spark.sparkContext.broadcast(norms)
-    eps, rt, thr = EPS, round_to, threshold
+    rt, thr = round_to, threshold
 
     def pairs_gen(batches):
         import pandas as pd
@@ -442,23 +455,10 @@ def cosine_near_dup_pairs_arrow(
             if pdf.empty:
                 continue
             ids = pdf["rep"].to_numpy(dtype=np.int64)
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["emb"]]
-            )
-            nn = np.sqrt((m * m).sum(axis=1))
+            m, nn = _np_matrix(pdf["emb"])
             for lo in range(0, len(ids), chunk):
                 hi = lo + chunk
-                den = nn[lo:hi, None] * n_all[None, :]
-                sims = np.round(
-                    np.divide(
-                        m[lo:hi] @ m_all.T,
-                        den,
-                        out=np.zeros_like(den),
-                        where=den != 0,
-                    )
-                    + eps,
-                    rt,
-                )
+                sims = _np_rounded_cosine(m[lo:hi], nn[lo:hi], m_all, n_all, rt)
                 keep = (sims >= thr) & (ids[lo:hi, None] < ids_all[None, :])
                 ai, bj = np.nonzero(keep)
                 if len(ai):
@@ -473,7 +473,7 @@ def cosine_near_dup_pairs_arrow(
     rep_pairs = groups.select("rep", "emb").mapInPandas(
         pairs_gen, "rep_a long, rep_b long, sim double"
     )
-    return within.unionByName(expand_cross_pairs(rep_pairs, mem, "sim"))
+    return member_pairs(mem, rep_pairs, "sim", threshold)
 
 
 def cosine_near_dup_pairs_lsh(
@@ -520,15 +520,11 @@ def cosine_near_dup_pairs_lsh(
     is linear in corpus size, and only the pair OUTPUT stays quadratic
     in cluster size (inherent to the pair contract —
     `dedup_clusters` is the linear-output representation)."""
-    from .dedup import expand_cross_pairs, within_group_pairs
-
     mem, rep_pairs = _lsh_collapse_rep_pairs(
         df, threshold, id_col, vec_col, dim, num_planes, bands, round_to
     )
-    # Identical vectors: cos is 1.0 to the ulp, and round(1±ulp+EPS, 4)
-    # is exactly 1.0 — always ≥ any meaningful threshold, no LSH needed.
-    within = within_group_pairs(mem, "sim", 1.0)
-    return within.unionByName(expand_cross_pairs(rep_pairs, mem, "sim"))
+    # a rep pair colliding in several bands arrives once per band
+    return member_pairs(mem, rep_pairs.distinct(), "sim", threshold)
 
 
 def _lsh_collapse_rep_pairs(
@@ -540,44 +536,23 @@ def _lsh_collapse_rep_pairs(
     num_planes: int,
     bands: int,
     round_to: int,
-    dedup_pairs: bool = True,
 ):
     """Shared sign-LSH core: identical-vector collapse, banded bucket
     self-join over the DISTINCT reps, exact-cosine re-check. Returns
     (mem, rep_pairs) where mem is the narrow (rep, mid) member frame
-    and rep_pairs is (rep_a, rep_b, sim) above the threshold.
-
-    dedup_pairs=False (r12) skips the final .distinct() — a rep pair
-    colliding in k>1 bands is emitted k≤bands times — for consumers
-    that dedup downstream anyway (the edges→dedup_clusters path, whose
-    edge frame goes straight into a distinct): the pair contract keeps
-    the dedup, the connectivity contract drops one full exchange of
-    the threshold-surviving pairs."""
-    from .dedup import collapse_identical
-
-    planes = _hyperplanes(dim, num_planes)
-    planes_lit = F.array(*[F.array(*[F.lit(x) for x in row]) for row in planes])
+    and rep_pairs is (rep_a, rep_b, sim) above the threshold — NOT
+    deduplicated: a rep pair colliding in k ≤ bands bands appears k
+    times. The pair contract dedups it; the connectivity consumer
+    (the edges → dedup_clusters path, whose edge normalization ends in
+    its own .distinct()) does not need to, which saves one exchange of
+    the threshold-surviving pairs (r12)."""
     b = num_planes // bands
-
-    rows = with_norm(
-        finite_vectors(df, vec_col, dim).select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("emb")
-        ),
-        "emb",
-        "norm",
-    )
-    # NULL embeddings and zero vectors have no cosine (the brute
-    # baseline's sim comes out NULL/NaN and never survives its
-    # threshold filter) — exclude them BEFORE the collapse so they
-    # can't group together and masquerade as sim-1.0 duplicates.
-    rows = rows.filter(F.col("emb").isNotNull() & (F.col("norm") > 0))
-    groups, mem = collapse_identical(rows.select("id", "emb"), "emb", "id")
-
+    groups, mem = _collapsed_vectors(df, id_col, vec_col, dim)
     keyed = with_norm(
         groups.select(F.col("rep").alias("id"), "emb"),
         "emb",
         "norm",
-    ).withColumn("__planes", planes_lit)
+    ).withColumn("__planes", _array_lit(_hyperplanes(dim, num_planes)))
     band_keys = F.expr(
         f"transform(sequence(0, {bands - 1}), k -> "
         f"aggregate(slice(__planes, k * {b} + 1, {b}), 0, (acc, p) -> "
@@ -591,9 +566,6 @@ def _lsh_collapse_rep_pairs(
     keyed = posexplode_col(keyed, band_keys, "band", "bkey", "id", "emb", "norm")
 
     a, c = keyed.alias("a"), keyed.alias("b")
-    sim = F.round(
-        cosine_expr("a.emb", "b.emb", "a.norm", "b.norm") + F.lit(EPS), round_to
-    ).alias("sim")
     rep_pairs = (
         a.join(
             c,
@@ -601,11 +573,13 @@ def _lsh_collapse_rep_pairs(
             & (F.col("a.bkey") == F.col("b.bkey"))
             & (F.col("a.id") < F.col("b.id")),
         )
-        .select(F.col("a.id").alias("rep_a"), F.col("b.id").alias("rep_b"), sim)
+        .select(
+            F.col("a.id").alias("rep_a"),
+            F.col("b.id").alias("rep_b"),
+            _rounded_cosine("a.emb", "b.emb", "a.norm", "b.norm", round_to),
+        )
         .filter(F.col("sim") >= threshold)
     )
-    if dedup_pairs:
-        rep_pairs = rep_pairs.distinct()
     return mem, rep_pairs
 
 
@@ -632,23 +606,11 @@ def cosine_near_dup_edges_lsh(
     within a group every member reaches its rep directly, and any
     cross-group member pair routes through the two reps. This keeps the
     semantic-dedup composition linear in corpus size + distinct² in
-    pair generation — the 100 TB shape."""
+    pair generation — the 100 TB shape (dedup.member_edges)."""
     mem, rep_pairs = _lsh_collapse_rep_pairs(
-        df, threshold, id_col, vec_col, dim, num_planes, bands, round_to,
-        # connectivity consumer: dedup_clusters' edge normalization ends
-        # in .distinct(), so pre-deduping here would exchange the same
-        # (small, threshold-surviving) pair frame twice (r12)
-        dedup_pairs=False,
+        df, threshold, id_col, vec_col, dim, num_planes, bands, round_to
     )
-    stars = (
-        mem.filter(F.col("mid") != F.col("rep"))
-        .select(F.col("rep").alias("id_a"), F.col("mid").alias("id_b"))
-    )
-    return stars.unionByName(
-        rep_pairs.select(
-            F.col("rep_a").alias("id_a"), F.col("rep_b").alias("id_b")
-        )
-    )
+    return member_edges(mem, rep_pairs, threshold)
 
 
 def centroid_assign_udf(centroids):
@@ -714,22 +676,19 @@ def _kmeans_moments(df: DataFrame, vec_col: str, centroids) -> DataFrame:
     )
 
 
-def _argmin_centroid(vec_col: str, centroids_lit, metric_dot: bool = False):
+def _argmin_centroid(vec_col: str, centroids_lit):
     """Index of the nearest centroid (L2) for a vector column, computed
     with array expressions against a broadcast literal centroid array.
     Kept for QUERY-side probe computation (a handful of rows); corpus-
     side assignment goes through centroid_assign_udf/_kmeans_moments."""
-    dist = (
-        "aggregate(zip_with({c}, {v}, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
-    )
+    dist = L2SQ.format(a="element_at(__cents, i + 1)", b=vec_col)
     # argmin via aggregate over the centroid index sequence
     return F.expr(
         "aggregate(sequence(0, size(__cents) - 1), named_struct('i', -1, 'd', CAST('Infinity' AS DOUBLE)), "
         "(best, i) -> CASE WHEN "
-        + dist.format(c="element_at(__cents, i + 1)", v=vec_col)
+        + dist
         + " < best.d THEN named_struct('i', i, 'd', "
-        + dist.format(c="element_at(__cents, i + 1)", v=vec_col)
+        + dist
         + ") ELSE best END).i"
     )
 
@@ -790,15 +749,32 @@ def kmeans_fit(
     return centroids
 
 
-def _empty_topk(queries: DataFrame, id_col: str) -> DataFrame:
+def _empty_topk(q: DataFrame) -> DataFrame:
     """Zero-row (q_id, n_id, sim, rank) frame with id types taken from
     the query side — the graceful result of every ANN path when the
     corpus (hence the fitted quantizer) is empty."""
-    return queries.limit(0).select(
-        F.col(id_col).alias("q_id"),
-        F.col(id_col).alias("n_id"),
+    return q.limit(0).select(
+        F.col("q_id"),
+        F.col("q_id").alias("n_id"),
         F.lit(0.0).alias("sim"),
         F.lit(0).cast("long").alias("rank"),
+    )
+
+
+def _probe(q: DataFrame, centroids, nprobe: int) -> DataFrame:
+    """IVF list probing: add `probes`, the indices of each query's
+    nprobe nearest centroids — all distances computed, the nprobe
+    smallest kept (array sort over (dist, idx) structs)."""
+    dist = L2SQ.format(a="element_at(__cents, i + 1)", b="q_emb")
+    probes = F.expr(
+        "slice(transform(array_sort(transform(sequence(0, size(__cents) - 1), "
+        "i -> named_struct('d', " + dist + ", 'i', i))), s -> s.i), 1, "
+        + str(nprobe) + ")"
+    )
+    return (
+        q.withColumn("__cents", _array_lit(centroids))
+        .withColumn("probes", probes)
+        .drop("__cents")
     )
 
 
@@ -820,51 +796,21 @@ def ivf_topk(
     the classic trade against recall, and the scale path when the query
     set is too large to broadcast against the whole corpus (the sign-LSH
     variant is the hash-based alternative with the same contract)."""
-    corpus = finite_vectors(corpus, vec_col, dim)
-    queries = finite_vectors(queries, vec_col, dim)
-    centroids = kmeans_fit(corpus, vec_col, id_col, k=num_centroids, iters=iters)
+    q = _vectors(queries, id_col, vec_col, dim, "q_")
+    c = _vectors(corpus, id_col, vec_col, dim, "n_")
+    centroids = kmeans_fit(c, "n_emb", "n_id", k=num_centroids, iters=iters)
     if not centroids:
-        return _empty_topk(queries, id_col)
-    cents_lit = F.array(*[F.array(*[F.lit(x) for x in row]) for row in centroids])
-
-    c = with_norm(
-        corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_emb")),
-        "n_emb",
-        "n_norm",
-    ).withColumn("cluster", centroid_assign_udf(centroids)("n_emb"))
-
-    # queries probe the nprobe nearest centroids: compute all distances,
-    # keep the nprobe smallest indices (array sort over (dist, idx) structs)
-    dist = (
-        "aggregate(zip_with(element_at(__cents, i + 1), q_emb, "
-        "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
+        return _empty_topk(q)
+    c = c.withColumn("cluster", centroid_assign_udf(centroids)("n_emb"))
+    q = _probe(q, centroids, nprobe).select(
+        "q_id", "q_emb", "q_norm", F.explode("probes").alias("cluster")
     )
-    probes = F.expr(
-        "slice(transform(array_sort(transform(sequence(0, size(__cents) - 1), "
-        "i -> named_struct('d', " + dist + ", 'i', i))), s -> s.i), 1, " + str(nprobe) + ")"
-    )
-    q = with_norm(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")),
-        "q_emb",
-        "q_norm",
-    ).withColumn("__cents", cents_lit).withColumn("probes", probes).drop("__cents")
-    q_exploded = q.select("q_id", "q_emb", "q_norm", F.explode("probes").alias("cluster"))
-
-    sim = F.round(
-        cosine_expr("q_emb", "n_emb", "q_norm", "n_norm") + F.lit(EPS), round_to
-    ).alias("sim")
     pairs = (
-        c.join(F.broadcast(q_exploded), "cluster")
+        c.join(F.broadcast(q), "cluster")
         .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", sim)
+        .select("q_id", "n_id", _rounded_cosine("q_emb", "n_emb", "q_norm", "n_norm", round_to))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
-    )
+    return _rank_top_k(pairs, k)
 
 
 def pca_fit(
@@ -991,6 +937,63 @@ def pq_codebooks(
     return books
 
 
+def _pq_fit(c: DataFrame, dim: int, m: int, ksub: int, iters: int):
+    """The PQ stages of pq_topk and ivfpq_topk, fitted on the (n_id,
+    n_emb) corpus side: (books_lit, codes, lut), or None for an empty
+    corpus. ``codes`` encodes n_emb as its m per-subspace nearest-
+    centroid indices; ``lut`` is a query's m×ksub table of sub-vector ·
+    centroid dots. Both read the codebook literal from a ``__pq``
+    column."""
+    books = pq_codebooks(c, "n_emb", "n_id", dim, m, ksub, iters)
+    if not books or not books[0]:
+        return None
+    # A corpus smaller than ksub fits fewer centroids than requested —
+    # the code/LUT expressions must iterate the FITTED size or
+    # element_at walks off the codebook.
+    ksub = min(len(b) for b in books)
+    dsub = dim // m
+    cent = "element_at(element_at(__pq, j + 1), c + 1)"
+    sub_dist = L2SQ.format(a=cent, b=f"slice(n_emb, j * {dsub} + 1, {dsub})")
+    codes = F.expr(
+        f"transform(sequence(0, {m - 1}), j -> "
+        f"element_at(array_sort(transform(sequence(0, {ksub - 1}), c -> "
+        f"named_struct('d', {sub_dist}, 'i', c))), 1).i)"
+    )
+    sub_dot = (
+        f"aggregate(zip_with({cent}, slice(q_emb, j * {dsub} + 1, {dsub}), "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
+    )
+    lut = F.expr(
+        f"transform(sequence(0, {m - 1}), j -> "
+        f"transform(sequence(0, {ksub - 1}), c -> {sub_dot}))"
+    )
+    return _array_lit(books), codes, lut
+
+
+def _adc_refine(
+    pairs: DataFrame, m: int, refine: int, k: int, round_to: int
+) -> DataFrame:
+    """ADC scan + exact re-rank over (query with lut) × (corpus with
+    codes) pairs: each pair's score is m table lookups over the norm
+    product; the top-`refine` candidates per query by that score are
+    re-ranked by exact cosine and cut to the top k."""
+    adc = F.expr(
+        f"aggregate(sequence(0, {m - 1}), CAST(0 AS DOUBLE), (acc, j) -> "
+        "acc + element_at(element_at(lut, j + 1), element_at(codes, j + 1) + 1))"
+    )
+    scored = pairs.withColumn(
+        "adc_sim",
+        F.coalesce(F.try_divide(adc, F.col("q_norm") * F.col("n_norm")), F.lit(0.0)),
+    )
+    w_adc = W.partitionBy("q_id").orderBy(F.col("adc_sim").desc(), F.col("n_id"))
+    cands = scored.withColumn("cr", F.row_number().over(w_adc)).filter(
+        F.col("cr") <= refine
+    )
+    sim = _rounded_cosine("q_emb", "n_emb", "q_norm", "n_norm", round_to)
+    return _rank_top_k(cands.select("q_id", "n_id", sim), k)
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1024,82 +1027,16 @@ def pq_topk(
        recall is the only approximation (measured in tests vs brute
        force).
     """
-    corpus = finite_vectors(corpus, vec_col, dim)
-    queries = finite_vectors(queries, vec_col, dim)
-    dsub = dim // m
-    books = pq_codebooks(corpus, vec_col, id_col, dim, m, ksub, iters)
-    if not books or not books[0]:
-        return _empty_topk(queries, id_col)
-    # A corpus smaller than ksub fits fewer centroids than requested —
-    # the code/LUT expressions must iterate the FITTED size or
-    # element_at walks off the codebook.
-    ksub = min(len(b) for b in books)
-    books_lit = F.array(*[
-        F.array(*[F.array(*[F.lit(float(x)) for x in cent]) for cent in book])
-        for book in books
-    ])
-
-    sub_dist = (
-        "aggregate(zip_with(element_at(element_at(__pq, j + 1), c + 1), "
-        "slice(n_emb, j * {dsub} + 1, {dsub}), "
-        "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
-    ).format(dsub=dsub)
-    codes_expr = F.expr(
-        f"transform(sequence(0, {m - 1}), j -> "
-        f"element_at(array_sort(transform(sequence(0, {ksub - 1}), c -> "
-        f"named_struct('d', {sub_dist}, 'i', c))), 1).i)"
-    )
-    enc = with_norm(
-        corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_emb")),
-        "n_emb",
-        "n_norm",
-    ).withColumn("__pq", books_lit).withColumn("codes", codes_expr).drop("__pq")
-
-    sub_dot = (
-        "aggregate(zip_with(element_at(element_at(__pq, j + 1), c + 1), "
-        "slice(q_emb, j * {dsub} + 1, {dsub}), "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
-    ).format(dsub=dsub)
-    lut_expr = F.expr(
-        f"transform(sequence(0, {m - 1}), j -> "
-        f"transform(sequence(0, {ksub - 1}), c -> {sub_dot}))"
-    )
-    q = with_norm(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")),
-        "q_emb",
-        "q_norm",
-    ).withColumn("__pq", books_lit).withColumn("lut", lut_expr).drop("__pq")
-
-    adc = F.expr(
-        f"aggregate(sequence(0, {m - 1}), CAST(0 AS DOUBLE), (acc, j) -> "
-        "acc + element_at(element_at(lut, j + 1), element_at(codes, j + 1) + 1))"
-    )
-    pairs = (
-        enc.join(F.broadcast(q), F.col("n_id") != F.col("q_id"))
-        .withColumn(
-            "adc_sim",
-            F.coalesce(
-                F.try_divide(adc, F.col("q_norm") * F.col("n_norm")), F.lit(0.0)
-            ),
-        )
-    )
-    w_adc = W.partitionBy("q_id").orderBy(F.col("adc_sim").desc(), F.col("n_id"))
-    cands = pairs.withColumn("cr", F.row_number().over(w_adc)).filter(
-        F.col("cr") <= refine
-    )
-
-    sim = F.round(
-        cosine_expr("q_emb", "n_emb", "q_norm", "n_norm") + F.lit(EPS), round_to
-    ).alias("sim")
-    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        cands.select("q_id", "n_id", sim)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
-    )
+    q = _vectors(queries, id_col, vec_col, dim, "q_")
+    c = _vectors(corpus, id_col, vec_col, dim, "n_")
+    pq = _pq_fit(c, dim, m, ksub, iters)
+    if pq is None:
+        return _empty_topk(q)
+    books_lit, codes, lut = pq
+    enc = c.withColumn("__pq", books_lit).withColumn("codes", codes).drop("__pq")
+    q = q.withColumn("__pq", books_lit).withColumn("lut", lut).drop("__pq")
+    pairs = enc.join(F.broadcast(q), F.col("n_id") != F.col("q_id"))
+    return _adc_refine(pairs, m, refine, k, round_to)
 
 
 def ivfpq_topk(
@@ -1128,110 +1065,30 @@ def ivfpq_topk(
     (map-only, m bytes + 4 bytes per vector), the scan touches only
     probed lists, and nothing but the k×dim centroid matrix and the
     ksub·dim codebook ever leaves the executors."""
-    corpus = finite_vectors(corpus, vec_col, dim)
-    queries = finite_vectors(queries, vec_col, dim)
-    coarse = kmeans_fit(corpus, vec_col, id_col, k=num_centroids, iters=iters)
+    q = _vectors(queries, id_col, vec_col, dim, "q_")
+    c = _vectors(corpus, id_col, vec_col, dim, "n_")
+    coarse = kmeans_fit(c, "n_emb", "n_id", k=num_centroids, iters=iters)
     if not coarse:
-        return _empty_topk(queries, id_col)
-    cents_lit = F.array(*[F.array(*[F.lit(x) for x in row]) for row in coarse])
-    books = pq_codebooks(corpus, vec_col, id_col, dim, m, ksub, iters)
-    if not books or not books[0]:
-        return _empty_topk(queries, id_col)
-    ksub = min(len(b) for b in books)  # fitted size, see pq_topk
-    books_lit = F.array(*[
-        F.array(*[F.array(*[F.lit(float(x)) for x in cent]) for cent in book])
-        for book in books
-    ])
-    dsub = dim // m
-
-    sub_dist = (
-        "aggregate(zip_with(element_at(element_at(__pq, j + 1), c + 1), "
-        "slice(n_emb, j * {dsub} + 1, {dsub}), "
-        "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
-    ).format(dsub=dsub)
-    codes_expr = F.expr(
-        f"transform(sequence(0, {m - 1}), j -> "
-        f"element_at(array_sort(transform(sequence(0, {ksub - 1}), c -> "
-        f"named_struct('d', {sub_dist}, 'i', c))), 1).i)"
-    )
+        return _empty_topk(q)
+    pq = _pq_fit(c, dim, m, ksub, iters)
+    if pq is None:
+        return _empty_topk(q)
+    books_lit, codes, lut = pq
     enc = (
-        with_norm(
-            corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_emb")),
-            "n_emb",
-            "n_norm",
-        )
-        .withColumn("cluster", centroid_assign_udf(coarse)("n_emb"))
+        c.withColumn("cluster", centroid_assign_udf(coarse)("n_emb"))
         .withColumn("__pq", books_lit)
-        .withColumn("codes", codes_expr)
+        .withColumn("codes", codes)
         .drop("__pq")
-    )
-
-    cdist = (
-        "aggregate(zip_with(element_at(__cents, i + 1), q_emb, "
-        "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
-    )
-    probes = F.expr(
-        "slice(transform(array_sort(transform(sequence(0, size(__cents) - 1), "
-        "i -> named_struct('d', " + cdist + ", 'i', i))), s -> s.i), 1, "
-        + str(nprobe) + ")"
-    )
-    sub_dot = (
-        "aggregate(zip_with(element_at(element_at(__pq, j + 1), c + 1), "
-        "slice(q_emb, j * {dsub} + 1, {dsub}), "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
-    ).format(dsub=dsub)
-    lut_expr = F.expr(
-        f"transform(sequence(0, {m - 1}), j -> "
-        f"transform(sequence(0, {ksub - 1}), c -> {sub_dot}))"
     )
     q = (
-        with_norm(
-            queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")),
-            "q_emb",
-            "q_norm",
-        )
-        .withColumn("__cents", cents_lit)
-        .withColumn("probes", probes)
-        .drop("__cents")
+        _probe(q, coarse, nprobe)
         .withColumn("__pq", books_lit)
-        .withColumn("lut", lut_expr)
+        .withColumn("lut", lut)
         .drop("__pq")
+        .select("q_id", "q_emb", "q_norm", "lut", F.explode("probes").alias("cluster"))
     )
-    q_exploded = q.select(
-        "q_id", "q_emb", "q_norm", "lut", F.explode("probes").alias("cluster")
-    )
-
-    adc = F.expr(
-        f"aggregate(sequence(0, {m - 1}), CAST(0 AS DOUBLE), (acc, j) -> "
-        "acc + element_at(element_at(lut, j + 1), element_at(codes, j + 1) + 1))"
-    )
-    pairs = (
-        enc.join(F.broadcast(q_exploded), "cluster")
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn(
-            "adc_sim",
-            F.coalesce(
-                F.try_divide(adc, F.col("q_norm") * F.col("n_norm")), F.lit(0.0)
-            ),
-        )
-    )
-    w_adc = W.partitionBy("q_id").orderBy(F.col("adc_sim").desc(), F.col("n_id"))
-    cands = pairs.withColumn("cr", F.row_number().over(w_adc)).filter(
-        F.col("cr") <= refine
-    )
-    sim = F.round(
-        cosine_expr("q_emb", "n_emb", "q_norm", "n_norm") + F.lit(EPS), round_to
-    ).alias("sim")
-    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        cands.select("q_id", "n_id", sim)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
-    )
+    pairs = enc.join(F.broadcast(q), "cluster").filter(F.col("n_id") != F.col("q_id"))
+    return _adc_refine(pairs, m, refine, k, round_to)
 
 
 def rrf_fuse(
