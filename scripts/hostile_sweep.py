@@ -1,10 +1,11 @@
-"""Hostile-events differential sweep: run every events-only oracle query
-on the adversarial events table (tests/hostile_corpora.py) and compare
-engine vs DuckDB oracle. The CI gate (tests/test_hostile_events.py)
-pins a representative subset; this sweep covers ALL events-only queries
-and is re-run out-of-band per round.
+"""Hostile differential sweep: run every oracle query whose tables all
+lie in the chosen hostile family (tests/hostile_corpora.py) on that
+corpus and compare engine vs DuckDB oracle with the shared harness
+(tests/oracle.py). The CI gates (tests/test_hostile_*.py) pin
+representative subsets; this sweep covers every such query and is
+re-run out-of-band per round.
 
-Usage: python scripts/hostile_sweep.py [--only name,name,...]
+Usage: python scripts/hostile_sweep.py [--tables MODE] [--only name,name,...]
 """
 
 from __future__ import annotations
@@ -12,183 +13,74 @@ from __future__ import annotations
 import argparse
 import os
 import re
+import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from tests.hostile_corpora import (  # noqa: E402
-    TABLES,
     build_hostile_dims,
+    build_hostile_docs,
+    build_hostile_emb,
     build_hostile_events,
     build_hostile_orders,
 )
+from tests.oracle import duck_views, oracle_mismatch  # noqa: E402
+from trino_demo_spark.registry import TABLE_NAMES  # noqa: E402
+
+_STAR = set(TABLE_NAMES) - {"events", "documents", "embeddings"}
+
+# mode -> (corpus builders, tables a swept query may read)
+MODES = {
+    "events": ((build_hostile_events,), {"events"}),
+    "orders": ((build_hostile_orders,), {"orders", "lineitem"}),
+    # hostile facts + clean dims: exercises NULL/extreme fact keys and
+    # measures through every dim-join chain
+    "star": ((build_hostile_orders,), _STAR),
+    # hostile dims + clean facts: string/collation traps and NULL dim
+    # keys through every broadcast-join and string-function path
+    "dims": ((build_hostile_dims,), _STAR),
+    "docs": ((build_hostile_docs,), {"documents"}),
+    "emb": ((build_hostile_emb,), {"embeddings"}),
+    # every table adversarial at once — closes the cross-family
+    # interaction gap (multi-table queries swept one family at a time)
+    "all": (
+        (build_hostile_events, build_hostile_orders, build_hostile_dims,
+         build_hostile_docs, build_hostile_emb),
+        set(TABLE_NAMES),
+    ),
+}
+
+
+def build_corpus(mode: str, scratch: str) -> str:
+    """Build the mode's corpora under `scratch` and return the testdata
+    directory to sweep; for several builders, a directory linking each
+    builder's own (non-symlinked) tables."""
+    builders, _ = MODES[mode]
+    outs = [b(os.path.join(scratch, b.__name__[len("build_"):])) for b in builders]
+    if len(outs) == 1:
+        return outs[0]
+    base = os.path.join(scratch, "hostile_all")
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base)
+    for out in outs:
+        for t in TABLE_NAMES:
+            src = os.path.join(out, f"{t}.parquet")
+            if not os.path.islink(src):
+                os.symlink(src, os.path.join(base, f"{t}.parquet"))
+    return base
+
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--only", default=None)
-    ap.add_argument("--tables", default="events", choices=["events", "orders", "star", "dims", "docs", "emb", "all"])
+    ap.add_argument("--tables", default="events", choices=list(MODES))
     args = ap.parse_args()
 
-    scratch = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
-    )
-    if args.tables == "events":
-        base = build_hostile_events(os.path.join(scratch, "hostile_events"))
-        target = {"events"}
-    elif args.tables == "orders":
-        base = build_hostile_orders(os.path.join(scratch, "hostile_orders"))
-        target = {"orders", "lineitem"}
-    elif args.tables == "star":
-        # hostile facts + clean dims: exercises NULL/extreme fact keys
-        # and measures through every dim-join chain
-        base = build_hostile_orders(os.path.join(scratch, "hostile_orders"))
-        target = {
-            "orders", "lineitem", "customer", "supplier",
-            "part", "nation", "region",
-        }
-    elif args.tables == "dims":
-        # hostile dims + clean facts: string/collation traps and NULL
-        # dim keys through every broadcast-join and string-function path
-        base = build_hostile_dims(os.path.join(scratch, "hostile_dims"))
-        target = {
-            "orders", "lineitem", "customer", "supplier",
-            "part", "nation", "region",
-        }
-    elif args.tables == "docs":
-        # hostile documents (the tests/test_hostile_text.py corpus):
-        # every documents-only oracle query
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    base = build_corpus(args.tables, os.path.join(_ROOT, ".scratch"))
+    target = MODES[args.tables][1]
 
-        from tests.hostile_corpora import SMOKE
-        from tests.test_hostile_text import HOSTILE_TEXTS
-
-        base = os.path.join(scratch, "hostile_docs")
-        os.makedirs(base, exist_ok=True)
-        for t in TABLES:
-            dst = os.path.join(base, f"{t}.parquet")
-            if t == "documents" or os.path.exists(dst):
-                continue
-            os.symlink(f"{SMOKE}/{t}.parquet", dst)
-        langs = ["en", "de", "fr", "es", "zh"]
-        n = len(HOSTILE_TEXTS)
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array(range(n), pa.int64()),
-                    "text": pa.array(HOSTILE_TEXTS, pa.string()),
-                    "lang": pa.array([langs[i % 5] for i in range(n)], pa.string()),
-                    "source": pa.array([f"src{i % 20}" for i in range(n)], pa.string()),
-                    "n_chars": pa.array(
-                        [len(t) if t is not None else 0 for t in HOSTILE_TEXTS],
-                        pa.int64(),
-                    ),
-                }
-            ),
-            os.path.join(base, "documents.parquet"),
-        )
-        target = {"documents"}
-    elif args.tables == "emb":
-        # hostile embeddings (the tests/test_hostile_embeddings.py
-        # corpus): every query whose oracle reads embeddings
-        from tests.hostile_corpora import SMOKE
-        from tests.test_hostile_embeddings import _hostile_vectors
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        base = os.path.join(scratch, "hostile_emb")
-        os.makedirs(base, exist_ok=True)
-        for t in TABLES:
-            dst = os.path.join(base, f"{t}.parquet")
-            if t == "embeddings" or os.path.exists(dst):
-                continue
-            os.symlink(f"{SMOKE}/{t}.parquet", dst)
-        vecs = _hostile_vectors()
-        pq.write_table(
-            pa.table(
-                {
-                    "vec_id": pa.array(range(len(vecs)), pa.int64()),
-                    "embedding": pa.array(
-                        [
-                            None
-                            if v is None
-                            else [None if x is None else float(x) for x in v]
-                            for v in vecs
-                        ],
-                        pa.list_(pa.float32()),
-                    ),
-                    "label": pa.array(
-                        [i % 10 for i in range(len(vecs))], pa.int32()
-                    ),
-                }
-            ),
-            os.path.join(base, "embeddings.parquet"),
-        )
-        target = {"embeddings"}
-    else:
-        # every table adversarial at once — closes the cross-family
-        # interaction gap (multi-table queries were swept with one
-        # hostile family at a time)
-        import shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from tests.test_hostile_embeddings import _hostile_vectors
-        from tests.test_hostile_text import HOSTILE_TEXTS
-
-        base = os.path.join(scratch, "hostile_all")
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base)
-        ev = build_hostile_events(os.path.join(scratch, "hostile_events"))
-        od = build_hostile_orders(os.path.join(scratch, "hostile_orders"))
-        dm = build_hostile_dims(os.path.join(scratch, "hostile_dims"))
-        os.symlink(os.path.join(ev, "events.parquet"), os.path.join(base, "events.parquet"))
-        for t in ("orders", "lineitem"):
-            os.symlink(os.path.join(od, f"{t}.parquet"), os.path.join(base, f"{t}.parquet"))
-        for t in ("customer", "supplier", "part", "nation", "region"):
-            os.symlink(os.path.join(dm, f"{t}.parquet"), os.path.join(base, f"{t}.parquet"))
-        langs = ["en", "de", "fr", "es", "zh"]
-        n = len(HOSTILE_TEXTS)
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array(range(n), pa.int64()),
-                    "text": pa.array(HOSTILE_TEXTS, pa.string()),
-                    "lang": pa.array([langs[i % 5] for i in range(n)], pa.string()),
-                    "source": pa.array([f"src{i % 20}" for i in range(n)], pa.string()),
-                    "n_chars": pa.array(
-                        [len(t) if t is not None else 0 for t in HOSTILE_TEXTS],
-                        pa.int64(),
-                    ),
-                }
-            ),
-            os.path.join(base, "documents.parquet"),
-        )
-        vecs = _hostile_vectors()
-        pq.write_table(
-            pa.table(
-                {
-                    "vec_id": pa.array(range(len(vecs)), pa.int64()),
-                    "embedding": pa.array(
-                        [
-                            None
-                            if v is None
-                            else [None if x is None else float(x) for x in v]
-                            for v in vecs
-                        ],
-                        pa.list_(pa.float32()),
-                    ),
-                    "label": pa.array([i % 10 for i in range(len(vecs))], pa.int32()),
-                }
-            ),
-            os.path.join(base, "embeddings.parquet"),
-        )
-        target = set(TABLES)
-
-    import duckdb
-    import pandas as pd
     from pyspark.sql import SparkSession
 
     from trino_demo_spark import parity_llm, parity_ml  # noqa: F401
@@ -198,35 +90,14 @@ def main():
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     apply_runtime_confs(spark)
+    con = duck_views(base)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{base}/{t}.parquet')"
-        )
-
-    def canon(pdf):
-        cols = sorted(pdf.columns)
-        pdf = pdf[cols]
-        return cols, sorted(
-            map(
-                tuple,
-                pd.DataFrame(
-                    {c: pdf[c].astype(str) for c in cols}
-                ).itertuples(index=False),
-            )
-        )
-
+    table_re = re.compile(r"\b(" + "|".join(TABLE_NAMES) + r")\b")
     names = []
     for n, p in PARITY.items():
         if p.sql is None:
             continue
-        tables = set(
-            re.findall(
-                r"\b(region|nation|customer|supplier|part|orders|lineitem|events|documents|embeddings)\b",
-                p.sql,
-            )
-        )
+        tables = set(table_re.findall(p.sql))
         if tables and tables <= target:
             names.append(n)
     if args.only:
@@ -248,19 +119,15 @@ def main():
             print(f"{n:28s} ERROR(oracle): {str(e).splitlines()[0][:140]}")
             summary["ERROR"] += 1
             continue
-        cs, rs = canon(spdf)
-        cd, rd = canon(dpdf)
-        if cs != cd or len(rs) != len(rd):
-            print(f"{n:28s} ROWS   spark={len(rs)} duck={len(rd)} cols {cs == cd}")
-            summary["ROWS"] += 1
-            continue
-        bad = [(a, b) for a, b in zip(rs, rd) if a != b]
-        if bad:
-            print(f"{n:28s} VALUES {len(bad)} mismatched rows; first: {bad[0]}")
-            summary["VALUES"] += 1
+        miss = oracle_mismatch(spdf, dpdf)
+        if miss is None:
+            verdict, detail = "OK", f"({len(spdf)} rows)"
         else:
-            print(f"{n:28s} OK     ({len(rs)} rows)")
-            summary["OK"] += 1
+            # a column or row-count mismatch is a ROWS verdict
+            verdict = "VALUES" if miss.startswith("VALUES") else "ROWS"
+            detail = miss
+        print(f"{n:28s} {verdict:6s} {detail}")
+        summary[verdict] += 1
     print("SUMMARY:", summary)
 
 

@@ -2,7 +2,7 @@
 query through the driver contract (`__spark_entry__.queries()` /
 `oracle_sql()`) in a fresh PLAIN SparkSession — no engine confs, the
 exact runtime the round driver uses — and compare against DuckDB with
-the driver-faithful string canonicalizer (tests/test_parity.py::_canon).
+the shared driver-faithful compare (tests/oracle.py::oracle_mismatch).
 
 This is the configuration-regression check pytest cannot provide (the
 local gate's session carries engine confs; round 3 lost a day to
@@ -64,11 +64,6 @@ import time
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 # Order-independent exact multiset fingerprint: COUNT + BIT_XOR +
 # 128-bit SUM of a per-row 64-bit hash over the name-sorted columns in
 # VARCHAR form. XOR alone is cancellable (any value appearing an even
@@ -128,11 +123,10 @@ def main() -> None:
     ap.add_argument("--driver-mem", default=None)
     args = ap.parse_args()
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
-    from tests.test_parity import _canon
+    from tests.oracle import duck_views, oracle_mismatch
 
     builder = SparkSession.builder.master(f"local[{args.cpus}]")
     if args.driver_mem:
@@ -147,7 +141,7 @@ def main() -> None:
         # sweep hit a 103GB RSS on an all-pairs oracle at sf1 and took
         # the whole process down) surfaces as a recorded ERROR, not an
         # OOM-kill that loses the chunk's record.
-        c = duckdb.connect()
+        c = duck_views(args.sf)
         c.sql(f"SET threads={args.cpus}")
         c.sql(f"SET memory_limit='{args.duck_mem}'")
         # PER-PROCESS temp dir (r11): DuckDB names its offload files
@@ -182,11 +176,6 @@ def main() -> None:
                     )
                 except PermissionError:
                     pass  # alive, different user — leave it
-        for t in TABLES:
-            c.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{args.sf}/{t}.parquet')"
-            )
         return c
 
     con = fresh_con()
@@ -257,12 +246,12 @@ def main() -> None:
         spdf = qs[name](spark, args.sf).toPandas()
         out["spark_rows"] = len(spdf)
         if name in osql:
-            dpdf = con.sql(osql[name]).df()
-            cs, rs = _canon(spdf)
-            cd, rd = _canon(dpdf)
-            out["ok"] = cs == cd and rs == rd
+            miss = oracle_mismatch(spdf, con.sql(osql[name]).df())
+            out["ok"] = miss is None
+            # a row-count mismatch is a VALUES verdict here
             out["tag"] = (
-                "OK" if out["ok"] else ("COLS" if cs != cd else "VALUES")
+                "OK" if miss is None
+                else "COLS" if miss.startswith("COLS") else "VALUES"
             )
         else:
             out["ok"], out["tag"] = True, f"rows_only({len(spdf)})"

@@ -9,6 +9,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from trino_demo_spark.session import get_spark  # noqa: E402
 
+from .oracle import duck_views  # noqa: E402
+
 SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_CORRECT = "/root/testdata/sf0.01"
 # The parity/oracle gate runs at driver scale (sf0.01) by default so the
@@ -33,14 +35,5 @@ def sf_dir():
 def duck():
     """DuckDB oracle views over the parity-gate SF (sf0.01 unless
     overridden) — must match the SF the parity tests feed to Spark."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_PARITY}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(SF_PARITY) as con:
+        yield con

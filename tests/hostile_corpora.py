@@ -1,11 +1,11 @@
-"""Shared hostile-events corpus: adversarial `events` parquet used by
-both the CI differential gate (tests/test_hostile_events.py) and the
-full out-of-band sweep (scripts/hostile_sweep.py).
+"""Hostile corpora: one builder per adversarial table family, shared by
+the CI differential gates (tests/test_hostile_{events,orders,dims,text,
+embeddings}.py) and the out-of-band sweep (scripts/hostile_sweep.py).
 
-Timestamp pathologies are the classic window/session-op killers: exact
-session-gap boundaries, duplicate (user, ts) pairs, NULL ts/user/value,
-NaN/±Inf values, epoch-0 / pre-1970 / far-future timestamps, identical
-rows, unordered file layout, malformed props JSON.
+Each `build_hostile_*(base)` writes its family's tables into `base`,
+symlinks every other registry table from the clean smoke SF (`SMOKE`,
+fixed, so a corpus does not change with $SPARK_GRAFT_TEST_SF) and
+returns `base`.
 """
 
 from __future__ import annotations
@@ -16,22 +16,38 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from trino_demo_spark.registry import TABLE_NAMES
+
 SMOKE = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+
+
+def _write(base: str, table: str, rows: list, fields: list) -> None:
+    """Write `rows` (tuples in `fields` order) as `{base}/{table}.parquet`;
+    `fields` is a list of (column name, arrow type) pairs."""
+    pq.write_table(
+        pa.table(
+            {c: pa.array([r[i] for r in rows], t) for i, (c, t) in enumerate(fields)}
+        ),
+        os.path.join(base, f"{table}.parquet"),
+    )
+
+
+def _link_clean(base: str) -> str:
+    """Symlink every registry table not yet written in `base` from SMOKE."""
+    for t in TABLE_NAMES:
+        dst = os.path.join(base, f"{t}.parquet")
+        if not os.path.exists(dst):
+            os.symlink(f"{SMOKE}/{t}.parquet", dst)
+    return base
 
 
 def build_hostile_events(base: str) -> str:
+    """Adversarial `events`: timestamp pathologies are the classic
+    window/session-op killers — exact session-gap boundaries, duplicate
+    (user, ts) pairs, NULL ts/user/value, NaN/±Inf values, epoch-0 /
+    pre-1970 / far-future timestamps, identical rows, unordered file
+    layout, malformed props JSON."""
     os.makedirs(base, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(base, f"{t}.parquet")
-        if t == "events":
-            continue
-        if not os.path.exists(dst):
-            os.symlink(f"{SMOKE}/{t}.parquet", dst)
-
     rng = np.random.RandomState(11)
     rows = []  # (event_id, ts_us or None, user_id, event_type, value, props)
     US = 1_000_000
@@ -108,20 +124,15 @@ def build_hostile_events(base: str) -> str:
     order = rng.permutation(len(rows))
     rows = [rows[i] for i in order]
 
-    tbl = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([r[4] for r in rows], pa.float64()),
-            "props": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(tbl, os.path.join(base, "events.parquet"))
-    return base
-
-
+    _write(base, "events", rows, [
+        ("event_id", pa.int64()),
+        ("ts", pa.timestamp("us")),
+        ("user_id", pa.int64()),
+        ("event_type", pa.string()),
+        ("value", pa.float64()),
+        ("props", pa.string()),
+    ])
+    return _link_clean(base)
 
 def build_hostile_orders(base: str) -> str:
     """Adversarial orders + lineitem star-schema pair: NULL join keys /
@@ -133,12 +144,6 @@ def build_hostile_orders(base: str) -> str:
     profile_quality_checks op is the quarantine path for violations);
     everything else is fair game."""
     os.makedirs(base, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(base, f"{t}.parquet")
-        if t in ("orders", "lineitem"):
-            continue
-        if not os.path.exists(dst):
-            os.symlink(f"{SMOKE}/{t}.parquet", dst)
 
     rng = np.random.RandomState(13)
     US = 1_000_000
@@ -223,38 +228,29 @@ def build_hostile_orders(base: str) -> str:
     lorder = rng.permutation(len(lines))
     lines = [lines[i] for i in lorder]
 
-    pq.write_table(
-        pa.table(
-            {
-                "o_orderkey": pa.array([r[0] for r in orders], pa.int64()),
-                "o_custkey": pa.array([r[1] for r in orders], pa.int64()),
-                "o_orderstatus": pa.array([r[2] for r in orders], pa.string()),
-                "o_totalprice": pa.array([r[3] for r in orders], pa.float64()),
-                "o_orderdate": pa.array([r[4] for r in orders], pa.timestamp("us")),
-                "o_orderpriority": pa.array([r[5] for r in orders], pa.string()),
-            }
-        ),
-        os.path.join(base, "orders.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "l_orderkey": pa.array([r[0] for r in lines], pa.int64()),
-                "l_partkey": pa.array([r[1] for r in lines], pa.int64()),
-                "l_suppkey": pa.array([r[2] for r in lines], pa.int64()),
-                "l_linenumber": pa.array([r[3] for r in lines], pa.int32()),
-                "l_quantity": pa.array([r[4] for r in lines], pa.float64()),
-                "l_extendedprice": pa.array([r[5] for r in lines], pa.float64()),
-                "l_discount": pa.array([r[6] for r in lines], pa.float64()),
-                "l_tax": pa.array([r[7] for r in lines], pa.float64()),
-                "l_returnflag": pa.array([r[8] for r in lines], pa.string()),
-                "l_linestatus": pa.array([r[9] for r in lines], pa.string()),
-                "l_shipdate": pa.array([r[10] for r in lines], pa.timestamp("us")),
-            }
-        ),
-        os.path.join(base, "lineitem.parquet"),
-    )
-    return base
+    _write(base, "orders", orders, [
+        ("o_orderkey", pa.int64()),
+        ("o_custkey", pa.int64()),
+        ("o_orderstatus", pa.string()),
+        ("o_totalprice", pa.float64()),
+        ("o_orderdate", pa.timestamp("us")),
+        ("o_orderpriority", pa.string()),
+    ])
+    _write(base, "lineitem", lines, [
+        ("l_orderkey", pa.int64()),
+        ("l_partkey", pa.int64()),
+        ("l_suppkey", pa.int64()),
+        ("l_linenumber", pa.int32()),
+        ("l_quantity", pa.float64()),
+        ("l_extendedprice", pa.float64()),
+        ("l_discount", pa.float64()),
+        ("l_tax", pa.float64()),
+        ("l_returnflag", pa.string()),
+        ("l_linestatus", pa.string()),
+        ("l_shipdate", pa.timestamp("us")),
+    ])
+    return _link_clean(base)
+
 
 def build_hostile_dims(base: str) -> str:
     """Adversarial dimension tables joined to CLEAN facts: NULL keys and
@@ -265,12 +261,6 @@ def build_hostile_dims(base: str) -> str:
     negative and duplicate-free keys. Facts come from SMOKE so every
     dim-join chain exercises hostile dim rows against real keys."""
     os.makedirs(base, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(base, f"{t}.parquet")
-        if t in ("customer", "supplier", "part", "nation", "region"):
-            continue
-        if not os.path.exists(dst):
-            os.symlink(f"{SMOKE}/{t}.parquet", dst)
 
     rng = np.random.RandomState(17)
     segs = ["BUILDING", "AUTOMOBILE", "MACHINERY", "HOUSEHOLD", "FURNITURE"]
@@ -299,18 +289,13 @@ def build_hostile_dims(base: str) -> str:
         (None, "null key", 1, 1.0, "BUILDING"),
         (-7, "negative key", 1, 1.0, "BUILDING"),
     ]
-    pq.write_table(
-        pa.table(
-            {
-                "c_custkey": pa.array([r[0] for r in cust], pa.int64()),
-                "c_name": pa.array([r[1] for r in cust], pa.string()),
-                "c_nationkey": pa.array([r[2] for r in cust], pa.int64()),
-                "c_acctbal": pa.array([r[3] for r in cust], pa.float64()),
-                "c_mktsegment": pa.array([r[4] for r in cust], pa.string()),
-            }
-        ),
-        os.path.join(base, "customer.parquet"),
-    )
+    _write(base, "customer", cust, [
+        ("c_custkey", pa.int64()),
+        ("c_name", pa.string()),
+        ("c_nationkey", pa.int64()),
+        ("c_acctbal", pa.float64()),
+        ("c_mktsegment", pa.string()),
+    ])
 
     supp = [
         (k, f"Supplier#{k:09d}", int(rng.randint(0, 25)),
@@ -323,17 +308,12 @@ def build_hostile_dims(base: str) -> str:
         (602, "Customer#000000001", 2, 1.0),  # name collides with customer
         (None, "null key supp", 3, 1.0),
     ]
-    pq.write_table(
-        pa.table(
-            {
-                "s_suppkey": pa.array([r[0] for r in supp], pa.int64()),
-                "s_name": pa.array([r[1] for r in supp], pa.string()),
-                "s_nationkey": pa.array([r[2] for r in supp], pa.int64()),
-                "s_acctbal": pa.array([r[3] for r in supp], pa.float64()),
-            }
-        ),
-        os.path.join(base, "supplier.parquet"),
-    )
+    _write(base, "supplier", supp, [
+        ("s_suppkey", pa.int64()),
+        ("s_name", pa.string()),
+        ("s_nationkey", pa.int64()),
+        ("s_acctbal", pa.float64()),
+    ])
 
     types = ["PROMO", "STANDARD", "ECONOMY", None, "", "promo\nanodized"]
     parts = [
@@ -347,19 +327,14 @@ def build_hostile_dims(base: str) -> str:
         (702, "dup name part", "Brand#1", "PROMO", 1, 1000.0),
         (None, "null key part", "Brand#2", "STANDARD", 2, 1000.0),
     ]
-    pq.write_table(
-        pa.table(
-            {
-                "p_partkey": pa.array([r[0] for r in parts], pa.int64()),
-                "p_name": pa.array([r[1] for r in parts], pa.string()),
-                "p_brand": pa.array([r[2] for r in parts], pa.string()),
-                "p_type": pa.array([r[3] for r in parts], pa.string()),
-                "p_size": pa.array([r[4] for r in parts], pa.int32()),
-                "p_retailprice": pa.array([r[5] for r in parts], pa.float64()),
-            }
-        ),
-        os.path.join(base, "part.parquet"),
-    )
+    _write(base, "part", parts, [
+        ("p_partkey", pa.int64()),
+        ("p_name", pa.string()),
+        ("p_brand", pa.string()),
+        ("p_type", pa.string()),
+        ("p_size", pa.int32()),
+        ("p_retailprice", pa.float64()),
+    ])
 
     nations = [
         (k, n, k % 5)
@@ -370,25 +345,126 @@ def build_hostile_dims(base: str) -> str:
         )
     ]
     nations += [(13, None, 2), (None, "null key nation", 3)]
-    pq.write_table(
-        pa.table(
-            {
-                "n_nationkey": pa.array([r[0] for r in nations], pa.int64()),
-                "n_name": pa.array([r[1] for r in nations], pa.string()),
-                "n_regionkey": pa.array([r[2] for r in nations], pa.int64()),
-            }
-        ),
-        os.path.join(base, "region_tmp.parquet") if False else os.path.join(base, "nation.parquet"),
-    )
+    _write(base, "nation", nations, [
+        ("n_nationkey", pa.int64()),
+        ("n_name", pa.string()),
+        ("n_regionkey", pa.int64()),
+    ])
 
     regions = [(0, "REGION_0"), (1, "REGION_1"), (2, None), (3, "région🌍"), (4, ""), (None, "null key region")]
-    pq.write_table(
-        pa.table(
-            {
-                "r_regionkey": pa.array([r[0] for r in regions], pa.int64()),
-                "r_name": pa.array([r[1] for r in regions], pa.string()),
-            }
-        ),
-        os.path.join(base, "region.parquet"),
-    )
-    return base
+    _write(base, "region", regions, [("r_regionkey", pa.int64()), ("r_name", pa.string())])
+    return _link_clean(base)
+
+
+HOSTILE_TEXTS = [
+    "plain ordinary text the quick fox",
+    "backslash C:\\path\\to\\file and trailing \\",
+    'quotes "double" and \'single\' and `tick`',
+    "tab\tseparated\twords here",
+    "newline\nsplit\nlines end",
+    "carriage\rreturn mix\r\n windows",
+    "control\x01chars\x02embedded\x1fhere",
+    "bell\x07and backspace\x08and formfeed\x0c",
+    "del char \x7f stays",
+    "nbsp\u00a0between\u00a0words wide",
+    "unicode caf\u00e9 stra\u00dfe \u4e2d\u6587\u6587\u6863 \U0001f680 rocket",
+    "combining a\u0301ccent e\u0301toile marks",
+    "",
+    " ",
+    "   \n\t  ",
+    "single",
+    "x" * 5000,
+    ("dup dup dup " * 40).strip(),
+    "1234 5678 90 42 007 3.14159",
+    ".,;:!? .,;:!? punctuation only",
+    "the a and of to the a and of to stopwords heavy",
+    'json breaker {"key": "val\\ue"} end',
+    "sql 'injection' -- attempt; DROP TABLE x;",
+    "mixed\u00a0nbsp and\ttab and\nnewline and \\ slash",
+    "trailing newline ends here\n",
+    "\nleading newline starts",
+    "repeat " + "token " * 200,
+    "MiXeD CaSe \u00dcPPER lower \u1e9eharp",
+    "emoji run \U0001f600\U0001f601\U0001f602 done",
+    "zero\u200bwidth\u200bspace joined",
+    None,  # failed upstream fetch — the case that crashed 2 operators
+]
+
+
+def build_hostile_docs(base: str) -> str:
+    """Adversarial `documents`: control chars, backslashes, quotes,
+    NBSP/zero-width/unicode special-casing, empty and whitespace-only
+    strings, huge tokens, and NULL text (HOSTILE_TEXTS)."""
+    os.makedirs(base, exist_ok=True)
+    langs = ["en", "de", "fr", "es", "zh"]
+    docs = [
+        (i, t, langs[i % 5], f"src{i % 20}", len(t) if t is not None else 0)
+        for i, t in enumerate(HOSTILE_TEXTS)
+    ]
+    _write(base, "documents", docs, [
+        ("doc_id", pa.int64()),
+        ("text", pa.string()),
+        ("lang", pa.string()),
+        ("source", pa.string()),
+        ("n_chars", pa.int64()),
+    ])
+    return _link_clean(base)
+
+
+DIM = 64
+
+
+def _hostile_vectors():
+    rng = np.random.RandomState(7)
+
+    def norm(v):
+        return (v / np.linalg.norm(v)).astype(np.float32)
+
+    vecs = [norm(rng.randn(DIM)) for _ in range(30)]
+    hostile = [
+        np.zeros(DIM, dtype=np.float32),          # zero norm
+        np.full(DIM, np.nan, dtype=np.float32),   # all NaN
+        None,                                     # NULL cell
+        np.full(DIM, 1e30, dtype=np.float32),     # huge magnitude
+        np.full(DIM, 1e-40, dtype=np.float32),    # float32 denormal
+        np.full(DIM, -0.0, dtype=np.float32),     # negative zero
+    ]
+    nan1 = norm(rng.randn(DIM)); nan1[7] = np.nan
+    inf1 = norm(rng.randn(DIM)); inf1[3] = np.inf
+    ninf = norm(rng.randn(DIM)); ninf[5] = -np.inf
+    hostile += [nan1, inf1, ninf]
+    # ragged-but-finite vectors (schema drift): every component is a
+    # clean float, only the length is wrong — the case only the dim
+    # contract catches (a NaN-style guard passes these through into
+    # NULL-padded zip_with garbage / Arrow vstack crashes)
+    hostile.append(norm(rng.randn(DIM - 1)))      # truncated (63)
+    hostile.append(norm(rng.randn(DIM + 1)))      # over-length (65)
+    # SQL-NULL component (partial upstream write): the engine's forall
+    # yields NULL → dropped; the oracle's list_filter must test
+    # `x IS NULL OR NOT isfinite(x)` — bare isfinite(NULL) is NULL and
+    # DuckDB would silently skip the element, keeping the row
+    withnull = [float(x) for x in norm(rng.randn(DIM))]
+    withnull[11] = None
+    hostile.append(withnull)
+    hostile.append(vecs[0].copy())                # exact duplicate
+    nd = vecs[1].copy(); nd[0] += np.float32(1e-7)
+    hostile.append(nd)                            # near duplicate
+    return vecs + hostile
+
+
+def build_hostile_emb(base: str) -> str:
+    """Adversarial `embeddings`: NULL cells, all/partial NaN, ±Inf
+    components, zero vectors, 1e30 magnitudes, float32 denormals,
+    negative zero, wrong lengths, a NULL component, exact/near
+    duplicates (_hostile_vectors)."""
+    os.makedirs(base, exist_ok=True)
+    vecs = [
+        (i, None if v is None else [None if x is None else float(x) for x in v], i % 10)
+        for i, v in enumerate(_hostile_vectors())
+    ]
+    _write(base, "embeddings", vecs, [
+        ("vec_id", pa.int64()),
+        ("embedding", pa.list_(pa.float32())),
+        ("label", pa.int32()),
+    ])
+    return _link_clean(base)

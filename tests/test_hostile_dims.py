@@ -35,8 +35,8 @@ from trino_demo_spark import parity_llm  # noqa: F401  (registers entries)
 from trino_demo_spark import parity_ml  # noqa: F401  (registers entries)
 from trino_demo_spark.parity import PARITY
 
-from .hostile_corpora import TABLES, build_hostile_dims
-from .test_parity import _canon
+from .hostile_corpora import build_hostile_dims
+from .oracle import duck_views, oracle_mismatch
 
 HOSTILE_GATED = [
     # ADVICE r5 (round-6 fix): q10 ranks top-20 BEFORE touching customer,
@@ -68,29 +68,13 @@ def hostile_dim_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def hostile_dim_duck(hostile_dim_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{hostile_dim_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(hostile_dim_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", HOSTILE_GATED)
 def test_hostile_dims_parity(name, spark, hostile_dim_sf, hostile_dim_duck):
     p = PARITY[name]
     spdf = p.fn(spark, hostile_dim_sf).toPandas()
-    dpdf = hostile_dim_duck.sql(p.sql).df()
-    assert sorted(spdf.columns) == sorted(dpdf.columns)
-    assert len(spdf) == len(dpdf), f"{name}: {len(spdf)} vs {len(dpdf)} rows"
-    _, rows_s = _canon(spdf)
-    _, rows_d = _canon(dpdf)
-    mismatches = [(rs, rd) for rs, rd in zip(rows_s, rows_d) if rs != rd]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} canonical-row mismatches on hostile "
-        f"dims; first: {mismatches[:2]}"
-    )
+    miss = oracle_mismatch(spdf, hostile_dim_duck.sql(p.sql).df())
+    assert miss is None, f"{name} on hostile dims: {miss}"

@@ -1,7 +1,8 @@
 """Hostile-embeddings differential gate: vector operators must survive
 and match the DuckDB oracle on adversarial vectors — NULL cells, all/
 partial NaN, ±Inf components, zero vectors, 1e30 magnitudes, float32
-denormals, negative zero, exact/near duplicates.
+denormals, negative zero, exact/near duplicates (corpus in
+tests/hostile_corpora.py::build_hostile_emb).
 
 At corpus scale these are routine (failed embedding calls, overflowed
 upstream math, padding rows). The round-4 sweep found 11 defects: the
@@ -20,21 +21,14 @@ NaN outputs or NULL codes (try_cast), never a crash.
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from trino_demo_spark import parity_llm  # noqa: F401  (registers entries)
 from trino_demo_spark import parity_ml  # noqa: F401  (registers entries)
 from trino_demo_spark.parity import PARITY
 
-from .conftest import SF_SMOKE
-from .test_parity import _canon
-
-DIM = 64
+from .hostile_corpora import build_hostile_emb
+from .oracle import duck_views, oracle_mismatch
 
 HOSTILE_GATED = [
     "llm_similarity_topk",
@@ -60,106 +54,21 @@ HOSTILE_GATED = [
     "ml_logreg",
 ]
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def _hostile_vectors():
-    rng = np.random.RandomState(7)
-
-    def norm(v):
-        return (v / np.linalg.norm(v)).astype(np.float32)
-
-    vecs = [norm(rng.randn(DIM)) for _ in range(30)]
-    hostile = [
-        np.zeros(DIM, dtype=np.float32),          # zero norm
-        np.full(DIM, np.nan, dtype=np.float32),   # all NaN
-        None,                                     # NULL cell
-        np.full(DIM, 1e30, dtype=np.float32),     # huge magnitude
-        np.full(DIM, 1e-40, dtype=np.float32),    # float32 denormal
-        np.full(DIM, -0.0, dtype=np.float32),     # negative zero
-    ]
-    nan1 = norm(rng.randn(DIM)); nan1[7] = np.nan
-    inf1 = norm(rng.randn(DIM)); inf1[3] = np.inf
-    ninf = norm(rng.randn(DIM)); ninf[5] = -np.inf
-    hostile += [nan1, inf1, ninf]
-    # ragged-but-finite vectors (schema drift): every component is a
-    # clean float, only the length is wrong — the case only the dim
-    # contract catches (a NaN-style guard passes these through into
-    # NULL-padded zip_with garbage / Arrow vstack crashes)
-    hostile.append(norm(rng.randn(DIM - 1)))      # truncated (63)
-    hostile.append(norm(rng.randn(DIM + 1)))      # over-length (65)
-    # SQL-NULL component (partial upstream write): the engine's forall
-    # yields NULL → dropped; the oracle's list_filter must test
-    # `x IS NULL OR NOT isfinite(x)` — bare isfinite(NULL) is NULL and
-    # DuckDB would silently skip the element, keeping the row
-    withnull = [float(x) for x in norm(rng.randn(DIM))]
-    withnull[11] = None
-    hostile.append(withnull)
-    hostile.append(vecs[0].copy())                # exact duplicate
-    nd = vecs[1].copy(); nd[0] += np.float32(1e-7)
-    hostile.append(nd)                            # near duplicate
-    return vecs + hostile
-
 
 @pytest.fixture(scope="module")
 def hostile_emb_sf(tmp_path_factory):
-    base = tmp_path_factory.mktemp("hostile_emb")
-    for t in TABLES:
-        if t == "embeddings":
-            continue
-        os.symlink(f"{SF_SMOKE}/{t}.parquet", str(base / f"{t}.parquet"))
-    vecs = _hostile_vectors()
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(range(len(vecs)), pa.int64()),
-            "embedding": pa.array(
-                [
-                    None
-                    if v is None
-                    else [None if x is None else float(x) for x in v]
-                    for v in vecs
-                ],
-                pa.list_(pa.float32()),
-            ),
-            "label": pa.array(
-                [i % 10 for i in range(len(vecs))], pa.int32()
-            ),
-        }
-    )
-    pq.write_table(tbl, str(base / "embeddings.parquet"))
-    return str(base)
+    return build_hostile_emb(str(tmp_path_factory.mktemp("hostile_emb")))
 
 
 @pytest.fixture(scope="module")
 def hostile_emb_duck(hostile_emb_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{hostile_emb_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(hostile_emb_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", HOSTILE_GATED)
 def test_hostile_embeddings_parity(name, spark, hostile_emb_sf, hostile_emb_duck):
     p = PARITY[name]
     spdf = p.fn(spark, hostile_emb_sf).toPandas()
-    dpdf = hostile_emb_duck.sql(p.sql).df()
-    assert sorted(spdf.columns) == sorted(dpdf.columns)
-    assert len(spdf) == len(dpdf), f"{name}: {len(spdf)} vs {len(dpdf)} rows"
-    _, rows_s = _canon(spdf)
-    _, rows_d = _canon(dpdf)
-    mismatches = [(rs, rd) for rs, rd in zip(rows_s, rows_d) if rs != rd]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} canonical-row mismatches on hostile "
-        f"embeddings; first: {mismatches[:2]}"
-    )
-
-
+    miss = oracle_mismatch(spdf, hostile_emb_duck.sql(p.sql).df())
+    assert miss is None, f"{name} on hostile embeddings: {miss}"

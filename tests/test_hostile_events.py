@@ -3,7 +3,8 @@ operators must survive and match the DuckDB oracle on an adversarial
 events table — exact session-gap boundaries, duplicate (user, ts)
 pairs, NULL ts/user_id/event_type/value, NaN/±Inf/1e308 values,
 epoch-0 / pre-1970 / far-future timestamps, malformed props JSON,
-unordered file layout (corpus in tests/hostile_corpora.py).
+unordered file layout (corpus in
+tests/hostile_corpora.py::build_hostile_events).
 
 The round-4 sweep over all 51 events-only oracle queries found 25
 defects: 6 crashes (applyInPandas int(NaN) on a NULL-user group,
@@ -44,8 +45,8 @@ from trino_demo_spark import parity_llm  # noqa: F401  (registers entries)
 from trino_demo_spark import parity_ml  # noqa: F401  (registers entries)
 from trino_demo_spark.parity import PARITY
 
-from .hostile_corpora import TABLES, build_hostile_events
-from .test_parity import _canon
+from .hostile_corpora import build_hostile_events
+from .oracle import duck_views, oracle_mismatch
 
 # every query the round-4 sweep found defective, now pinned green
 # (stream_rollup_mv runs a real multi-batch streaming query — covered
@@ -85,32 +86,16 @@ def hostile_ev_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def hostile_ev_duck(hostile_ev_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{hostile_ev_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(hostile_ev_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", HOSTILE_GATED)
 def test_hostile_events_parity(name, spark, hostile_ev_sf, hostile_ev_duck):
     p = PARITY[name]
     spdf = p.fn(spark, hostile_ev_sf).toPandas()
-    dpdf = hostile_ev_duck.sql(p.sql).df()
-    assert sorted(spdf.columns) == sorted(dpdf.columns)
-    assert len(spdf) == len(dpdf), f"{name}: {len(spdf)} vs {len(dpdf)} rows"
-    _, rows_s = _canon(spdf)
-    _, rows_d = _canon(dpdf)
-    mismatches = [(rs, rd) for rs, rd in zip(rows_s, rows_d) if rs != rd]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} canonical-row mismatches on hostile "
-        f"events; first: {mismatches[:2]}"
-    )
+    miss = oracle_mismatch(spdf, hostile_ev_duck.sql(p.sql).df())
+    assert miss is None, f"{name} on hostile events: {miss}"
 
 
 def test_session_gap_boundary_semantics(spark):

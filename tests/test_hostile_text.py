@@ -1,7 +1,8 @@
 """Hostile-corpus differential gate: text operators must match the
 DuckDB oracle bit-for-bit on adversarial documents — control chars,
 backslashes, quotes, NBSP/zero-width/unicode special-casing, empty and
-whitespace-only strings, huge tokens, and NULL text.
+whitespace-only strings, huge tokens, and NULL text (corpus in
+tests/hostile_corpora.py::build_hostile_docs).
 
 At 100 TB every one of these shapes occurs: scraped corpora carry
 control bytes and NBSP, JSON-breaking quotes/backslashes, and null
@@ -20,52 +21,14 @@ for CI at the value added per run).
 
 from __future__ import annotations
 
-import os
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from trino_demo_spark import parity_llm  # noqa: F401  (registers entries)
 from trino_demo_spark import parity_ml  # noqa: F401  (registers entries)
 from trino_demo_spark.parity import PARITY
 
-from .conftest import SF_SMOKE
-from .test_parity import _canon
-
-HOSTILE_TEXTS = [
-    "plain ordinary text the quick fox",
-    "backslash C:\\path\\to\\file and trailing \\",
-    'quotes "double" and \'single\' and `tick`',
-    "tab\tseparated\twords here",
-    "newline\nsplit\nlines end",
-    "carriage\rreturn mix\r\n windows",
-    "control\x01chars\x02embedded\x1fhere",
-    "bell\x07and backspace\x08and formfeed\x0c",
-    "del char \x7f stays",
-    "nbsp\u00a0between\u00a0words wide",
-    "unicode caf\u00e9 stra\u00dfe \u4e2d\u6587\u6587\u6863 \U0001f680 rocket",
-    "combining a\u0301ccent e\u0301toile marks",
-    "",
-    " ",
-    "   \n\t  ",
-    "single",
-    "x" * 5000,
-    ("dup dup dup " * 40).strip(),
-    "1234 5678 90 42 007 3.14159",
-    ".,;:!? .,;:!? punctuation only",
-    "the a and of to the a and of to stopwords heavy",
-    'json breaker {"key": "val\\ue"} end',
-    "sql 'injection' -- attempt; DROP TABLE x;",
-    "mixed\u00a0nbsp and\ttab and\nnewline and \\ slash",
-    "trailing newline ends here\n",
-    "\nleading newline starts",
-    "repeat " + "token " * 200,
-    "MiXeD CaSe \u00dcPPER lower \u1e9eharp",
-    "emoji run \U0001f600\U0001f601\U0001f602 done",
-    "zero\u200bwidth\u200bspace joined",
-    None,  # failed upstream fetch — the case that crashed 2 operators
-]
+from .hostile_corpora import build_hostile_docs
+from .oracle import duck_views, oracle_mismatch
 
 # The 8 queries the sweep flagged (now fixed) + the core text surface.
 HOSTILE_GATED = [
@@ -94,66 +57,23 @@ HOSTILE_GATED = [
     "llm_tokenizer_apply",
 ]
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 
 @pytest.fixture(scope="module")
 def hostile_sf(tmp_path_factory):
     """Testdata mirror with `documents` replaced by the hostile corpus
     (other tables symlinked — only documents varies)."""
-    base = tmp_path_factory.mktemp("hostiledata")
-    for t in TABLES:
-        if t == "documents":
-            continue
-        os.symlink(f"{SF_SMOKE}/{t}.parquet", str(base / f"{t}.parquet"))
-    langs = ["en", "de", "fr", "es", "zh"]
-    n = len(HOSTILE_TEXTS)
-    tbl = pa.table(
-        {
-            "doc_id": pa.array(range(n), pa.int64()),
-            "text": pa.array(HOSTILE_TEXTS, pa.string()),
-            "lang": pa.array([langs[i % 5] for i in range(n)], pa.string()),
-            "source": pa.array([f"src{i % 20}" for i in range(n)], pa.string()),
-            "n_chars": pa.array(
-                [len(t) if t is not None else 0 for t in HOSTILE_TEXTS],
-                pa.int64(),
-            ),
-        }
-    )
-    pq.write_table(tbl, str(base / "documents.parquet"))
-    return str(base)
+    return build_hostile_docs(str(tmp_path_factory.mktemp("hostiledata")))
 
 
 @pytest.fixture(scope="module")
 def hostile_duck(hostile_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{hostile_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(hostile_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", HOSTILE_GATED)
 def test_hostile_corpus_parity(name, spark, hostile_sf, hostile_duck):
     p = PARITY[name]
     spdf = p.fn(spark, hostile_sf).toPandas()
-    dpdf = hostile_duck.sql(p.sql).df()
-    assert sorted(spdf.columns) == sorted(dpdf.columns)
-    assert len(spdf) == len(dpdf), f"{name}: {len(spdf)} vs {len(dpdf)} rows"
-    _, rows_s = _canon(spdf)
-    _, rows_d = _canon(dpdf)
-    mismatches = [
-        (rs, rd) for rs, rd in zip(rows_s, rows_d) if rs != rd
-    ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} canonical-row mismatches on the "
-        f"hostile corpus; first: {mismatches[:2]}"
-    )
+    miss = oracle_mismatch(spdf, hostile_duck.sql(p.sql).df())
+    assert miss is None, f"{name} on the hostile corpus: {miss}"

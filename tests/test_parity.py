@@ -1,20 +1,12 @@
 """Local replica of the driver's correctness gate: run every PARITY query
-on Spark and its oracle SQL on DuckDB over the same parquet, compare
-row count, column names, and STRING-CANONICAL values.
-
-The driver canonicalizes both result frames at the pandas level —
-sort columns by name, stringify every cell (astype(str)-style), sort
-rows, hash. That makes the gate sensitive to dtype *representation*,
-not just value: Decimal('297175.00') vs float 297175.0 and int64 66
-vs float64 66.0 are MISMATCHES even though they compare numerically
-equal (exactly what cost 5 green rows in CORRECTNESS_r02). This test
-reproduces that discipline bit-for-bit so representation skew is
-caught locally before the driver sees it.
+on Spark and its oracle SQL on DuckDB over the same parquet, and compare
+column names, row count and STRING-CANONICAL values with the shared
+harness in tests/oracle.py (the driver's canonicalizer, reproduced
+there, is sensitive to dtype representation, not just value).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from trino_demo_spark.parity import PARITY
@@ -22,55 +14,18 @@ import trino_demo_spark.parity_llm  # noqa: F401  (registers llm entries)
 import trino_demo_spark.parity_ml  # noqa: F401  (registers ml entries)
 
 from .conftest import SF_PARITY
+from .oracle import oracle_mismatch
 
 ORACLE_CASES = sorted(n for n, p in PARITY.items() if p.sql is not None)
 ROWS_ONLY_CASES = sorted(n for n, p in PARITY.items() if p.sql is None)
 
 
-def _canon(pdf):
-    """Driver-faithful canonical frame: columns sorted by name, every
-    cell stringified via pandas astype(str) semantics, rows sorted.
-    Returns (sorted_columns, list-of-string-tuples)."""
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols]
-    str_cols = []
-    for c in cols:
-        s = pdf[c]
-        if s.dtype == object and len(s) and isinstance(
-            s.dropna().iloc[0] if s.dropna().size else None, np.ndarray
-        ):
-            # array cell: stringify elementwise (list-style, engine-neutral)
-            str_cols.append(s.map(lambda a: str(list(a)) if a is not None else "None"))
-        else:
-            str_cols.append(s.astype(str))
-    rows = sorted(zip(*str_cols)) if str_cols else []
-    return cols, rows
-
-
 @pytest.mark.parametrize("name", ORACLE_CASES)
 def test_oracle_parity(name, spark, duck):
     p = PARITY[name]
-    sdf = p.fn(spark, SF_PARITY)
-    spdf = sdf.toPandas()
-    dpdf = duck.sql(p.sql).df()
-
-    assert sorted(spdf.columns) == sorted(dpdf.columns), (
-        f"{name}: column mismatch {list(spdf.columns)} vs {list(dpdf.columns)}"
-    )
-    assert len(spdf) == len(dpdf), (
-        f"{name}: row count {len(spdf)} vs {len(dpdf)}"
-    )
-    _, rows_s = _canon(spdf)
-    _, rows_d = _canon(dpdf)
-    mismatches = [
-        (i, rs, rd)
-        for i, (rs, rd) in enumerate(zip(rows_s, rows_d))
-        if rs != rd
-    ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} canonical-row mismatches "
-        f"(driver hashes these strings); first: {mismatches[:3]}"
-    )
+    spdf = p.fn(spark, SF_PARITY).toPandas()
+    miss = oracle_mismatch(spdf, duck.sql(p.sql).df())
+    assert miss is None, f"{name}: {miss}"
 
 
 # Every registry entry currently carries oracle SQL, so ROWS_ONLY_CASES

@@ -591,6 +591,20 @@ def test_bm25_topk_no_global_sort(spark):
     assert "BroadcastExchange" in plan
 
 
+def test_simhash_bands_compute_fingerprint_once_per_side(spark):
+    """simhash_near_pairs builds its 4 bands with one explode over the
+    fingerprints: the executed plan carries the 64-bit vote projection
+    at most twice (once per self-join side), so documents are read and
+    hashed once per side, not once per band."""
+    from trino_demo_spark.llm import dedup
+
+    df = dedup.simhash_near_pairs(load_table(spark, "documents", SF_SMOKE))
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    votes = [ln for ln in final.splitlines() if "Project" in ln and "aggregate(" in ln]
+    assert 1 <= len(votes) <= 2, final
+
+
 def test_perplexity_lm_join_copartitions(spark):
     """Perplexity scoring joins doc bigrams against the LM on the bigram
     key — a plain equi-join on (w1, w2), never a cartesian product.

@@ -556,15 +556,21 @@ def simhash_near_pairs(
     16-bit band equality (pigeonhole: distance ≤ 3 guarantees a matching
     band of 4; wider distances are probabilistic)."""
     s = simhash(df, id_col, text_col)
-    bands = None
-    for b in range(4):
-        band = s.select(
-            "id",
-            "simhash",
-            F.lit(b).alias("band"),
-            F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bh"),
-        )
-        bands = band if bands is None else bands.unionByName(band)
+    # All 4 bands in ONE pass over the fingerprints (explode of a literal
+    # band array, as in minhash_lsh_pairs): unioned per-band scans would
+    # each recompute the SimHash from the documents.
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bh"),
+            )
+            for b in range(4)
+        ]
+    )
+    bands = s.select("id", "simhash", F.explode(band_arr).alias("bb")).select(
+        "id", "simhash", "bb.band", "bb.bh"
+    )
     a, b_ = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(

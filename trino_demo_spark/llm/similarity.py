@@ -676,9 +676,10 @@ def _kmeans_moments(df: DataFrame, vec_col: str, centroids) -> DataFrame:
     )
 
 
-def _argmin_centroid(vec_col: str, centroids_lit):
+def _argmin_centroid(vec_col: str):
     """Index of the nearest centroid (L2) for a vector column, computed
-    with array expressions against a broadcast literal centroid array.
+    with array expressions against the `__cents` centroid-array column
+    the caller attaches (a literal, so it is the same on every row).
     Kept for QUERY-side probe computation (a handful of rows); corpus-
     side assignment goes through centroid_assign_udf/_kmeans_moments."""
     dist = L2SQ.format(a="element_at(__cents, i + 1)", b=vec_col)

@@ -3455,7 +3455,7 @@ def ml_kmeans_profile(spark, sf_dir):
             *[F.array(*[F.lit(float(x)) for x in row]) for row in centroids]
         )
         assigned = emb.withColumn("__cents", cents_lit).withColumn(
-            "cluster", similarity._argmin_centroid("embedding", None)
+            "cluster", similarity._argmin_centroid("embedding")
         )
         d2 = F.aggregate(
             F.zip_with(

@@ -454,9 +454,7 @@ def ml_feature_hashing(spark, sf_dir):
     return ml.feature_hash(_t(spark, sf_dir, "documents"))
 
 
-@parity(
-    "ml_als_recommend",
-    sql="""
+_ALS_VERDICT_SQL = """
     WITH r AS (
       -- rating-matrix ingest guard: NULL user/item rows have no cell to
       -- land in (NULL item is an unusable map key in the engine's item-
@@ -473,18 +471,14 @@ def ml_feature_hashing(spark, sf_dir):
            (ROUND(stddev_pop(rating) + 1e-9, 4) + 0.0) AS baseline_rmse,
            TRUE AS als_beats_baseline
     FROM r
-    """,
-    doc="ALS matrix-factorization recommender (k=2, 5 alternations) on "
-    "the implicit user x event-type rating matrix, verified through "
-    "the repo's verdict pattern: the oracle states the exactly-"
-    "computable facts (matrix dimensions and the global-mean "
-    "predictor's RMSE = stddev of ratings) and the engine must "
-    "additionally certify its factorization beats that baseline. The "
-    "user half-step is pure engine: one keyed aggregate + closed-form "
-    "2x2 ridge solve in column arithmetic (no UDF); driver state is "
-    "n_items x 2 floats (ml.py::als_fit).",
-)
-def ml_als_recommend(spark, sf_dir):
+    """
+
+
+def _als_verdict(spark, sf_dir, fit, rmse_of):
+    """The two ALS entries' shared verdict body: ingest the guarded
+    rating matrix, run `fit(ratings)` -> (q, users) and
+    `rmse_of(ratings, q, users)` while it is persisted, and certify
+    the fit beats the global-mean baseline (_ALS_VERDICT_SQL)."""
     ev = _t(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
         & ((F.col("value") - F.col("value")) == F.lit(0.0))
@@ -496,8 +490,8 @@ def ml_als_recommend(spark, sf_dir):
     ).agg(F.avg("value").alias("rating"))
     ratings = ratings.persist()
     try:
-        q, users = ml.als_fit(ratings)
-        rmse = ml.als_rmse(ratings, q, users)
+        q, users = fit(ratings)
+        rmse = rmse_of(ratings, q, users)
         # materialize the verdict row while the cache is alive — the
         # returned frame is collected by the harness AFTER this
         # function exits, so a lazy aggregate would recompute ratings
@@ -539,21 +533,25 @@ def ml_als_recommend(spark, sf_dir):
 
 
 @parity(
+    "ml_als_recommend",
+    sql=_ALS_VERDICT_SQL,
+    doc="ALS matrix-factorization recommender (k=2, 5 alternations) on "
+    "the implicit user x event-type rating matrix, verified through "
+    "the repo's verdict pattern: the oracle states the exactly-"
+    "computable facts (matrix dimensions and the global-mean "
+    "predictor's RMSE = stddev of ratings) and the engine must "
+    "additionally certify its factorization beats that baseline. The "
+    "user half-step is pure engine: one keyed aggregate + closed-form "
+    "2x2 ridge solve in column arithmetic (no UDF); driver state is "
+    "n_items x 2 floats (ml.py::als_fit).",
+)
+def ml_als_recommend(spark, sf_dir):
+    return _als_verdict(spark, sf_dir, ml.als_fit, ml.als_rmse)
+
+
+@parity(
     "ml_als_recommend_dist",
-    sql="""
-    WITH r AS (
-      SELECT user_id, event_type AS item, AVG(value) AS rating
-      FROM events
-      WHERE value IS NOT NULL AND isfinite(value)
-        AND user_id IS NOT NULL AND event_type IS NOT NULL
-      GROUP BY 1, 2
-    )
-    SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(COUNT(DISTINCT item) AS BIGINT) AS n_items,
-           (ROUND(stddev_pop(rating) + 1e-9, 4) + 0.0) AS baseline_rmse,
-           TRUE AS als_beats_baseline
-    FROM r
-    """,
+    sql=_ALS_VERDICT_SQL,
     doc="Fully distributed ALS twin (VERDICT r9 watch-list): both factor "
     "frames stay DataFrames — no driver-side item map — and BOTH "
     "half-steps solve the 2x2 ridge normal equations in closed-form "
@@ -568,49 +566,8 @@ def ml_als_recommend(spark, sf_dir):
     "path.",
 )
 def ml_als_recommend_dist(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-        & ((F.col("value") - F.col("value")) == F.lit(0.0))
-        & F.col("user_id").isNotNull()
-        & F.col("event_type").isNotNull()
-    )
-    ratings = ev.groupBy(
-        "user_id", F.col("event_type").alias("item")
-    ).agg(F.avg("value").alias("rating"))
-    ratings = ratings.persist()
-    try:
-        q, users = ml.als_fit_distributed(ratings)
-        rmse = ml.als_rmse_distributed(ratings, q, users)
-        row = ratings.agg(
-            F.countDistinct("user_id").alias("n_users"),
-            F.countDistinct("item").alias("n_items"),
-            r_(F.stddev_pop("rating"), 4).alias("baseline_rmse"),
-        ).first()
-    finally:
-        ratings.unpersist()
-    base = row["baseline_rmse"]
-    import math
-
-    # same degenerate set as ml_als_recommend, incl. the base <= 1e-9
-    # zero-variance case (ADVICE r10)
-    degenerate = (
-        rmse is None
-        or base is None
-        or not math.isfinite(float(base))
-        or not math.isfinite(float(rmse))
-        or float(base) <= 1e-9
-    )
-    beats = True if degenerate else bool(rmse < base + 1e-9)
-    return spark.createDataFrame(
-        [
-            (
-                row["n_users"],
-                row["n_items"],
-                float(base) if base is not None else None,
-                beats,
-            )
-        ],
-        "n_users long, n_items long, baseline_rmse double, als_beats_baseline boolean",
+    return _als_verdict(
+        spark, sf_dir, ml.als_fit_distributed, ml.als_rmse_distributed
     )
 
 

@@ -261,34 +261,7 @@ def stream_stream_join(
     watermarked so the join state is bounded: a click can be dropped from
     state once no purchase within `within` can still arrive — the
     mechanics Trino's batch-over-log model cannot express."""
-    c = (
-        clicks.withWatermark("ts", within)
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    p = (
-        purchases.withWatermark("ts", within)
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-    )
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") < F.col("purchase_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}"))
-    )
-    return c.join(p, cond).select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "click_id",
-        "purchase_value",
-    )
+    return _attribution_join(clicks, purchases, within, outer=False)
 
 
 def stream_stream_left_join(
@@ -311,6 +284,16 @@ def stream_stream_left_join(
     null-emission behavior itself is pinned in tests/test_streaming.py
     with a multi-batch file source whose final batch advances the
     watermark past every real event."""
+    return _attribution_join(clicks, purchases, within, outer=True)
+
+
+def _attribution_join(
+    clicks: DataFrame, purchases: DataFrame, within: str, outer: bool
+) -> DataFrame:
+    """Shared core of the two attribution joins: both sides watermarked
+    by `within`, a same-user click in the `within` before the purchase,
+    one output row shape. Inner joins clicks to purchases; `outer`
+    makes purchases the LEFT (outer, state-held) side."""
     c = clicks.withWatermark("ts", within).select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
@@ -323,12 +306,12 @@ def stream_stream_left_join(
         F.col("value").alias("purchase_value"),
     )
     cond = (
-        (F.col("p_user") == F.col("c_user"))
+        (F.col("c_user") == F.col("p_user"))
         & (F.col("click_ts") < F.col("purchase_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}"))
     )
-    # purchases are the LEFT (outer, state-held) side
-    return p.join(c, cond, "leftOuter").select(
+    joined = p.join(c, cond, "leftOuter") if outer else c.join(p, cond)
+    return joined.select(
         F.col("p_user").alias("user_id"),
         "purchase_id",
         "click_id",
