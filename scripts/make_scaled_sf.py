@@ -31,21 +31,9 @@ import os
 
 import duckdb
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-# table -> {column: stride-domain}; columns sharing a domain shift by
-# the same stride so FK joins stay aligned across replicas.
+# table -> {column: stride-domain}, one entry per testdata table;
+# columns sharing a domain shift by the same stride so FK joins stay
+# aligned across replicas.
 KEY_DOMAINS: dict[str, dict[str, str]] = {
     "region": {},
     "nation": {},
@@ -92,10 +80,9 @@ def main() -> None:
         ).fetchone()
         strides[dom] = int(mx) + 1
 
-    for tab in TABLES:
+    for tab, keyed in KEY_DOMAINS.items():
         src = f"{args.src}/{tab}.parquet"
         dst = f"{args.dst}/{tab}.parquet"
-        keyed = KEY_DOMAINS[tab]
         if not keyed:  # fixed dims: plain copy
             con.sql(f"COPY (SELECT * FROM read_parquet('{src}')) TO '{dst}' (FORMAT PARQUET)")
             continue

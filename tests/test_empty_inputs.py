@@ -24,6 +24,7 @@ import pytest
 from trino_demo_spark import parity_llm  # noqa: F401  (registers entries)
 from trino_demo_spark import parity_ml  # noqa: F401  (registers entries)
 from trino_demo_spark.parity import PARITY
+from trino_demo_spark.registry import TABLE_NAMES
 
 # The 15 queries the round-4 empty-input sweep crashed, each now
 # expected to return a zero-row frame with its normal-path schema
@@ -47,18 +48,12 @@ EMPTY_HARDENED = [
     "sink_parquet_partitioned",
 ]
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
 @pytest.fixture(scope="module")
 def empty_sf(spark, tmp_path_factory):
     """Zero-row parquet mirrors of every testdata table (schema kept)."""
     base = tmp_path_factory.mktemp("emptydata")
     src = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-    for t in TABLES:
+    for t in TABLE_NAMES:
         spark.read.parquet(f"{src}/{t}.parquet").limit(0).coalesce(
             1
         ).write.mode("overwrite").parquet(str(base / f"{t}.parquet"))

@@ -190,11 +190,6 @@ def test_corpus_clean_stream_matches_batch_on_hostile(spark, tmp_path_factory):
     characters, huge tokens, unicode edge cases) — content-identified,
     so a divergence in either pipeline's NULL/quality policy breaks
     this test."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     import trino_demo_spark.parity_llm  # noqa: F401  (registers entries)
     from trino_demo_spark.parity import PARITY
     from trino_demo_spark.streaming.kafka_shape import (
@@ -202,38 +197,11 @@ def test_corpus_clean_stream_matches_batch_on_hostile(spark, tmp_path_factory):
         stream_documents,
     )
 
-    from .conftest import SF_SMOKE
-    from .test_hostile_text import HOSTILE_TEXTS
+    from .hostile_corpora import build_hostile_docs
 
-    base = tmp_path_factory.mktemp("hostile_docs_stream")
-    tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
-    for t in tables:
-        if t == "documents":
-            continue
-        os.symlink(f"{SF_SMOKE}/{t}.parquet", str(base / f"{t}.parquet"))
-    langs = ["en", "de", "fr", "es", "zh"]
-    n = len(HOSTILE_TEXTS)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(range(n), pa.int64()),
-                "text": pa.array(HOSTILE_TEXTS, pa.string()),
-                "lang": pa.array([langs[i % 5] for i in range(n)], pa.string()),
-                "source": pa.array([f"src{i % 20}" for i in range(n)], pa.string()),
-                "n_chars": pa.array(
-                    [len(t) if t is not None else 0 for t in HOSTILE_TEXTS],
-                    pa.int64(),
-                ),
-            }
-        ),
-        str(base / "documents.parquet"),
-    )
-
+    base = build_hostile_docs(str(tmp_path_factory.mktemp("hostile_docs_stream")))
     q = (
-        corpus_clean_stream(stream_documents(spark, str(base)))
+        corpus_clean_stream(stream_documents(spark, base))
         .writeStream.format("memory")
         .queryName("h_corpus_clean")
         .outputMode("append")
@@ -245,8 +213,8 @@ def test_corpus_clean_stream_matches_batch_on_hostile(spark, tmp_path_factory):
         r["content_hash"]
         for r in spark.sql("SELECT * FROM h_corpus_clean").collect()
     }
-    e2e = PARITY["e2e_llm_data_pipeline"].fn(spark, str(base))
-    docs = load_table(spark, "documents", str(base))
+    e2e = PARITY["e2e_llm_data_pipeline"].fn(spark, base)
+    docs = load_table(spark, "documents", base)
     batch = (
         e2e.select("doc_id")
         .join(docs, "doc_id")

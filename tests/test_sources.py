@@ -468,14 +468,10 @@ def test_all_sf_dirs_normalize_to_one_logical_schema(spark):
     every table to ONE logical schema across all three SF dirs, so a
     physical flip at any SF surfaces here as a named failure at round
     start instead of as 278 mysterious oracle mismatches."""
-    from trino_demo_spark.registry import load_table
+    from trino_demo_spark.registry import TABLE_NAMES, load_table
 
-    tables = (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split()
     dirs = [f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")]
-    for t in tables:
+    for t in TABLE_NAMES:
         schemas = {
             d: load_table(spark, t, d).schema.simpleString() for d in dirs
         }
