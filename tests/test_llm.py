@@ -1754,6 +1754,50 @@ def test_pq_codebooks_shape_and_determinism(spark, emb):
     assert len(b1) == 4 and len(b1[0]) == 8 and len(b1[0][0]) == 16
 
 
+def test_nearest_kernel_matches_brute_l2():
+    """The one nearest-centroid kernel: on integer-valued data (exact
+    float64 arithmetic, so dropping the row-constant ‖x‖² cannot move a
+    comparison) _nearest equals a brute Σ(x−c)² argmin and top-n, exact
+    ties pick the lowest centroid index, and _codes quantizes each
+    slice against its own codebook."""
+    import numpy as np
+
+    rng = np.random.default_rng(17)
+    X = rng.integers(-6, 7, size=(300, 5)).astype(np.float64)
+    C = rng.integers(-6, 7, size=(9, 5)).astype(np.float64)
+    d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+    for n in (1, 3, 9):
+        want = [sorted(range(len(C)), key=lambda i: (row[i], i))[:n] for row in d2]
+        assert similarity._nearest(X, C, n).tolist() == want
+    assert similarity._nearest(X, C)[:, 0].tolist() == d2.argmin(axis=1).tolist()
+    # planted exact ties: x=(1,0) is at squared distance 4 from (3,0),
+    # (1,2) and (-1,0), whose ‖c‖² differ; duplicate centroids 3 and 4
+    ties = np.asarray([[3.0, 0.0], [1.0, 2.0], [-1.0, 0.0], [9.0, 9.0], [9.0, 9.0]])
+    got = similarity._nearest(np.asarray([[1.0, 0.0], [9.0, 9.0]]), ties, 3)
+    assert got.tolist() == [[0, 1, 2], [3, 4, 1]]
+    books = np.stack([C[:, :2], C[:, 2:4]])
+    codes = similarity._codes(X, books, 2)
+    assert codes[:, :2].tolist() == similarity._nearest(X[:, :2], C[:, :2], 2).tolist()
+    assert codes[:, 2:].tolist() == similarity._nearest(X[:, 2:4], C[:, 2:4], 2).tolist()
+
+
+def test_pq_codebooks_one_pass_per_iteration(spark, emb):
+    """Every subspace codebook shares one Lloyd loop: pq_codebooks runs
+    as many Spark jobs for m=16 as for m=1, and at most 2 + iters (one
+    init collect, then one corpus pass per iteration)."""
+    sc = spark.sparkContext
+    jobs = {}
+    for m in (1, 16):
+        group = f"pq_codebooks_m{m}"
+        sc.setJobGroup(group, group)
+        try:
+            similarity.pq_codebooks(emb, m=m, iters=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[m] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[1] == jobs[16] <= 2 + 2, jobs
+
+
 def test_ivfpq_topk_recall(spark, emb):
     """IVF-PQ composition: coarse-list pruning caps recall (nprobe/k
     lists probed), PQ+re-rank must not degrade it further — require

@@ -22,18 +22,24 @@ Operators:
 Each stage the operators share exists once: _vectors (ingest guard, id
 and vector aliases, norm), _rounded_cosine and its numpy mirror
 _np_rounded_cosine (cosine + EPS, rounded), _rank_top_k (the row_number
-tail over (sim desc, n_id)), _probe (IVF list probing), _pq_fit and
-_adc_refine (PQ codes, lookup tables, ADC score and exact re-rank), and
-_collapsed_vectors (the identical-vector collapse of the near-dup ops,
-whose rep pairs dedup.member_pairs / dedup.member_edges finish).
+tail over (sim desc, n_id)), _nearest (the nearest-centroid kernel of
+every quantizer) with its two callers _lloyd (the one k-means loop of
+kmeans_fit and pq_codebooks) and nearest_udf (IVF lists and probes, PQ
+codes, the k-means profile), _partition_sums (the bounded per-partition
+moment pass of _lloyd and pca_fit), _pq_fit and _adc_refine (PQ lookup
+tables, ADC score and exact re-rank), and _collapsed_vectors (the
+identical-vector collapse of the near-dup ops, whose rep pairs
+dedup.member_pairs / dedup.member_edges finish).
 
 Arithmetic uses built-in higher-order array functions (zip_with /
 aggregate) in DOUBLE precision — JVM codegen, no Python UDF — except in
-the Arrow twins and the corpus-side centroid assignment, which run
-numpy over Arrow batches.
+the Arrow twins and the quantizer fits and assignments, which run numpy
+over Arrow batches.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
@@ -52,12 +58,6 @@ DOT = (
 NORM = (
     "sqrt(aggregate({a}, CAST(0 AS DOUBLE), "
     "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-)
-# Squared L2 distance (centroid assignment, IVF probing, PQ encoding).
-L2SQ = (
-    "aggregate(zip_with({a}, {b}, "
-    "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-    "CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
 )
 
 
@@ -613,85 +613,134 @@ def cosine_near_dup_edges_lsh(
     return member_edges(mem, rep_pairs, threshold)
 
 
-def centroid_assign_udf(centroids):
-    """Vectorized nearest-centroid (L2) assignment: one Arrow batch →
-    one numpy matmul (argmin over ||x||² − 2x·c + ||c||², with the
-    per-row ||x||² constant dropped). Replaces the interpreted
-    `_argmin_centroid` expression fold (k × dim ops per row) on
-    full-corpus assignment passes — measured 70% of ivf_topk at
-    sf1-equivalent. Ties break to the lowest index (np.argmin), same as
-    the fold's strict `<`."""
+def _nearest(X, C, n: int = 1):
+    """The nearest-centroid kernel of every quantizer: the indices of
+    the ``n`` nearest rows of centroid matrix ``C`` for each row of
+    ``X`` (rows × n, nearest first) by squared L2. The row-constant
+    ‖x‖² is dropped — the order is that of ‖c‖² − 2x·c, one matmul per
+    batch — and ties go to the lowest centroid index (stable sort)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    C = np.asarray(centroids, dtype=np.float64)
-    prof = (-2.0) * C.T
-    cc = (C * C).sum(axis=1)
-
-    def assign(v):
-        if v.empty:
-            return pd.Series([], dtype="int32")
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-        return pd.Series((X @ prof + cc[None, :]).argmin(axis=1).astype("int32"))
-
-    # no type hints on purpose: pandas is imported locally, so string
-    # annotations would not resolve in the module namespace — the
-    # hint-less form defaults to a scalar series→series pandas UDF.
-    return pandas_udf(assign, "int")
+    d = (C * C).sum(axis=1) - 2.0 * (X @ C.T)
+    return np.argsort(d, axis=1, kind="stable")[:, :n]
 
 
-def _kmeans_moments(df: DataFrame, vec_col: str, centroids) -> DataFrame:
-    """One mapInPandas pass over the corpus: blocked-matmul argmin
-    assignment AND per-batch partial (cluster, count, sum-vector)
-    moments. The shuffle then carries ~partitions × k rows instead of
-    rows × dim posexploded values, and the driver only ever sees the
-    k×dim reduced sums."""
+def _codes(X, books, n: int = 1):
+    """_nearest against m codebooks at once: book j (k × w) quantizes
+    columns [j·w, (j+1)·w) of ``X``. Returns rows × (m·n) indices, the n
+    of book 0 first."""
     import numpy as np
-    import pandas as pd
 
-    C = np.asarray(centroids, dtype=np.float64)
-    prof = (-2.0) * C.T
-    cc = (C * C).sum(axis=1)
-
-    def gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
-            cl = (X @ prof + cc[None, :]).argmin(axis=1)
-            uniq = np.unique(cl)
-            yield pd.DataFrame(
-                {
-                    "cluster": uniq.astype("int32"),
-                    "cnt": [int((cl == c).sum()) for c in uniq],
-                    "sums": [X[cl == c].sum(axis=0).tolist() for c in uniq],
-                }
-            )
-
-    return df.select(vec_col).mapInPandas(
-        gen, "cluster int, cnt long, sums array<double>"
+    w = books.shape[2]
+    return np.hstack(
+        [_nearest(X[:, j * w : (j + 1) * w], C, n) for j, C in enumerate(books)]
     )
 
 
-def _argmin_centroid(vec_col: str):
-    """Index of the nearest centroid (L2) for a vector column, computed
-    with array expressions against the `__cents` centroid-array column
-    the caller attaches (a literal, so it is the same on every row).
-    Kept for QUERY-side probe computation (a handful of rows); corpus-
-    side assignment goes through centroid_assign_udf/_kmeans_moments."""
-    dist = L2SQ.format(a="element_at(__cents, i + 1)", b=vec_col)
-    # argmin via aggregate over the centroid index sequence
-    return F.expr(
-        "aggregate(sequence(0, size(__cents) - 1), named_struct('i', -1, 'd', CAST('Infinity' AS DOUBLE)), "
-        "(best, i) -> CASE WHEN "
-        + dist
-        + " < best.d THEN named_struct('i', i, 'd', "
-        + dist
-        + ") ELSE best END).i"
-    )
+def _arrow_matrix(col):
+    """float64 (rows × width) matrix of a non-empty Arrow list column of
+    equal-length vectors. A ragged column raises: pass ``dim`` to drop
+    ragged rows at ingest."""
+    import pyarrow as pa
+
+    width = len(col[0])
+    flat = col.cast(pa.list_(pa.float64(), width)).flatten().to_numpy()
+    return flat.reshape(-1, width)
+
+
+def nearest_udf(books, n: int = 1):
+    """The corpus- and query-side assignment of every quantizer: an
+    Arrow UDF mapping a vector column to array<int>, the n nearest
+    centroid indices (_codes) of each of the m codebooks, book 0 first.
+    One book with n=1 is the IVF list / k-means cluster (take ``[0]``),
+    n=nprobe the IVF probes, m books the PQ codes."""
+    import numpy as np
+    import pyarrow as pa
+
+    B = np.asarray(books, dtype=np.float64)
+    out_type = pa.list_(pa.int32())
+
+    def assign(col):
+        if len(col) == 0:
+            return pa.array([], out_type)
+        idx = _codes(_arrow_matrix(col), B, n).astype(np.int32)
+        return pa.FixedSizeListArray.from_arrays(idx.ravel(), idx.shape[1]).cast(
+            out_type
+        )
+
+    return F.arrow_udf(assign, "array<int>")
+
+
+def _partition_sums(df: DataFrame, vec_col: str, moments):
+    """Σ over the corpus of ``moments(X)``, a list of fixed-shape numpy
+    arrays computed from one Arrow batch's (rows × width) float64
+    matrix. One map-only mapInArrow pass adds up all batches of a
+    partition and yields once per partition, so the one collect carries
+    numPartitions × len(moments) rows whatever the corpus size; the
+    partials are reduced in numpy on the driver. Returns the flattened
+    sums (callers reshape), or None for an empty corpus."""
+    import numpy as np
+    import pyarrow as pa
+
+    def partials(batches):
+        acc = None
+        for b in batches:
+            if b.num_rows:
+                parts = moments(_arrow_matrix(b.column(0)))
+                acc = parts if acc is None else [a + p for a, p in zip(acc, parts)]
+        if acc is not None:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(range(len(acc)), pa.int32()),
+                    pa.array(
+                        [np.ravel(a).astype(np.float64) for a in acc],
+                        pa.list_(pa.float64()),
+                    ),
+                ],
+                names=["i", "v"],
+            )
+
+    rows = df.select(vec_col).mapInArrow(partials, "i int, v array<double>").collect()
+    if not rows:
+        return None
+    sums = [0.0] * (1 + max(r["i"] for r in rows))
+    for r in rows:
+        sums[r["i"]] = sums[r["i"]] + np.asarray(r["v"])
+    return sums
+
+
+def _lloyd(df: DataFrame, vec_col: str, id_col: str, k: int, iters: int, m: int):
+    """Deterministic Lloyd's k-means of m codebooks at once, book j over
+    columns [j·w, (j+1)·w) with w = width // m (m=1: the whole vector).
+    Init is the first k vectors by id, one collect, sliced per book.
+    Each iteration is one _partition_sums pass that assigns every slice
+    with _nearest and accumulates (slice, cluster) counts and sums; the
+    driver divides, and an empty cluster keeps its previous centroid.
+    Returns an m × k' × w array (k' = min(k, corpus size)), or None for
+    an empty corpus."""
+    import numpy as np
+
+    init = df.orderBy(id_col).limit(k).select(vec_col).collect()
+    if not init:
+        return None
+    X0 = np.asarray([r[0] for r in init], dtype=np.float64)
+    w = X0.shape[1] // m
+    books = X0[:, : m * w].reshape(len(X0), m, w).transpose(1, 0, 2)
+    kk = len(X0)
+
+    def moments(X, books):
+        idx = (_codes(X, books) + kk * np.arange(m)).ravel()
+        sums = np.zeros((m * kk, w))
+        np.add.at(sums, idx, X[:, : m * w].reshape(-1, w))
+        return [np.bincount(idx, minlength=m * kk), sums]
+
+    for _ in range(iters):
+        cnt, sums = _partition_sums(df, vec_col, partial(moments, books=books))
+        cnt = cnt.reshape(m, kk, 1)
+        books = np.where(
+            cnt > 0, sums.reshape(m, kk, w) / np.maximum(cnt, 1), books
+        )
+    return books
 
 
 def kmeans_fit(
@@ -702,52 +751,18 @@ def kmeans_fit(
     iters: int = 3,
     dim: int | None = None,
 ) -> list[list[float]]:
-    """Deterministic Lloyd's k-means over the embedding column, entirely
-    with DataFrame aggregates: init = first k vectors by id; each
-    iteration assigns via broadcast centroid literals (array math, no UDF)
-    and recomputes centroids with posexplode + (cluster, dim) avg. Only
-    the k×dim centroid matrix ever reaches the driver.
+    """Deterministic Lloyd's k-means over the embedding column: _lloyd
+    with one whole-vector codebook (first-k-by-id init, one corpus pass
+    and one bounded collect per iteration; only per-partition k×dim
+    count / sum partials reach the driver).
 
     This is the IVF coarse quantizer: at 100 TB, fit on a sample, then a
     single assignment pass partitions the corpus into k inverted lists.
     """
-    df = finite_vectors(df, vec_col, dim)
-    init = (
-        df.orderBy(id_col).limit(k).select(vec_col).collect()
-    )
-    centroids = [[float(x) for x in r[0]] for r in init if r[0] is not None]
-    if not centroids:
-        # Empty corpus (a legal outcome of an upstream filter at any
-        # scale): no centroids to fit. Callers short-circuit on [].
-        return []
-    for _ in range(iters):
-        parts = _kmeans_moments(df, vec_col, centroids)
-        counts = {
-            r["cluster"]: r["n"]
-            for r in parts.groupBy("cluster")
-            .agg(F.sum("cnt").alias("n"))
-            .collect()
-        }
-        sums = (
-            parts.select("cluster", F.posexplode("sums").alias("pos", "s"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("s").alias("s"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in sums:
-            by_cluster.setdefault(r["cluster"], {})[r["pos"]] = r["s"]
-        dim = len(centroids[0])
-        centroids = [
-            [
-                by_cluster[ci][d] / counts[ci]
-                if counts.get(ci)
-                else centroids[ci][d]
-                for d in range(dim)
-            ]
-            for ci in range(len(centroids))
-        ]
-    return centroids
+    books = _lloyd(finite_vectors(df, vec_col, dim), vec_col, id_col, k, iters, 1)
+    # Empty corpus (a legal outcome of an upstream filter at any scale):
+    # no centroids to fit. Callers short-circuit on [].
+    return [] if books is None else books[0].tolist()
 
 
 def _empty_topk(q: DataFrame) -> DataFrame:
@@ -759,23 +774,6 @@ def _empty_topk(q: DataFrame) -> DataFrame:
         F.col("q_id").alias("n_id"),
         F.lit(0.0).alias("sim"),
         F.lit(0).cast("long").alias("rank"),
-    )
-
-
-def _probe(q: DataFrame, centroids, nprobe: int) -> DataFrame:
-    """IVF list probing: add `probes`, the indices of each query's
-    nprobe nearest centroids — all distances computed, the nprobe
-    smallest kept (array sort over (dist, idx) structs)."""
-    dist = L2SQ.format(a="element_at(__cents, i + 1)", b="q_emb")
-    probes = F.expr(
-        "slice(transform(array_sort(transform(sequence(0, size(__cents) - 1), "
-        "i -> named_struct('d', " + dist + ", 'i', i))), s -> s.i), 1, "
-        + str(nprobe) + ")"
-    )
-    return (
-        q.withColumn("__cents", _array_lit(centroids))
-        .withColumn("probes", probes)
-        .drop("__cents")
     )
 
 
@@ -802,9 +800,12 @@ def ivf_topk(
     centroids = kmeans_fit(c, "n_emb", "n_id", k=num_centroids, iters=iters)
     if not centroids:
         return _empty_topk(q)
-    c = c.withColumn("cluster", centroid_assign_udf(centroids)("n_emb"))
-    q = _probe(q, centroids, nprobe).select(
-        "q_id", "q_emb", "q_norm", F.explode("probes").alias("cluster")
+    c = c.withColumn("cluster", nearest_udf([centroids])("n_emb")[0])
+    q = q.select(
+        "q_id",
+        "q_emb",
+        "q_norm",
+        F.explode(nearest_udf([centroids], nprobe)("q_emb")).alias("cluster"),
     )
     pairs = (
         c.join(F.broadcast(q), "cluster")
@@ -823,52 +824,32 @@ def pca_fit(
     """Distributed PCA fit over an embedding column — the dimensionality
     reducer in front of clustering / visualization / cheap ANN.
 
-    Scale shape: one mapInPandas pass computes per-partition moment
-    partials (count, sum vector, d×d Gram matrix flattened) with numpy
-    on Arrow batches; only `numPartitions` partial rows — each O(d²)
-    floats, data-size-independent — reach the driver, where the d×d
-    covariance eigendecomposition runs (d=64 → microseconds). Same
-    bounded-collect discipline as kmeans_fit above: the corpus itself
-    never leaves the executors, and the fit cost is one full scan.
+    Scale shape: one _partition_sums pass computes the moment partials
+    (count, sum vector, d×d Gram matrix) with numpy on Arrow batches;
+    only `numPartitions` partial rows per moment — each O(d²) floats,
+    data-size-independent — reach the driver, where the d×d covariance
+    eigendecomposition runs (d=64 → microseconds). Same bounded-collect
+    discipline as kmeans_fit above: the corpus itself never leaves the
+    executors, and the fit cost is one full scan.
 
     Sign convention for determinism: each component is flipped so its
     largest-|weight| coordinate is positive (ties → lowest index wins).
     Returns (mean[d], components[k][d] ordered by descending variance,
     explained_var[k])."""
     import numpy as np
-    import pandas as pd
 
-    df = finite_vectors(df, vec_col, dim)
-
-    def partials(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.vstack(pdf[vec_col].map(np.asarray).to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "n": [m.shape[0]],
-                    "s": [m.sum(axis=0).tolist()],
-                    "g": [(m.T @ m).ravel().tolist()],
-                }
-            )
-
-    rows = df.select(vec_col).mapInPandas(
-        partials, "n long, s array<double>, g array<double>"
-    ).collect()
-    if not rows:
+    sums = _partition_sums(
+        finite_vectors(df, vec_col, dim),
+        vec_col,
+        lambda m: [len(m), m.sum(axis=0), m.T @ m],
+    )
+    if sums is None:
         # Empty corpus: nothing to fit. ([], [], []) — pca_project on an
         # empty component list degrades to the id column alone.
         return [], [], []
-    n = sum(r["n"] for r in rows)
-    d = len(rows[0]["s"])
-    s = np.zeros(d)
-    g = np.zeros((d, d))
-    for r in rows:
-        s += np.asarray(r["s"])
-        g += np.asarray(r["g"]).reshape(d, d)
-    mu = s / n
-    cov = g / n - np.outer(mu, mu)
+    n, s, g = sums
+    mu = s / n[0]
+    cov = g.reshape(len(s), len(s)) / n[0] - np.outer(mu, mu)
     evals, evecs = np.linalg.eigh(cov)  # ascending
     order = np.argsort(evals)[::-1][:k]
     comps = []
@@ -922,44 +903,35 @@ def pq_codebooks(
     iters: int = 2,
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks: split the vector into m subspaces
-    of dim/m and fit an independent deterministic k-means (ksub
-    centroids) per subspace via the existing DataFrame-aggregate
-    kmeans_fit. Only m·ksub·(dim/m) = ksub·dim floats reach the driver —
-    the codebook is tiny at any corpus scale; at 100 TB fit on a sample,
-    like the IVF coarse quantizer."""
-    dsub = dim // m
-    books = []
-    for j in range(m):
-        sub = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.slice(F.col(vec_col), j * dsub + 1, dsub).alias("embedding"),
-        )
-        books.append(kmeans_fit(sub, "embedding", "vec_id", k=ksub, iters=iters))
-    return books
+    of dim/m and fit a deterministic k-means (ksub centroids) per
+    subspace — all m in one _lloyd loop, so each iteration is one corpus
+    pass whatever m is. Vectors pass the whole-vector finite_vectors
+    guard at ``dim``, as in every other fit. Only per-partition partials
+    of m·ksub·(dim/m) = ksub·dim floats reach the driver — the codebook
+    is tiny at any corpus scale; at 100 TB fit on a sample, like the IVF
+    coarse quantizer."""
+    books = _lloyd(
+        finite_vectors(corpus, vec_col, dim), vec_col, id_col, ksub, iters, m
+    )
+    return [[] for _ in range(m)] if books is None else books.tolist()
 
 
 def _pq_fit(c: DataFrame, dim: int, m: int, ksub: int, iters: int):
     """The PQ stages of pq_topk and ivfpq_topk, fitted on the (n_id,
     n_emb) corpus side: (books_lit, codes, lut), or None for an empty
     corpus. ``codes`` encodes n_emb as its m per-subspace nearest-
-    centroid indices; ``lut`` is a query's m×ksub table of sub-vector ·
-    centroid dots. Both read the codebook literal from a ``__pq``
-    column."""
+    centroid indices (nearest_udf); ``lut`` is a query's m×ksub table of
+    sub-vector · centroid dots, read from the codebook literal in a
+    ``__pq`` column."""
     books = pq_codebooks(c, "n_emb", "n_id", dim, m, ksub, iters)
-    if not books or not books[0]:
+    if not books[0]:
         return None
     # A corpus smaller than ksub fits fewer centroids than requested —
-    # the code/LUT expressions must iterate the FITTED size or
-    # element_at walks off the codebook.
-    ksub = min(len(b) for b in books)
+    # the LUT expression must iterate the FITTED size or element_at
+    # walks off the codebook.
+    ksub = len(books[0])
     dsub = dim // m
     cent = "element_at(element_at(__pq, j + 1), c + 1)"
-    sub_dist = L2SQ.format(a=cent, b=f"slice(n_emb, j * {dsub} + 1, {dsub})")
-    codes = F.expr(
-        f"transform(sequence(0, {m - 1}), j -> "
-        f"element_at(array_sort(transform(sequence(0, {ksub - 1}), c -> "
-        f"named_struct('d', {sub_dist}, 'i', c))), 1).i)"
-    )
     sub_dot = (
         f"aggregate(zip_with({cent}, slice(q_emb, j * {dsub} + 1, {dsub}), "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -969,7 +941,7 @@ def _pq_fit(c: DataFrame, dim: int, m: int, ksub: int, iters: int):
         f"transform(sequence(0, {m - 1}), j -> "
         f"transform(sequence(0, {ksub - 1}), c -> {sub_dot}))"
     )
-    return _array_lit(books), codes, lut
+    return _array_lit(books), nearest_udf(books)("n_emb"), lut
 
 
 def _adc_refine(
@@ -1013,8 +985,8 @@ def pq_topk(
     with PQ for the classic IVF-PQ).
 
     1. ENCODE (map-only): each corpus vector → m small codes, the
-       argmin-centroid per subspace against the broadcast codebook
-       literal. The corpus never shuffles; an encoded row is m bytes of
+       nearest centroid per subspace (nearest_udf against the shipped
+       codebook). The corpus never shuffles; an encoded row is m bytes of
        code instead of dim floats — the memory/IO compression that makes
        100 TB ANN feasible.
     2. ADC scan: each query precomputes its m×ksub lookup table (dot of
@@ -1034,7 +1006,7 @@ def pq_topk(
     if pq is None:
         return _empty_topk(q)
     books_lit, codes, lut = pq
-    enc = c.withColumn("__pq", books_lit).withColumn("codes", codes).drop("__pq")
+    enc = c.withColumn("codes", codes)
     q = q.withColumn("__pq", books_lit).withColumn("lut", lut).drop("__pq")
     pairs = enc.join(F.broadcast(q), F.col("n_id") != F.col("q_id"))
     return _adc_refine(pairs, m, refine, k, round_to)
@@ -1064,8 +1036,8 @@ def ivfpq_topk(
     per-pair cost m lookups), then the top-refine survivors are
     re-ranked by exact cosine. At 100 TB: the corpus is encoded ONCE
     (map-only, m bytes + 4 bytes per vector), the scan touches only
-    probed lists, and nothing but the k×dim centroid matrix and the
-    ksub·dim codebook ever leaves the executors."""
+    probed lists, and only the fits' per-partition partials (k×dim and
+    ksub·dim floats each) ever leave the executors."""
     q = _vectors(queries, id_col, vec_col, dim, "q_")
     c = _vectors(corpus, id_col, vec_col, dim, "n_")
     coarse = kmeans_fit(c, "n_emb", "n_id", k=num_centroids, iters=iters)
@@ -1075,18 +1047,15 @@ def ivfpq_topk(
     if pq is None:
         return _empty_topk(q)
     books_lit, codes, lut = pq
-    enc = (
-        c.withColumn("cluster", centroid_assign_udf(coarse)("n_emb"))
-        .withColumn("__pq", books_lit)
-        .withColumn("codes", codes)
-        .drop("__pq")
+    enc = c.withColumn("cluster", nearest_udf([coarse])("n_emb")[0]).withColumn(
+        "codes", codes
     )
-    q = (
-        _probe(q, coarse, nprobe)
-        .withColumn("__pq", books_lit)
-        .withColumn("lut", lut)
-        .drop("__pq")
-        .select("q_id", "q_emb", "q_norm", "lut", F.explode("probes").alias("cluster"))
+    q = q.withColumn("__pq", books_lit).select(
+        "q_id",
+        "q_emb",
+        "q_norm",
+        lut.alias("lut"),
+        F.explode(nearest_udf([coarse], nprobe)("q_emb")).alias("cluster"),
     )
     pairs = enc.join(F.broadcast(q), "cluster").filter(F.col("n_id") != F.col("q_id"))
     return _adc_refine(pairs, m, refine, k, round_to)

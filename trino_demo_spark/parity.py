@@ -144,6 +144,19 @@ def urev():
     return u2("l_extendedprice") * (F.lit(100) - u2("l_discount"))
 
 
+def exact_sum(units):
+    """Exact DECIMAL total of an integer column at long speed — usum's
+    split accumulator: two long sums, hi = units >> 20 and lo = units &
+    0xFFFFF, recombined in decimal. Order- and partitioning-independent,
+    exact while each long sum stays in int64."""
+    lo = units.bitwiseAND(F.lit((1 << 20) - 1))
+    hi = F.shiftright(units, 20)
+    return (
+        F.sum(hi).cast("decimal(31,0)") * F.lit(1 << 20).cast("decimal(7,0)")
+        + F.sum(lo).cast("decimal(31,0)")
+    )
+
+
 def usum(units, scale: int):
     """Exact order-independent money sum at long speed (see block
     comment above): hi/lo split-accumulator long sums recombined in
@@ -171,13 +184,7 @@ def usum(units, scale: int):
     '297175.00'), which is what the driver's string canonicalizer
     hashes — decimal output cost us 3 hash rows in round 2 on
     trailing-zero totals."""
-    lo = units.bitwiseAND(F.lit((1 << 20) - 1))
-    hi = F.shiftright(units, 20)
-    tot = (
-        F.sum(hi).cast("decimal(31,0)") * F.lit(1 << 20).cast("decimal(7,0)")
-        + F.sum(lo).cast("decimal(31,0)")
-    )
-    return tot.cast("double") / F.lit(float(10**scale))
+    return exact_sum(units).cast("double") / F.lit(float(10**scale))
 
 
 def U2(col: str) -> str:
@@ -3179,28 +3186,18 @@ def tpch_q11(spark, sf_dir):
     ).select("s_suppkey")
     # Threshold in exact 1e-4 integer units (not a DOUBLE re-sum of
     # part_value, which is order-dependent and can flip a boundary part
-    # across engines): hi/lo long split on the big fact aggregate, exact
-    # decimal recombine per part, exact decimal sum over the (small)
-    # per-part frame, compare units*1000 > total. DOUBLE only at output.
-    rev = urev()
+    # across engines): exact_sum per part on the big fact aggregate,
+    # exact decimal sum over the (small) per-part frame, compare
+    # units*1000 > total. DOUBLE only at output.
     per_part = (
         li.join(F.broadcast(nation_supps), li["l_suppkey"] == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("ps_partkey"))
-        .agg(
-            F.sum(F.shiftright(rev, 20)).alias("_h"),
-            F.sum(rev.bitwiseAND(F.lit((1 << 20) - 1))).alias("_l"),
-        )
-        .withColumn(
-            "units",
-            F.col("_h").cast("decimal(31,0)") * F.lit(1 << 20).cast("decimal(7,0)")
-            + F.col("_l").cast("decimal(31,0)"),
-        )
+        .agg(exact_sum(urev()).alias("units"))
         .withColumn(
             "part_value",
             (F.col("units") / F.lit(10**4)).cast("decimal(38,4)").cast("double"),
         )
     )
-    per_part = per_part.persist()
     threshold = per_part.agg(F.sum("units").alias("thr"))
     return (
         per_part.crossJoin(F.broadcast(threshold))
@@ -3253,7 +3250,6 @@ def tpch_q20(spark, sf_dir):
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(u2("l_quantity")).cast("long").alias("qty_units"))
     )
-    shipped = shipped.persist()
     thr = shipped.agg(F.avg("qty_units").alias("avg_units"))
     heavy = (
         shipped.crossJoin(F.broadcast(thr))
@@ -5553,12 +5549,7 @@ def agg_regression(spark, sf_dir):
     y = F.col("__y")
 
     def moment(e):
-        lo = e.bitwiseAND(F.lit((1 << 20) - 1))
-        hi = F.shiftright(e, 20)
-        return (
-            F.sum(hi).cast("decimal(38,0)") * F.lit(1 << 20).cast("decimal(8,0)")
-            + F.sum(lo).cast("decimal(38,0)")
-        ).cast("double")
+        return exact_sum(e).cast("double")
 
     s = li.agg(
         F.count("*").alias("n"),
@@ -6532,12 +6523,7 @@ def agg_covariance_matrix(spark, sf_dir):
     q, p, d = F.col("__q"), F.col("__p"), F.col("__d")
 
     def moment(e):
-        lo = e.bitwiseAND(F.lit((1 << 20) - 1))
-        hi = F.shiftright(e, 20)
-        return (
-            F.sum(hi).cast("decimal(38,0)") * F.lit(1 << 20).cast("decimal(8,0)")
-            + F.sum(lo).cast("decimal(38,0)")
-        ).cast("double")
+        return exact_sum(e).cast("double")
 
     s = li.agg(
         F.count("*").alias("n"),
@@ -7600,17 +7586,10 @@ def sink_manifest_integrity(spark, sf_dir):
             16,
             10,
         ).cast("long")
-        lo = digest.bitwiseAND(F.lit((1 << 20) - 1))
-        hi = F.shiftright(digest, 20)
-        digest_sum = (
-            F.sum(hi).cast("decimal(38,0)")
-            * F.lit(1 << 20).cast("decimal(8,0)")
-            + F.sum(lo).cast("decimal(38,0)")
-        ).cast("long")
         return df.agg(
             F.count("*").alias("n_rows"),
             F.sum("price_units").alias("sum_units"),
-            digest_sum.alias("digest_sum"),
+            exact_sum(digest).cast("long").alias("digest_sum"),
         )
 
     src.write.mode("overwrite").parquet(path)
