@@ -1,9 +1,11 @@
-"""Capture .explain("formatted") for bench queries → plans/r11/.
+"""Capture .explain("formatted") for bench queries → plans/<round>/.
 
 Usage: python scripts/capture_plans.py --tag before [--only a,b]
                                        [--sf /root/testdata/sf0.1]
+                                       [--out plans/r13]
 
-Writes plans/r11/<query>_<tag>.txt for each query. Uses the same
+Writes <out>/<query>_<tag>.txt for each query (--out defaults to
+plans/r11, the first round captured). Uses the same
 session shape as bench.py (local[$SPARK_GRAFT_CPUS], engine confs) so
 the captured plan is the one the bench times. AQE plans print
 isFinalPlan=false (pre-execution); the shape claims we make (Exchange

@@ -99,6 +99,70 @@ def test_simhash_properties(spark, docs):
         assert len(exact & found) / len(exact) >= 0.5
 
 
+def test_simhash_near_pairs_skip_null_text(spark):
+    """simhash gives every NULL text fingerprint 0; those documents must
+    not come back as Hamming-0 duplicates of each other (minhash drops
+    their empty signatures the same way)."""
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, None), (4, "the quick brown fox"), (5, "the quick brown fox")],
+        "doc_id long, text string",
+    )
+    pairs = dedup.simhash_near_pairs(df).collect()
+    assert [tuple(r) for r in pairs] == [(4, 5, 0)]
+
+
+def test_bucket_pairs_multiplicity_and_carry(spark):
+    """One row per (pair, shared bucket): no self pairs (id 4 sits in
+    its bucket twice), id_a < id_b, a pair sharing two buckets appears
+    twice, rows agreeing on only some keys never pair (5 vs 3), and
+    each carried column comes from its own side of the pair."""
+    df = spark.createDataFrame(
+        [
+            (2, 0, 10, "b2"), (1, 0, 10, "a1"),
+            (2, 1, 20, "b2"), (1, 1, 20, "a1"), (3, 1, 20, "c3"),
+            (5, 0, 20, "e5"),
+            (4, 2, 30, "d4"), (4, 2, 30, "d4"),
+        ],
+        "id long, band int, bh long, c string",
+    )
+    out = dedup.bucket_pairs(df, ["band", "bh"], "id", "x", "c")
+    assert out.columns == ["x_a", "x_b", "c_a", "c_b"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 2, "a1", "b2"), (1, 2, "a1", "b2"), (1, 3, "a1", "c3"), (2, 3, "b2", "c3")
+    ]
+
+
+@pytest.mark.parametrize("num_planes", [4, 8])
+def test_lsh_bucketed_topk_keeps_whole_plane_buckets(spark, emb, num_planes):
+    """lsh_bucketed_topk's bucket is the one-band sign key; its rows equal
+    those of the earlier whole-plane-array formula, built here with the
+    same vectors, cosine and rank tail."""
+    S = similarity
+    planes = S._array_lit(S._hyperplanes(64, num_planes))
+
+    def bucketed(df, prefix):
+        bits = F.expr(
+            "aggregate(transform(__planes, p -> CASE WHEN "
+            + S.DOT.format(a="p", b=prefix + "emb")
+            + " >= 0 THEN 1 ELSE 0 END), 0, (acc, b) -> acc * 2 + b)"
+        )
+        v = S._vectors(df, "vec_id", "embedding", 64, prefix)
+        return v.withColumn("__planes", planes).withColumn("bucket", bits).drop("__planes")
+
+    queries = emb.filter(F.col("vec_id") < 20)
+    pairs = (
+        bucketed(emb, "n_")
+        .join(F.broadcast(bucketed(queries, "q_")), "bucket")
+        .filter(F.col("n_id") != F.col("q_id"))
+        .select("q_id", "n_id", S._rounded_cosine("q_emb", "n_emb", "q_norm", "n_norm", 4))
+    )
+    want = sorted(map(tuple, S._rank_top_k(pairs, 3).collect()))
+    got = sorted(
+        map(tuple, S.lsh_bucketed_topk(emb, queries, k=3, num_planes=num_planes).collect())
+    )
+    assert got == want and len(got) > 0
+
+
 def test_lsh_topk_recall_vs_brute_force(spark, emb):
     queries = emb.filter(F.col("vec_id") < 20)
     exact = {

@@ -10,10 +10,15 @@ Four tiers, each a pure DataFrame plan (no Python in the hot path):
 4. simhash      — 64-bit SimHash per doc + banded near-pair search.
 
 Design: all shingling/hashing uses built-in expressions (split, transform,
-slice, xxhash64) so everything stays in whole-stage codegen. The pair ops
-that collapse identical inputs first (exact and capped Jaccard,
-MinHash-LSH, and the cosine near-dup ops in similarity.py) all finish
-through member_pairs, or member_edges for the clustering edge frames.
+slice, xxhash64) so everything stays in whole-stage codegen. Each stage
+the pair ops share exists once: bucket_pairs (the one candidate
+generator — a self-join of rows sharing a bucket key: a shingle, a
+(band, band-hash) of MinHash or SimHash, a sign-LSH band key in
+similarity.py, a collapse group), collapse_identical (one rep per
+identical shingle set, signature or vector), and member_pairs, or
+member_edges for the clustering edge frames, which expand rep pairs
+back to member pairs. dedup_clusters normalizes every edge frame it
+builds through _undirected.
 """
 
 from __future__ import annotations
@@ -24,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..genutil import explode_col
+from ..genutil import explode_col, posexplode_col
 from ..iterutil import materialize
 
 _log = logging.getLogger(__name__)
@@ -181,29 +186,39 @@ def collapse_identical(df: DataFrame, key_col: str, id_col: str):
     return groups, mem
 
 
+def bucket_pairs(
+    df: DataFrame, keys: list[str], id_col: str, out: str, *carry: str
+) -> DataFrame:
+    """Every unordered pair of ``df`` rows that agree on all ``keys``:
+    (<out>_a, <out>_b), the two rows' ``id_col`` values with <out>_a <
+    <out>_b, plus <c>_a / <c>_b for each carried column ``c``. A pair
+    comes back once per bucket it shares (k bands or k shingles, k
+    rows): callers dedupe, count (the shared-shingle multiplicity) or
+    keep the repeats. The one candidate generator of the near-dup ops
+    here and in similarity.py; pair work is bounded by the bucket
+    sizes, never O(n²) over the frame."""
+    a, b = df.alias("a"), df.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    return a.join(b, on + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]).select(
+        F.col(f"a.{id_col}").alias(f"{out}_a"),
+        F.col(f"b.{id_col}").alias(f"{out}_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
 def within_group_pairs(mem: DataFrame, value_name: str) -> DataFrame:
     """All (id_a < id_b) pairs inside each collapse group, tagged with
     the similarity an identical pair has: Jaccard/cosine of a value
     with itself is exactly 1.0 after the +EPS round.
 
     The pairs come from a rep-keyed self-join of the exploded member
-    frame, NOT from materializing the C(m,2) combination array inside
-    one row: a boilerplate cluster of ~200k identical docs would
-    otherwise build ~2e10 structs in a single task's single row before
-    exploding (executor OOM), while the join streams the same quadratic
-    OUTPUT through spillable operators."""
-    return (
-        mem.alias("wa")
-        .join(
-            mem.alias("wb"),
-            (F.col("wa.rep") == F.col("wb.rep"))
-            & (F.col("wa.mid") < F.col("wb.mid")),
-        )
-        .select(
-            F.col("wa.mid").alias("id_a"),
-            F.col("wb.mid").alias("id_b"),
-            F.lit(1.0).alias(value_name),
-        )
+    frame (bucket_pairs), NOT from materializing the C(m,2) combination
+    array inside one row: a boilerplate cluster of ~200k identical docs
+    would otherwise build ~2e10 structs in a single task's single row
+    before exploding (executor OOM), while the join streams the same
+    quadratic OUTPUT through spillable operators."""
+    return bucket_pairs(mem, ["rep"], "mid", "id").withColumn(
+        value_name, F.lit(1.0)
     )
 
 
@@ -391,34 +406,16 @@ def minhash_lsh_pairs(
     # every band), so within-cluster pairs bypass LSH entirely
     # (member_pairs).
     groups, mem = collapse_identical(sig.select("id", sig_arr.alias("sig")), "sig", "id")
-    # All bands in ONE pass over the distinct signatures (explode of a
-    # literal band array), instead of `bands` unioned scans.
-    band_arr = F.array(
+    # All bands in ONE pass over the distinct signatures (posexplode of
+    # the band-hash array), instead of `bands` unioned scans.
+    band_hashes = F.array(
         *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.element_at("sig", b * r + i + 1) for i in range(r)]
-                ).alias("bh"),
-            )
+            F.xxhash64(*[F.element_at("sig", b * r + i + 1) for i in range(r)])
             for b in range(bands)
         ]
     )
-    buckets = groups.select("rep", F.explode(band_arr).alias("bb")).select(
-        "rep", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
-    a = buckets.alias("a")
-    b_ = buckets.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .select(F.col("a.rep").alias("rep_a"), F.col("b.rep").alias("rep_b"))
-        .distinct()
-    )
+    buckets = posexplode_col(groups, band_hashes, "band", "bh", "rep")
+    cand = bucket_pairs(buckets, ["band", "bh"], "rep", "rep").distinct()
     # One ARRAY column per side through the estimate joins, not
     # num_perm scalar columns: the shuffled row narrows to (rep, array)
     # and the match count is a single zip_with/aggregate expression —
@@ -554,40 +551,20 @@ def simhash_near_pairs(
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, candidate-generated by
     16-bit band equality (pigeonhole: distance ≤ 3 guarantees a matching
-    band of 4; wider distances are probabilistic)."""
-    s = simhash(df, id_col, text_col)
-    # All 4 bands in ONE pass over the fingerprints (explode of a literal
+    band of 4; wider distances are probabilistic). NULL-text documents
+    are dropped before banding, as minhash_lsh_pairs drops empty
+    signatures: simhash gives them all fingerprint 0, so they would
+    pair with each other at Hamming distance 0."""
+    s = simhash(df.filter(F.col(text_col).isNotNull()), id_col, text_col)
+    # All 4 bands in ONE pass over the fingerprints (posexplode of the
     # band array, as in minhash_lsh_pairs): unioned per-band scans would
     # each recompute the SimHash from the documents.
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bh"),
-            )
-            for b in range(4)
-        ]
+    band_keys = F.array(
+        *[F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF)) for b in range(4)]
     )
-    bands = s.select("id", "simhash", F.explode(band_arr).alias("bb")).select(
-        "id", "simhash", "bb.band", "bb.bh"
-    )
-    a, b_ = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    bands = posexplode_col(s, band_keys, "band", "bh", "id", "simhash")
+    cand = bucket_pairs(bands, ["band", "bh"], "id", "id", "simhash").distinct()
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )
@@ -662,13 +639,7 @@ def jaccard_candidate_pair_count(
     Jaccard on an unfamiliar corpus; if it explodes, use
     ngram_jaccard_pairs_capped (or MinHash-LSH) instead."""
     _, _, rsh = _jaccard_posting_lists(df, id_col, text_col, n, df_max)
-    a, b = rsh.alias("a"), rsh.alias("b")
-    return (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.rep") < F.col("b.rep")))
-        .select("a.rep", "b.rep")
-        .distinct()
-        .count()
-    )
+    return bucket_pairs(rsh, ["g"], "rep", "rep").distinct().count()
 
 
 def _set_jaccard_rep_pairs(
@@ -685,10 +656,10 @@ def _set_jaccard_rep_pairs(
     the connectivity-equivalent edge frame (ngram_jaccard_edges).
     Returns (mem, cpairs)."""
     groups, mem, rsh = _jaccard_posting_lists(df, id_col, text_col, n, df_max)
-    a, b = rsh.alias("a"), rsh.alias("b")
+    # a rep pair comes back once per shared shingle: the count is |A∩B|
     inter = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.rep") < F.col("b.rep")))
-        .groupBy(F.col("a.rep").alias("rep_a"), F.col("b.rep").alias("rep_b"))
+        bucket_pairs(rsh, ["g"], "rep", "rep")
+        .groupBy("rep_a", "rep_b")
         .agg(F.count("*").alias("common"))
     )
     sizes = groups.select("rep", F.size("gs").alias("n_sh"))
@@ -798,6 +769,16 @@ def _observe_fingerprint(df: DataFrame):
     return out, get
 
 
+def _undirected(ab: DataFrame) -> DataFrame:
+    """The edge set of dedup_clusters from an (a, b) frame: self-loops
+    dropped, each undirected edge once as (u, v) with u < v."""
+    return (
+        ab.filter(F.col("a") != F.col("b"))
+        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
+        .distinct()
+    )
+
+
 def dedup_clusters(
     ids: DataFrame,
     pairs: DataFrame,
@@ -836,14 +817,7 @@ def dedup_clusters(
     for the measurements). Materializing also evaluates the upstream
     pair generator (all-pairs cosine / LSH banding / shingle join)
     exactly ONCE instead of once per round."""
-    e = (
-        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .distinct()
-    )
+    e = _undirected(pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")))
     e, fp_get = _observe_fingerprint(e)
     e = materialize(e)
     converged = False
@@ -870,15 +844,10 @@ def dedup_clusters(
         # distinct costs more than this one exchange that removes them
         # early. Local sf0.1 was a wash either way; the dedup stays for
         # the scale case.
-        ls = (
+        ls = _undirected(
             sym.join(mins, "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .distinct()
         )
         # ls feeds TWO subtrees inside this round (the mins2 aggregate
         # and the ss join) — persist() makes the large-star pass
@@ -895,17 +864,12 @@ def dedup_clusters(
         mins2 = dirn.groupBy("u").agg(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
-        ss = (
+        ss = _undirected(
             dirn.join(mins2, "u")
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
             .unionByName(
                 mins2.select(F.col("u").alias("a"), F.col("m").alias("b"))
             )
-            .filter(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .distinct()
         )
         ss, ss_fp_get = _observe_fingerprint(ss)
         ss = materialize(ss)

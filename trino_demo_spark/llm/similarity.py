@@ -21,15 +21,19 @@ Operators:
 
 Each stage the operators share exists once: _vectors (ingest guard, id
 and vector aliases, norm), _rounded_cosine and its numpy mirror
-_np_rounded_cosine (cosine + EPS, rounded), _rank_top_k (the row_number
-tail over (sim desc, n_id)), _nearest (the nearest-centroid kernel of
-every quantizer) with its two callers _lloyd (the one k-means loop of
-kmeans_fit and pq_codebooks) and nearest_udf (IVF lists and probes, PQ
-codes, the k-means profile), _partition_sums (the bounded per-partition
-moment pass of _lloyd and pca_fit), _pq_fit and _adc_refine (PQ lookup
-tables, ADC score and exact re-rank), and _collapsed_vectors (the
-identical-vector collapse of the near-dup ops, whose rep pairs
-dedup.member_pairs / dedup.member_edges finish).
+_np_rounded_cosine (cosine + EPS, rounded), _arrow_matrix (the Arrow
+vector decoder of every numpy kernel), _rank_top_k (the row_number
+tail over (sim desc, n_id)), _sign_bands (the sign-LSH band keys of
+lsh_bucketed_topk and the near-dup LSH ops), _nearest (the
+nearest-centroid kernel of every quantizer) with its two callers
+_lloyd (the one k-means loop of kmeans_fit and pq_codebooks) and
+nearest_udf (IVF lists and probes, PQ codes, the k-means profile),
+_partition_sums (the bounded per-partition moment pass of _lloyd and
+pca_fit), _pq_fit and _adc_refine (PQ lookup tables, ADC score and
+exact re-rank), and _collapsed_vectors (the identical-vector collapse
+of the near-dup ops, whose candidate rep pairs come from
+dedup.bucket_pairs and which dedup.member_pairs / dedup.member_edges
+finish).
 
 Arithmetic uses built-in higher-order array functions (zip_with /
 aggregate) in DOUBLE precision — JVM codegen, no Python UDF — except in
@@ -46,7 +50,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..genutil import posexplode_col
-from .dedup import collapse_identical, member_edges, member_pairs
+from .dedup import bucket_pairs, collapse_identical, member_edges, member_pairs
 
 # Tie-safe rounding epsilon (see trino_demo_spark.parity.EPS).
 EPS = 1e-9
@@ -126,23 +130,26 @@ def _rounded_cosine(a: str, b: str, norm_a: str, norm_b: str, round_to: int):
     )
 
 
-def _np_matrix(vectors):
-    """(float64 matrix, row norms) of an iterable of equal-length
-    vectors — the numpy side of _vectors."""
+def _arrow_matrix(col):
+    """float64 (rows × width) matrix of a non-empty Arrow list column of
+    equal-length vectors. A ragged column raises: pass ``dim`` to drop
+    ragged rows at ingest."""
+    import pyarrow as pa
+
+    width = len(col[0])
+    flat = col.cast(pa.list_(pa.float64(), width)).flatten().to_numpy()
+    return flat.reshape(-1, width)
+
+
+def _np_rounded_cosine(a, b, round_to: int):
+    """numpy mirror of _rounded_cosine: every row of float64 matrix
+    ``a`` against every row of ``b``. A zero-norm row gives cosine 0.0
+    (as cosine_expr), not a silent inf/nan from the vectorized
+    division. float64 matmul differs from the fold only in summation
+    order (~1e-15 relative), which the EPS-before-round absorbs."""
     import numpy as np
 
-    m = np.asarray([np.asarray(v, dtype=np.float64) for v in vectors])
-    return m, np.sqrt((m * m).sum(axis=1))
-
-
-def _np_rounded_cosine(a, norm_a, b, norm_b, round_to: int):
-    """numpy mirror of _rounded_cosine: every row of ``a`` against every
-    row of ``b``. A zero-norm row gives cosine 0.0 (as cosine_expr), not
-    a silent inf/nan from the vectorized division. float64 matmul
-    differs from the fold only in summation order (~1e-15 relative),
-    which the EPS-before-round absorbs."""
-    import numpy as np
-
+    norm_a, norm_b = (np.sqrt((m * m).sum(axis=1)) for m in (a, b))
     den = norm_a[:, None] * norm_b[None, :]
     return np.round(
         np.divide(a @ b.T, den, out=np.zeros_like(den), where=den != 0) + EPS,
@@ -206,7 +213,7 @@ def brute_force_topk_arrow(
     round_to: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy matmul (mapInPandas) —
+    """Exact cosine top-k via Arrow-batched numpy matmul (mapInArrow) —
     the production-throughput version of brute_force_topk, same results.
 
     brute_force_topk's zip_with/aggregate dot product is an interpreted
@@ -234,34 +241,33 @@ def brute_force_topk_arrow(
             [], "q_id long, n_id long, sim double, rank long"
         )
     q_ids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    q_mat, q_norm = _np_matrix(r[1] for r in qrows)
+    q_mat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     kk, rt = k, round_to
 
     def local_topk(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            m, n_norm = _np_matrix(pdf[vec_col])
-            sims = _np_rounded_cosine(m, n_norm, q_mat, q_norm, rt)
+            ids = b.column(0).to_numpy().astype(np.int64)
+            sims = _np_rounded_cosine(_arrow_matrix(b.column(1)), q_mat, rt)
             out_q, out_n, out_s = [], [], []
-            for j in range(len(q_ids)):
-                col = sims[:, j]
-                mask = ids != q_ids[j]
-                cids, csim = ids[mask], col[mask]
+            for j, q_id in enumerate(q_ids):
+                mask = ids != q_id
+                cids, csim = ids[mask], sims[mask, j]
                 # top-k by (sim desc, n_id asc): lexsort is stable,
                 # last key primary
                 order = np.lexsort((cids, -csim))[:kk]
-                out_q.extend([q_ids[j]] * len(order))
-                out_n.extend(cids[order])
-                out_s.extend(csim[order])
-            yield pd.DataFrame(
-                {"q_id": out_q, "n_id": out_n, "sim": out_s}
+                out_q.append(np.full(len(order), q_id))
+                out_n.append(cids[order])
+                out_s.append(csim[order])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(c)) for c in (out_q, out_n, out_s)],
+                names=["q_id", "n_id", "sim"],
             )
 
-    local = corpus.select(id_col, vec_col).mapInPandas(
+    local = corpus.select(id_col, vec_col).mapInArrow(
         local_topk, "q_id long, n_id long, sim double"
     )
     return _rank_top_k(local, k)
@@ -281,6 +287,30 @@ def _hyperplanes(dim: int, num_planes: int) -> list[list[float]]:
     return planes
 
 
+def _sign_bands(
+    df: DataFrame, vec: str, dim: int, num_planes: int, bands: int, *keep: str
+) -> DataFrame:
+    """(band, bkey) rows, one per band of each ``df`` row with the
+    ``keep`` columns: bkey is the band's sign-LSH key, the sign bits of
+    vec·h over its num_planes // bands fixed hyperplanes, first plane
+    the high bit. One aggregate over element variables per key (no
+    bit-array column for Catalyst to inline per band). The keys leave
+    through posexplode_col, never as a projected join key: constraint
+    inference misses a column used inside aggregate's merge lambda and
+    pushes the other side's key expression below an equi-join on it, a
+    filter that fails at run time with an unbound attribute (seen on
+    lsh_bucketed_topk at sf0.01). posexplode_col also skips the
+    inferred Generate pre-filter that would evaluate the keys again."""
+    w = num_planes // bands
+    keys = F.expr(
+        f"transform(sequence(0, {bands - 1}), k -> "
+        f"aggregate(slice(__planes, k * {w} + 1, {w}), 0, (acc, p) -> "
+        "acc * 2 + CASE WHEN " + DOT.format(a="p", b=vec) + " >= 0 THEN 1 ELSE 0 END))"
+    )
+    planed = df.withColumn("__planes", _array_lit(_hyperplanes(dim, num_planes)))
+    return posexplode_col(planed, keys, "band", "bkey", *keep)
+
+
 def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -294,30 +324,22 @@ def lsh_bucketed_topk(
     """Approximate cosine top-k: sign-LSH bucket join.
 
     Bucket id = bit pattern of sign(v·h_j) for num_planes fixed
-    hyperplanes; queries and corpus join only within their bucket. Recall
-    can be raised by multi-probe (flipping low-margin bits) or repeated
-    tables; kept single-table here.
+    hyperplanes (_sign_bands with one band of all the planes); queries
+    and corpus join only within their bucket. Recall can be raised by
+    multi-probe (flipping low-margin bits) or repeated tables; kept
+    single-table here.
     """
-    planes_lit = _array_lit(_hyperplanes(dim, num_planes))
 
-    def bucketed(df: DataFrame, vecc: str) -> DataFrame:
-        sign_bits = F.expr(
-            "aggregate(transform(__planes, p -> CASE WHEN "
-            + DOT.format(a="p", b=vecc)
-            + " >= 0 THEN 1 ELSE 0 END), 0, (acc, b) -> acc * 2 + b)"
-        )
-        return (
-            df.withColumn("__planes", planes_lit)
-            .withColumn("bucket", sign_bits)
-            .drop("__planes")
-        )
+    def bucketed(df: DataFrame, p: str) -> DataFrame:
+        cols = (p + "id", p + "emb", p + "norm")
+        return _sign_bands(df, p + "emb", dim, num_planes, 1, *cols)
 
     # dim doubles as the ingest dimensionality contract: a ragged vector
     # would mis-project against the fixed dim-sized hyperplanes.
-    q = bucketed(_vectors(queries, id_col, vec_col, dim, "q_"), "q_emb")
-    c = bucketed(_vectors(corpus, id_col, vec_col, dim, "n_"), "n_emb")
+    q = bucketed(_vectors(queries, id_col, vec_col, dim, "q_"), "q_")
+    c = bucketed(_vectors(corpus, id_col, vec_col, dim, "n_"), "n_")
     pairs = (
-        c.join(F.broadcast(q), "bucket")
+        c.join(F.broadcast(q), "bkey")
         .filter(F.col("n_id") != F.col("q_id"))
         .select("q_id", "n_id", _rounded_cosine("q_emb", "n_emb", "q_norm", "n_norm", round_to))
     )
@@ -438,39 +460,40 @@ def cosine_near_dup_pairs_arrow(
     reps = groups.select(F.col("rep"), "emb").collect()
     if not reps:
         return spark.createDataFrame([], "id_a long, id_b long, sim double")
-    all_ids = np.asarray([r[0] for r in reps], dtype=np.int64)
-    mat, norms = _np_matrix(r[1] for r in reps)
-    b_ids = spark.sparkContext.broadcast(all_ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
+    b_ids = spark.sparkContext.broadcast(
+        np.asarray([r[0] for r in reps], dtype=np.int64)
+    )
+    b_mat = spark.sparkContext.broadcast(
+        np.asarray([r[1] for r in reps], dtype=np.float64)
+    )
     rt, thr = round_to, threshold
 
     def pairs_gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        ids_all, m_all, n_all = b_ids.value, b_mat.value, b_norms.value
-        n = len(ids_all)
-        chunk = max(16, (64 * 1024 * 1024 // 8) // max(n, 1))
-        for pdf in batches:
-            if pdf.empty:
+        ids_all, m_all = b_ids.value, b_mat.value
+        chunk = max(16, (64 * 1024 * 1024 // 8) // max(len(ids_all), 1))
+        for b in batches:
+            if not b.num_rows:
                 continue
-            ids = pdf["rep"].to_numpy(dtype=np.int64)
-            m, nn = _np_matrix(pdf["emb"])
+            ids = b.column(0).to_numpy().astype(np.int64)
+            m = _arrow_matrix(b.column(1))
             for lo in range(0, len(ids), chunk):
                 hi = lo + chunk
-                sims = _np_rounded_cosine(m[lo:hi], nn[lo:hi], m_all, n_all, rt)
+                sims = _np_rounded_cosine(m[lo:hi], m_all, rt)
                 keep = (sims >= thr) & (ids[lo:hi, None] < ids_all[None, :])
                 ai, bj = np.nonzero(keep)
                 if len(ai):
-                    yield pd.DataFrame(
-                        {
-                            "rep_a": ids[lo:hi][ai],
-                            "rep_b": ids_all[bj],
-                            "sim": sims[ai, bj],
-                        }
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(ids[lo:hi][ai]),
+                            pa.array(ids_all[bj]),
+                            pa.array(sims[ai, bj]),
+                        ],
+                        names=["rep_a", "rep_b", "sim"],
                     )
 
-    rep_pairs = groups.select("rep", "emb").mapInPandas(
+    rep_pairs = groups.select("rep", "emb").mapInArrow(
         pairs_gen, "rep_a long, rep_b long, sim double"
     )
     return member_pairs(mem, rep_pairs, "sim", threshold)
@@ -502,10 +525,7 @@ def cosine_near_dup_pairs_lsh(
     key)), never O(n²); hyperplanes are deterministic so results are
     stable across runs and engines.
 
-    Each band key is computed directly from the plane slice (single
-    aggregate over element vars) — no intermediate bit-array column whose
-    defining expression Catalyst would inline per band (see PERF.md on
-    projection-collapse fan-out).
+    Band keys come from _sign_bands.
 
     Identical-vector collapse (same shape as minhash_lsh_pairs, same
     measured reason): exact-duplicate docs carry bit-identical
@@ -538,7 +558,8 @@ def _lsh_collapse_rep_pairs(
     round_to: int,
 ):
     """Shared sign-LSH core: identical-vector collapse, banded bucket
-    self-join over the DISTINCT reps, exact-cosine re-check. Returns
+    self-join (dedup.bucket_pairs) over the DISTINCT reps, exact-cosine
+    re-check. Returns
     (mem, rep_pairs) where mem is the narrow (rep, mid) member frame
     and rep_pairs is (rep_a, rep_b, sim) above the threshold — NOT
     deduplicated: a rep pair colliding in k ≤ bands bands appears k
@@ -546,37 +567,17 @@ def _lsh_collapse_rep_pairs(
     (the edges → dedup_clusters path, whose edge normalization ends in
     its own .distinct()) does not need to, which saves one exchange of
     the threshold-surviving pairs (r12)."""
-    b = num_planes // bands
     groups, mem = _collapsed_vectors(df, id_col, vec_col, dim)
-    keyed = with_norm(
-        groups.select(F.col("rep").alias("id"), "emb"),
-        "emb",
-        "norm",
-    ).withColumn("__planes", _array_lit(_hyperplanes(dim, num_planes)))
-    band_keys = F.expr(
-        f"transform(sequence(0, {bands - 1}), k -> "
-        f"aggregate(slice(__planes, k * {b} + 1, {b}), 0, (acc, p) -> "
-        "acc * 2 + CASE WHEN "
-        + DOT.format(a="p", b="emb")
-        + " >= 0 THEN 1 ELSE 0 END))"
+    keyed = _sign_bands(
+        with_norm(groups.select(F.col("rep").alias("id"), "emb"), "emb", "norm"),
+        "emb", dim, num_planes, bands, "id", "emb", "norm",
     )
-    # posexplode_col, not posexplode: the inferred Generate pre-filter
-    # would re-evaluate band_keys — `bands` hyperplane dot products per
-    # row — two more times at the scan (see genutil).
-    keyed = posexplode_col(keyed, band_keys, "band", "bkey", "id", "emb", "norm")
-
-    a, c = keyed.alias("a"), keyed.alias("b")
     rep_pairs = (
-        a.join(
-            c,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        bucket_pairs(keyed, ["band", "bkey"], "id", "rep", "emb", "norm")
         .select(
-            F.col("a.id").alias("rep_a"),
-            F.col("b.id").alias("rep_b"),
-            _rounded_cosine("a.emb", "b.emb", "a.norm", "b.norm", round_to),
+            "rep_a",
+            "rep_b",
+            _rounded_cosine("emb_a", "emb_b", "norm_a", "norm_b", round_to),
         )
         .filter(F.col("sim") >= threshold)
     )
@@ -635,17 +636,6 @@ def _codes(X, books, n: int = 1):
     return np.hstack(
         [_nearest(X[:, j * w : (j + 1) * w], C, n) for j, C in enumerate(books)]
     )
-
-
-def _arrow_matrix(col):
-    """float64 (rows × width) matrix of a non-empty Arrow list column of
-    equal-length vectors. A ragged column raises: pass ``dim`` to drop
-    ragged rows at ingest."""
-    import pyarrow as pa
-
-    width = len(col[0])
-    flat = col.cast(pa.list_(pa.float64(), width)).flatten().to_numpy()
-    return flat.reshape(-1, width)
 
 
 def nearest_udf(books, n: int = 1):

@@ -3266,6 +3266,45 @@ def tpch_q20(spark, sf_dir):
     )
 
 
+def _sole_late_suppliers(spark, sf_dir, lo):
+    """The body of tpch_q21 and tpch_q21_full over their (l_orderkey,
+    l_suppkey, is_late) line frame: per supplier name, the number of
+    multi-supplier orders on which that supplier was the only late one.
+    EXISTS ⇔ n_supps > 1 and NOT EXISTS ⇔ n_late_supps = 1 (the late one
+    being this supplier), as per-order window counts over the
+    per-(order, supplier) frame."""
+    from pyspark.sql import Window as W
+
+    # ONE fact shuffle, not two: hash-partitioning on l_orderkey alone
+    # satisfies both the (l_orderkey, l_suppkey) groupBy clustering AND
+    # the l_orderkey window — without it Catalyst inserts a composite-key
+    # exchange for the aggregate and a second prefix-key exchange for
+    # the window (measured 20.2 s vs 11.1 s on the q21_full twin at sf1)
+    lo = lo.repartition("l_orderkey")
+    per_pair = lo.groupBy("l_orderkey", "l_suppkey").agg(
+        F.max("is_late").alias("pair_late")
+    )
+    w = W.partitionBy("l_orderkey")
+    waiter = (
+        per_pair.withColumn("n_supps", F.count("*").over(w))
+        .withColumn(
+            "n_late_supps",
+            F.sum(F.when(F.col("pair_late"), 1).otherwise(0)).over(w),
+        )
+        .filter(
+            F.col("pair_late")
+            & (F.col("n_supps") > 1)
+            & (F.col("n_late_supps") == 1)
+        )
+    )
+    s = _t(spark, sf_dir, "supplier")
+    return (
+        waiter.join(F.broadcast(s), waiter["l_suppkey"] == s["s_suppkey"])
+        .groupBy("s_name")
+        .agg(F.count("*").alias("numwait"))
+    )
+
+
 @parity(
     "tpch_q21",
     sql="""
@@ -3304,8 +3343,6 @@ def tpch_q20(spark, sf_dir):
     "broadcast).",
 )
 def tpch_q21(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
@@ -3317,34 +3354,7 @@ def tpch_q21(spark, sf_dir):
         "l_suppkey",
         (F.col("l_shipdate") > F.date_add("o_orderdate", 60)).alias("is_late"),
     )
-    # ONE fact shuffle, not two: hash-partitioning on l_orderkey alone
-    # satisfies both the (l_orderkey, l_suppkey) groupBy clustering AND
-    # the l_orderkey window — without it Catalyst inserts a composite-key
-    # exchange for the aggregate and a second prefix-key exchange for
-    # the window (measured 20.2 s vs 11.1 s on the q21_full twin at sf1)
-    lo = lo.repartition("l_orderkey")
-    per_pair = lo.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max("is_late").alias("pair_late")
-    )
-    w = W.partitionBy("l_orderkey")
-    waiter = (
-        per_pair.withColumn("n_supps", F.count("*").over(w))
-        .withColumn(
-            "n_late_supps",
-            F.sum(F.when(F.col("pair_late"), 1).otherwise(0)).over(w),
-        )
-        .filter(
-            F.col("pair_late")
-            & (F.col("n_supps") > 1)
-            & (F.col("n_late_supps") == 1)
-        )
-    )
-    s = _t(spark, sf_dir, "supplier")
-    return (
-        waiter.join(F.broadcast(s), waiter["l_suppkey"] == s["s_suppkey"])
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-    )
+    return _sole_late_suppliers(spark, sf_dir, lo)
 
 
 # ---------------------------------------------------------------------------
@@ -3700,8 +3710,6 @@ def tpch_q20_full(spark, sf_dir):
     "window, no self-joins.",
 )
 def tpch_q21_full(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey")
@@ -3717,31 +3725,7 @@ def tpch_q21_full(spark, sf_dir):
         .join(o, F.col("l_orderkey") == o["o_orderkey"])
         .select("l_orderkey", "l_suppkey", "is_late")
     )
-    # one fact shuffle shared by the groupBy and the window (see
-    # tpch_q21's comment; measured 2x at sf1)
-    lo = lo.repartition("l_orderkey")
-    per_pair = lo.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max("is_late").alias("pair_late")
-    )
-    w = W.partitionBy("l_orderkey")
-    waiter = (
-        per_pair.withColumn("n_supps", F.count("*").over(w))
-        .withColumn(
-            "n_late_supps",
-            F.sum(F.when(F.col("pair_late"), 1).otherwise(0)).over(w),
-        )
-        .filter(
-            F.col("pair_late")
-            & (F.col("n_supps") > 1)
-            & (F.col("n_late_supps") == 1)
-        )
-    )
-    s = _t(spark, sf_dir, "supplier")
-    return (
-        waiter.join(F.broadcast(s), waiter["l_suppkey"] == s["s_suppkey"])
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-    )
+    return _sole_late_suppliers(spark, sf_dir, lo)
 
 
 # ---------------------------------------------------------------------------
