@@ -1,11 +1,11 @@
 """Capture .explain("formatted") for bench queries → plans/<round>/.
 
-Usage: python scripts/capture_plans.py --tag before [--only a,b]
-                                       [--sf /root/testdata/sf0.1]
-                                       [--out plans/r13]
+Usage: python scripts/capture_plans.py --tag before --out plans/<round>
+                                       [--only a,b] [--sf DIR]
 
-Writes <out>/<query>_<tag>.txt for each query (--out defaults to
-plans/r11, the first round captured). Uses the same
+Writes <out>/<query>_<tag>.txt for each query. --out has no default, so
+a capture never overwrites the committed plans of an earlier round by
+accident. Uses the same
 session shape as bench.py (local[$SPARK_GRAFT_CPUS], engine confs) so
 the captured plan is the one the bench times. AQE plans print
 isFinalPlan=false (pre-execution); the shape claims we make (Exchange
@@ -35,7 +35,7 @@ def main() -> None:
     ap.add_argument("--tag", required=True)
     ap.add_argument("--only", default=None)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default=os.path.join(_ROOT, "plans", "r11"))
+    ap.add_argument("--out", required=True)
     args = ap.parse_args()
 
     import bench

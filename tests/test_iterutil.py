@@ -3,11 +3,13 @@ checkpoint modes, and the reliable mode must engage exactly when a
 checkpoint directory is set on the context (the cluster-mode contract —
 localCheckpoint blocks are block-manager state, and an evicted round-N
 block kills round N+1 of any iterative operator; seen live with
-ml_pagerank at sf100-equivalent under a constrained JVM)."""
+ml_pagerank at sf100-equivalent under a constrained JVM). Plus the
+round owner's release rule, on each of the four round loops."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from trino_demo_spark.iterutil import materialize
 
@@ -87,3 +89,81 @@ def test_materialize_reliable_when_checkpoint_dir_set(spark, tmp_path):
             sc._jvm.scala.Option.empty()
         )
         assert sc.getCheckpointDir() is None
+
+
+def _pagerank(spark, iters):
+    from trino_demo_spark.ml import pagerank
+
+    edges = spark.range(200).select(
+        (F.col("id") % 50).alias("src"), ((F.col("id") * 7 + 3) % 50).alias("dst")
+    )
+    return [pagerank(edges, iters=iters)]
+
+
+def _pagerank_iters0(spark):
+    (out,) = _pagerank(spark, 0)
+    ranks = {r["rank"] for r in out.collect()}
+    # 50 nodes: every src/dst residue mod 50 is hit
+    assert ranks == {round(1 / 50 + 1e-9, 8)}
+    return [out]
+
+
+def _als(spark):
+    from trino_demo_spark.ml import als_fit_distributed
+
+    ratings = spark.range(300).select(
+        (F.col("id") % 30).alias("user_id"),
+        ((F.col("id") * 7) % 20).alias("item"),
+        ((F.col("id") % 5) + 1).cast("double").alias("rating"),
+    )
+    return list(als_fit_distributed(ratings, iters=3))
+
+
+def _clusters(spark):
+    from trino_demo_spark.llm.dedup import dedup_clusters
+
+    ids = spark.range(61).select(F.col("id").alias("doc_id"))
+    path = spark.range(60).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    stats = {}
+    out = dedup_clusters(ids, path, stats=stats)
+    assert stats["rounds"] == 7
+    return [out]
+
+
+def _bpe(spark):
+    from trino_demo_spark.llm.bpe import bpe_train_words
+
+    words = spark.createDataFrame(
+        [("lower", 5), ("lowest", 2), ("newer", 6), ("wider", 3)], "w string, freq bigint"
+    )
+    assert len(bpe_train_words(words, n_merges=6)) == 6
+    return []
+
+
+@pytest.mark.parametrize(
+    "build, reads",
+    [
+        (lambda s: _pagerank(s, 4), 1),  # the final ranks
+        (_pagerank_iters0, 1),  # 1/n per node: the edges, through the node set
+        (_als, 2),  # item_f, users
+        (_clusters, 1),  # the converged edge set
+        (_bpe, 0),  # the merge list is plain Python
+    ],
+    ids=["pagerank", "pagerank_iters0", "als", "clusters", "bpe"],
+)
+def test_round_loops_leave_only_what_the_result_reads(spark, build, reads):
+    """After the returned frames are collected, the only RDDs a round
+    loop leaves persisted are the checkpoints those frames still read:
+    every per-round frame, in-round cache and loop invariant is
+    released by the loop's owner (iterutil.Rounds)."""
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = set(jsc.getPersistentRDDs().keys())
+    frames = build(spark)  # held, so the JVM cannot clean what they read
+    for df in frames:
+        df.collect()
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) == reads
+    assert cache.isEmpty()

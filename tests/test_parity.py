@@ -83,13 +83,13 @@ def test_recursive_cte_restores_session_conf(spark):
 def test_tpch_q11_q20_leave_no_cache(spark):
     """A long-lived session must not accumulate engine state: after each
     entry's action the cache manager is empty and no RDD the entry
-    persisted stays persisted (both entries used to persist their
-    aggregate and never release it)."""
+    persisted stays persisted (each used to persist an intermediate
+    frame and never release it)."""
     jsc = spark.sparkContext._jsc
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     before = set(jsc.getPersistentRDDs().keys())
-    for name in ("tpch_q11", "tpch_q20"):
+    for name in ("tpch_q11", "tpch_q20", "llm_tokenizer_bpe"):
         PARITY[name].fn(spark, SF_PARITY).collect()
         assert cache.isEmpty(), name
         assert set(jsc.getPersistentRDDs().keys()) <= before, name

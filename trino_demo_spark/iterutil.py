@@ -1,6 +1,6 @@
-"""Lineage + stats hygiene for iterative DataFrame algorithms.
+"""Lineage, stats and storage hygiene for iterative DataFrame algorithms.
 
-Two separate traps hit any loop of the form ``df = f(df)``:
+Three traps hit any loop of the form ``df = f(df)``:
 
 1. **Lineage growth** — if ``df`` feeds two branches of the next round
    (a self-join, or a main/convergence-check pair), the logical plan
@@ -18,19 +18,31 @@ Two separate traps hit any loop of the form ``df = f(df)``:
    reset below vs 14 s at round 22 / 219 s at round 24 without — pure
    driver CPU in ``SizeInBytesOnlyStatsPlanVisitor.visitJoin``).
 
-``materialize`` breaks both: persisting first makes the optimized
+3. **Leaked round frames** — each round's checkpoint and in-round
+   cache stays persisted for the life of the session unless released,
+   and releasing one that a later round or the lazy result still reads
+   fails that read with ``checkpointRDDBlockIdNotFound``.
+
+``materialize`` breaks 1 and 2: persisting first makes the optimized
 plan an ``InMemoryRelation``, and the eager checkpoint's materializing
 pass populates that cache before ``LogicalRDD.fromDataset`` snapshots
 stats — so the snapshot sees the ACTUAL cached byte size, not the
 compounded product; the checkpoint then truncates lineage as usual
-and the temporary cache is dropped. (One action total — the explicit
-``count()`` this used to run first was a second full read of the
-frame; see the function docstring.)
+and the temporary cache is dropped. At real cluster scale the same
+discipline applies — swap ``localCheckpoint`` for reliable
+``checkpoint`` (executor loss safety); the persist-before-checkpoint
+ordering is what resets the stats either way.
 
-At real cluster scale the same discipline applies — swap
-``localCheckpoint`` for reliable ``checkpoint`` (executor loss safety);
-the persist-before-checkpoint ordering is what resets the stats either
-way.
+``Rounds`` owns 3, with one release rule for every loop:
+
+* a loop **invariant** (an input every round reads) is held until the
+  loop ends;
+* a **per-round** frame (a round's state, or a cache serving one
+  round) is held until the next round's state is solid — materialized
+  through ``Rounds.materialize``, or computed by an action the loop
+  runs anyway and handed to ``Rounds.advance``;
+* when the loop ends, everything held is released except the
+  checkpoints the returned lazy result (``Rounds.result``) reads.
 """
 
 from __future__ import annotations
@@ -43,6 +55,9 @@ def materialize(df: DataFrame) -> DataFrame:
     reset to the actual cached size (see module docstring). Returns the
     checkpointed frame; the temporary cache is unpersisted before
     returning, so no storage is pinned beyond the checkpoint blocks.
+    One action: the eager checkpoint's pass runs THROUGH the persisted
+    plan, so the cache is populated before the stats snapshot (pinned
+    by tests/test_iterutil.py::test_materialize_stats_reset_iterated_self_join).
 
     If the SparkContext has a checkpoint directory set, the truncation
     uses RELIABLE ``checkpoint`` instead of ``localCheckpoint``:
@@ -62,20 +77,7 @@ def materialize(df: DataFrame) -> DataFrame:
     reliable branch exists to fix, moved into the checkpoint store.
     ``session.get_spark`` sets it; any hand-built session that calls
     ``setCheckpointDir`` must set it too (as must any cluster deploy
-    that doesn't snapshot checkpoints deliberately).
-
-    r11 optimization round: no separate ``count()`` job. The eager
-    checkpoint's own materializing pass runs THROUGH the persisted
-    plan, populating the cache as a side effect, and
-    ``LogicalRDD.fromDataset`` snapshots statistics AFTER that pass —
-    at which point the InMemoryRelation reports its ACTUAL cached
-    size, which is all the count() ever existed to force. One action
-    per materialize instead of two, at every scale (the count was a
-    second full read of the cached frame). Pinned by
-    tests/test_iterutil.py::test_materialize_stats_reset_iterated_self_join —
-    the iterated-self-join stats blowup the count used to prevent
-    stays prevented (measured: 26 rounds flat; the no-persist control
-    exceeds the round budget by round ~20)."""
+    that doesn't snapshot checkpoints deliberately)."""
     df.persist()
     try:
         if df.sparkSession.sparkContext.getCheckpointDir() is not None:
@@ -83,3 +85,74 @@ def materialize(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True)
     finally:
         df.unpersist()
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD under a checkpointed frame's ``LogicalRDD``, else None."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.rdd() if plan.nodeName() == "LogicalRDD" else None
+
+
+def release(df: DataFrame) -> None:
+    """Drop the storage ``df`` pins: its cache entry and, if it is a
+    local checkpoint, the persisted RDD under its ``LogicalRDD``
+    (reliable checkpoint files are removed by ``cleanCheckpoints``)."""
+    df.unpersist()
+    rdd = _checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
+
+
+class Rounds:
+    """The owner of one iterative loop's frames: applies the module
+    docstring's release rule. Use as a context manager around the loop;
+    ``count`` is the number of rounds made solid."""
+
+    def __init__(self) -> None:
+        self.count = 0
+        self._invariants: list[DataFrame] = []
+        self._round: list[DataFrame] = []
+        self._reads: set[int] = set()
+
+    def __enter__(self) -> Rounds:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self._invariants + self._round:
+            rdd = _checkpoint_rdd(df)
+            if rdd is None or rdd.id() not in self._reads:
+                release(df)
+
+    def invariant(self, df: DataFrame) -> DataFrame:
+        """Hold ``df`` (persisted or materialized) until the loop ends."""
+        self._invariants.append(df)
+        return df
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        """Hold ``df`` (persisted or materialized) until the next round
+        is solid."""
+        self._round.append(df)
+        return df
+
+    def advance(self, state: DataFrame) -> DataFrame:
+        """``state``, already computed, is the new round's state: release
+        every other per-round frame and count the round."""
+        for df in self._round:
+            if df is not state:
+                release(df)
+        self._round = [state]
+        self.count += 1
+        return state
+
+    def materialize(self, df: DataFrame) -> DataFrame:
+        """Materialize ``df`` as the new round's state (``advance``)."""
+        return self.advance(materialize(df))
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Mark ``df`` as returned: the checkpoints it reads outlive the
+        loop."""
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            if leaves.apply(i).nodeName() == "LogicalRDD":
+                self._reads.add(leaves.apply(i).rdd().id())
+        return df

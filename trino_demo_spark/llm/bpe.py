@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..iterutil import Rounds, materialize
 from .dedup import tokens_col
 
 
@@ -156,23 +157,19 @@ def bpe_train_words(
     re-weighted vocabulary (e.g. the parity surface's deterministic
     top-N sub-vocabulary that an in-process reference BPE re-derives).
 
-    r11 optimization-round shape: ONE Spark job per merge round. The
-    per-round argmax job both counts pairs and (via the cache manager)
-    materializes the current round's persisted segmentation as a side
-    effect, so the old explicit ``count()`` barrier per round is gone —
-    the previous round's cache is dropped one round LATE (after its
-    successor is known to be populated) instead of eagerly. Merge
-    application is the padded-string ``replace`` (seg_merge), not the
-    interpreted carry-fold: same output (pinned by the differential
-    test), codegen string work instead of per-element struct
-    allocation. Measured sf0.1: 6 rounds 5.8 s → see
+    ONE Spark job per merge round: the per-round argmax job both counts
+    pairs and (via the cache manager) populates the current round's
+    persisted segmentation as a side effect, so no ``count()`` barrier
+    is needed. Merge application is the padded-string ``replace``
+    (seg_merge), not the interpreted carry-fold: same output (pinned by
+    the differential test), codegen string work instead of per-element
+    struct allocation. Measured sf0.1: 6 rounds 5.8 s → see
     OPTIMIZATION_r11.md."""
-    words = words.select("w", "freq", seg_init(F.col("w")).alias("s"))
-    # distinct-word frame is vocabulary-sized: cache it and iterate on it
-    cur = words.persist()
-    prev = None
+    cur = words.select("w", "freq", seg_init(F.col("w")).alias("s"))
     merges: list[tuple[str, str, int]] = []
-    try:
+    with Rounds() as rounds:
+        # distinct-word frame is vocabulary-sized: cache it and iterate on it
+        cur = rounds.hold(cur.persist())
         for _ in range(n_merges):
             pairs = cur.select(
                 "freq", seg_syms(F.col("s")).alias("syms")
@@ -195,11 +192,7 @@ def bpe_train_words(
                 .limit(1)
                 .collect()
             )
-            # that collect materialized cur's cache; the parent round's
-            # cache can go now
-            if prev is not None:
-                prev.unpersist()
-            prev = cur
+            rounds.advance(cur)
             if not top:
                 break
             x, y, cnt = top[0]["p"]["x"], top[0]["p"]["y"], int(top[0]["cnt"])
@@ -214,14 +207,8 @@ def bpe_train_words(
             # extra pass every 32 rounds), a no-op at the n_merges≤8 the
             # entries use, and it bounds recompute depth to 32 rounds.
             if len(merges) % 32 == 0:
-                from ..iterutil import materialize
-
                 cur = materialize(cur)
-            cur = cur.persist()
-    finally:
-        if prev is not None:
-            prev.unpersist()
-        cur.unpersist()
+            cur = rounds.hold(cur.persist())
     return merges
 
 

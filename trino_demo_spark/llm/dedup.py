@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..genutil import explode_col, posexplode_col
-from ..iterutil import materialize
+from ..iterutil import Rounds, materialize
 
 _log = logging.getLogger(__name__)
 
@@ -819,109 +819,92 @@ def dedup_clusters(
     exactly ONCE instead of once per round."""
     e = _undirected(pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")))
     e, fp_get = _observe_fingerprint(e)
-    e = materialize(e)
-    converged = False
-    fp_prev = None
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        # large-star: for every node u (symmetric view), connect each
-        # STRICTLY LARGER neighbor v to m(u) = min(Γ(u) ∪ {u}).
-        sym = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        # ls KEEPS its .distinct() (r12, measured both ways): every
-        # consumer is duplicate-insensitive (mins2 is a min-aggregate,
-        # ss ends in its own distinct) and |ls| ≤ 2|e| before dedup, so
-        # dropping it is SAFE — but an sf10 interleaved A/B read the
-        # no-dedup variant consistently 15-25% SLOWER on the dup-heavy
-        # clusters graph: large-star output there is dominated by
-        # duplicate (v, m) rows (many neighbors share one min), and
-        # carrying them through the small-star groupBy + join + final
-        # distinct costs more than this one exchange that removes them
-        # early. Local sf0.1 was a wash either way; the dedup stays for
-        # the scale case.
-        ls = _undirected(
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        # ls feeds TWO subtrees inside this round (the mins2 aggregate
-        # and the ss join) — persist() makes the large-star pass
-        # compute once and serve both from cache, WITHOUT the
-        # checkpoint job pair a full materialize costs (~25% of the
-        # loop's fixed local-mode overhead). Lineage/stats blowup is
-        # still reset every round by ss's materialize below; the cache
-        # is dropped as soon as ss is solid.
-        ls = ls.persist()
-        # small-star: direct every edge toward its larger endpoint;
-        # connect each smaller neighbor (and the node itself) to the
-        # minimum of that in-neighborhood.
-        dirn = ls.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        mins2 = dirn.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        ss = _undirected(
-            dirn.join(mins2, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(
-                mins2.select(F.col("u").alias("a"), F.col("m").alias("b"))
+    fp_new = None
+    with Rounds() as rounds:
+        e = rounds.hold(materialize(e))
+        fp_prev = fp_get(e)
+        for _ in range(max_iters):
+            # large-star: for every node u (symmetric view), connect each
+            # STRICTLY LARGER neighbor v to m(u) = min(Γ(u) ∪ {u}).
+            sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+            # ls KEEPS its .distinct() (r12, measured both ways): every
+            # consumer is duplicate-insensitive (mins2 is a min-aggregate,
+            # ss ends in its own distinct) and |ls| ≤ 2|e| before dedup, so
+            # dropping it is SAFE — but an sf10 interleaved A/B read the
+            # no-dedup variant consistently 15-25% SLOWER on the dup-heavy
+            # clusters graph: large-star output there is dominated by
+            # duplicate (v, m) rows (many neighbors share one min), and
+            # carrying them through the small-star groupBy + join + final
+            # distinct costs more than this one exchange that removes them
+            # early. Local sf0.1 was a wash either way; the dedup stays for
+            # the scale case.
+            ls = _undirected(
+                sym.join(mins, "u")
+                .filter(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("a"), F.col("m").alias("b"))
+            )
+            # ls feeds TWO subtrees inside this round (the mins2 aggregate
+            # and the ss join): a cache computes the large-star pass once,
+            # WITHOUT the checkpoint job a full materialize costs.
+            ls = rounds.hold(ls.persist())
+            # small-star: direct every edge toward its larger endpoint;
+            # connect each smaller neighbor (and the node itself) to the
+            # minimum of that in-neighborhood.
+            dirn = ls.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            mins2 = dirn.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+            ss = _undirected(
+                dirn.join(mins2, "u")
+                .select(F.col("v").alias("a"), F.col("m").alias("b"))
+                .unionByName(
+                    mins2.select(F.col("u").alias("a"), F.col("m").alias("b"))
+                )
+            )
+            ss, ss_fp_get = _observe_fingerprint(ss)
+            e = rounds.materialize(ss)
+            # Convergence = edge set unchanged. Both passes are monotone
+            # (each strictly decreases the sum-of-endpoints potential until
+            # the star fixpoint), so no A→B→A cycling is possible and an
+            # order-insensitive fingerprint — (count, xor of per-edge
+            # hashes) — suffices: a false stop would need two DIFFERENT
+            # consecutive edge sets with equal count AND colliding 64-bit
+            # xor (~2⁻⁶⁴). r12: the fingerprint rides the checkpoint action
+            # as observed metrics (accumulator-merged during the
+            # materializing pass — see _observe_fingerprint), so each round
+            # runs exactly ONE job and the previous round's value is
+            # carried over instead of recomputed; before, the separate
+            # fingerprint aggregate re-read the full checkpointed edge
+            # frame every round.
+            fp_new = ss_fp_get(e)
+            if fp_new == fp_prev:
+                break
+            fp_prev = fp_new
+        # observability only (r11, sf100 span evidence): expose the round
+        # count so scale studies can report the O(log² n) claim with the
+        # measured number — no dataflow depends on it
+        if stats is not None:
+            stats["rounds"] = rounds.count
+        if fp_new != fp_prev:
+            raise RuntimeError(
+                f"dedup_clusters did not converge within max_iters={max_iters} "
+                "rounds of large-star/small-star: returning would silently "
+                "split clusters. The bound is O(log² n) rounds (observed "
+                "O(log n)), so hitting this signals either max_iters set far "
+                "too low or a pathological pair graph."
+            )
+        # Converged edge set is a union of stars (center u = component min,
+        # u < v for every member v). Nodes absent from any pair label
+        # themselves.
+        lab = e.select(F.col("v").alias("id"), F.col("u").alias("label"))
+        out = ids.select(F.col(id_col).alias("id")).join(lab, "id", "left")
+        label = F.coalesce("label", "id")
+        return rounds.result(
+            out.select(
+                F.col("id").alias(id_col),
+                label.alias("cluster_id"),
+                (F.col("id") == label).alias("is_canonical"),
             )
         )
-        ss, ss_fp_get = _observe_fingerprint(ss)
-        ss = materialize(ss)
-        ls.unpersist()
-        # Convergence = edge set unchanged. Both passes are monotone
-        # (each strictly decreases the sum-of-endpoints potential until
-        # the star fixpoint), so no A→B→A cycling is possible and an
-        # order-insensitive fingerprint — (count, xor of per-edge
-        # hashes) — suffices: a false stop would need two DIFFERENT
-        # consecutive edge sets with equal count AND colliding 64-bit
-        # xor (~2⁻⁶⁴). r12: the fingerprint rides the checkpoint action
-        # as observed metrics (accumulator-merged during the
-        # materializing pass — see _observe_fingerprint), so each round
-        # runs exactly ONE job and the previous round's value is
-        # carried over instead of recomputed; before, the separate
-        # fingerprint aggregate re-read the full checkpointed edge
-        # frame every round.
-        if fp_prev is None:
-            fp_prev = fp_get(e)
-        fp_new = ss_fp_get(ss)
-        e = ss
-        if fp_new == fp_prev:
-            converged = True
-            break
-        fp_prev = fp_new
-    # observability only (r11, sf100 span evidence): expose the round
-    # count so scale studies can report the O(log² n) claim with the
-    # measured number — no dataflow depends on it
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters did not converge within max_iters={max_iters} "
-            "rounds of large-star/small-star: returning would silently "
-            "split clusters. The bound is O(log² n) rounds (observed "
-            "O(log n)), so hitting this signals either max_iters set far "
-            "too low or a pathological pair graph."
-        )
-    # Converged edge set is a union of stars (center u = component min,
-    # u < v for every member v). Nodes absent from any pair label
-    # themselves.
-    lab = e.select(F.col("v").alias("id"), F.col("u").alias("label"))
-    return (
-        ids.select(F.col(id_col).alias("id"))
-        .join(lab, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("label", "id").alias("cluster_id"),
-            (F.col("id") == F.coalesce("label", "id")).alias("is_canonical"),
-        )
-    )
-
 
 # --- incremental dedup against an existing corpus ---------------------------
 

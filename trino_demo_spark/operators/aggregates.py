@@ -62,23 +62,6 @@ def robust_fit(df: DataFrame, cols: Sequence[str], exact: bool = True) -> DataFr
     return df.agg(*aggs)
 
 
-def robust_transform(df: DataFrame, fit: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """(x - median) / IQR per column, broadcast-parameterized.
-    try_divide: zero IQR (constant-ish column) → NULL, not an ANSI
-    crash — matching DuckDB's x/0."""
-    out = df.crossJoin(F.broadcast(fit))
-    for c in cols:
-        out = out.withColumn(
-            f"{c}_scaled",
-            F.try_divide(
-                F.col(c) - F.col(f"{c}_q50"),
-                F.col(f"{c}_q75") - F.col(f"{c}_q25"),
-            ),
-        )
-    drop = [f"{c}_{q}" for c in cols for q in ("q25", "q50", "q75")]
-    return out.drop(*drop)
-
-
 def error_metrics(
     df: DataFrame, y_col: str, pred_col: str, round_to: int | None = 4
 ) -> DataFrame:

@@ -3092,7 +3092,7 @@ def llm_sample_weighted(spark, sf_dir):
     "itself stays cross-checked in tests/test_llm.py.",
 )
 def llm_tokenizer_bpe(spark, sf_dir):
-    from .iterutil import materialize
+    from .iterutil import materialize, release
     from .llm import bpe
 
     docs = _t(spark, sf_dir, "documents")
@@ -3119,6 +3119,7 @@ def llm_tokenizer_bpe(spark, sf_dir):
     ref_seq = bpe.bpe_reference(
         {r["w"]: int(r["freq"]) for r in top_rows}, n_merges=n_req
     )
+    release(wf)
     return docs.agg(F.count("*").alias("n_docs")).select(
         "n_docs",
         F.lit(len(merges) <= n_req).alias("merges_le_requested"),

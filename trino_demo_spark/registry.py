@@ -247,24 +247,3 @@ def register_views(
         for alias, target in THREE_PART_ALIASES.items():
             if target == name:
                 df.createOrReplaceTempView(alias.replace(".", "_"))
-
-
-class Catalog:
-    """Tiny session-scoped catalog: name → DataFrame, memoized per sf_dir."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str | None = None):
-        self.spark = spark
-        self.sf_dir = sf_dir or DEFAULT_SF_DIR
-        self._cache: dict[str, DataFrame] = {}
-
-    def table(self, name: str) -> DataFrame:
-        key = resolve_name(name)
-        if key not in self._cache:
-            self._cache[key] = load_table(self.spark, key, self.sf_dir)
-        return self._cache[key]
-
-    def __getattr__(self, name: str) -> DataFrame:
-        try:
-            return self.table(name)
-        except KeyError as e:  # pragma: no cover
-            raise AttributeError(name) from e

@@ -86,14 +86,3 @@ def read_typed_header_csv(spark: SparkSession, path: str, header_line: str) -> D
             c = c.try_cast(f.dataType)
         cols.append(c.alias(f.name))
     return raw.select(*cols)
-
-
-def read_header_csv(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Plain header CSV (`fillMongoDB.ipynb:176-185`). Explicit schema when
-    available (engine tables must never infer); inference only as the
-    exploratory fallback the reference used."""
-    if schema is not None:
-        return spark.read.csv(path, header=True, schema=schema)
-    return spark.read.csv(path, header=True, inferSchema=True)

@@ -1,70 +1,16 @@
-"""Document-store (MongoDB-shaped) source adapter with sidecar-declared
-schemas.
+"""Document-store (MongoDB-shaped) sidecar schemas.
 
 The reference declares the collection schema in a sidecar collection
 (`schemadef`, `trino/catalog/mongodb.properties:3`;
 `fillMongoDB.ipynb:510-556` writes it) instead of inferring. The engine
-mirrors that: a schema registry entry IS the sidecar, and the connector
-(when present) is told the schema explicitly.
-
-The mongo connector jar is not in this container — reads/writes are gated
-behind availability and the parity suite exercises the same semantics via
-parquet + registry StructTypes (`scan_document`, `sink_document` shape).
+mirrors that: a schema registry entry IS the sidecar. The parity suite
+exercises the document semantics via parquet + registry StructTypes
+(`scan_document`, `sink_document` shape).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def connector_available(spark: SparkSession) -> bool:
-    """True when the Spark-MongoDB connector is on the classpath.
-
-    py4j resolves a MISSING class to a JavaPackage placeholder instead
-    of raising, so bare attribute access always "succeeds" — the class
-    must be loaded explicitly via Class.forName."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "com.mongodb.spark.sql.connector.MongoTableProvider"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def read_collection(
-    spark: SparkSession,
-    uri: str,
-    database: str,
-    collection: str,
-    schema: T.StructType,
-) -> DataFrame:
-    """Read a collection with an explicitly declared (sidecar) schema —
-    never inference: schema drives column pruning into the connector's
-    aggregation pipeline projection."""
-    return (
-        spark.read.format("mongodb")
-        .option("connection.uri", uri)
-        .option("database", database)
-        .option("collection", collection)
-        .schema(schema)
-        .load()
-    )
-
-
-def write_collection(
-    df: DataFrame, uri: str, database: str, collection: str, mode: str = "append"
-) -> None:
-    """insert_many equivalent (`fillMongoDB.ipynb:354-369`)."""
-    (
-        df.write.format("mongodb")
-        .option("connection.uri", uri)
-        .option("database", database)
-        .option("collection", collection)
-        .mode(mode)
-        .save()
-    )
 
 
 def schema_to_sidecar(schema: T.StructType) -> list[dict]:

@@ -121,21 +121,3 @@ def read_topic(
     opts = bounded_scan_options(topic, brokers, lower, upper)
     raw = spark.read.format("kafka").options(**opts).load()
     return decode_with_mapping(raw, table_description)
-
-
-def write_topic(df: DataFrame, table_description: dict[str, Any], brokers: str) -> None:
-    """Producer equivalent (`stockDataProducer.py:36-53`): serialize rows
-    to JSON messages keyed by the declared mapping and publish."""
-    fields = [f["name"] for f in table_description["message"]["fields"]]
-    topic = table_description.get("topicName", table_description.get("topic"))
-    payload = df.select(
-        F.to_json(
-            F.struct(*[F.col(n).alias(m["mapping"]) for n, m in zip(fields, table_description["message"]["fields"])])
-        ).alias("value")
-    )
-    (
-        payload.write.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .save()
-    )

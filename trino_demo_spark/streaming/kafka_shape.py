@@ -125,22 +125,6 @@ def run_available_now(
     )
 
 
-def to_kafka_stream(
-    df: DataFrame, brokers: str, topic: str, checkpoint: str, interval: str = "60 seconds"
-) -> StreamingQuery:
-    """Continuous producer equivalent (`stockDataProducer.py:45-53`
-    publishes one quote per minute): micro-batched JSON publish."""
-    payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=interval)
-        .start()
-    )
-
-
 def keep_latest_stateful(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Custom stateful operator: latest revision per (user_id, day) wins —
     the streaming-native form of parity.stream_dedup_late (forecast
