@@ -119,15 +119,20 @@ def _als(spark):
     return list(als_fit_distributed(ratings, iters=3))
 
 
-def _clusters(spark):
-    from trino_demo_spark.llm.dedup import dedup_clusters
-
+def _path(spark):
+    """61 documents joined by a 60-edge path: one cluster, 7 CC rounds."""
     ids = spark.range(61).select(F.col("id").alias("doc_id"))
     path = spark.range(60).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
+    return ids, path
+
+
+def _clusters(spark):
+    from trino_demo_spark.llm.dedup import dedup_clusters
+
     stats = {}
-    out = dedup_clusters(ids, path, stats=stats)
+    out = dedup_clusters(*_path(spark), stats=stats)
     assert stats["rounds"] == 7
     return [out]
 
@@ -167,3 +172,21 @@ def test_round_loops_leave_only_what_the_result_reads(spark, build, reads):
         df.collect()
     assert len(set(jsc.getPersistentRDDs().keys()) - before) == reads
     assert cache.isEmpty()
+
+
+def test_clusters_raise_when_not_converged(spark):
+    """A pair graph that needs more rounds than ``max_iters`` raises
+    instead of returning split clusters: the path closes in 7 rounds, so
+    2 fall short. The rounds made are still reported, and the failed
+    loop leaves nothing persisted."""
+    from trino_demo_spark.llm.dedup import dedup_clusters
+
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    before = set(jsc.getPersistentRDDs().keys())
+    stats = {}
+    with pytest.raises(RuntimeError, match="did not converge within max_iters=2 "):
+        dedup_clusters(*_path(spark), max_iters=2, stats=stats)
+    assert stats["rounds"] == 2
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -35,12 +35,12 @@ ordering is what resets the stats either way.
 
 ``Rounds`` owns 3, with one release rule for every loop:
 
-* a loop **invariant** (an input every round reads) is held until the
-  loop ends;
+* a loop **invariant** (an input every round reads, passed to
+  ``Rounds``) is held until the loop ends;
 * a **per-round** frame (a round's state, or a cache serving one
-  round) is held until the next round's state is solid — materialized
-  through ``Rounds.materialize``, or computed by an action the loop
-  runs anyway and handed to ``Rounds.advance``;
+  round) is held until the next round's state is solid: materialized,
+  or computed by an action the loop runs anyway, and handed to
+  ``Rounds.advance``;
 * when the loop ends, everything held is released except the
   checkpoints the returned lazy result (``Rounds.result``) reads.
 """
@@ -104,13 +104,14 @@ def release(df: DataFrame) -> None:
 
 
 class Rounds:
-    """The owner of one iterative loop's frames: applies the module
-    docstring's release rule. Use as a context manager around the loop;
-    ``count`` is the number of rounds made solid."""
+    """The owner of one iterative loop's frames, applying the module
+    docstring's release rule: a context manager around the loop, built
+    with the loop's invariants. ``count`` is the number of rounds
+    advanced."""
 
-    def __init__(self) -> None:
+    def __init__(self, *invariants: DataFrame) -> None:
         self.count = 0
-        self._invariants: list[DataFrame] = []
+        self._invariants = invariants
         self._round: list[DataFrame] = []
         self._reads: set[int] = set()
 
@@ -118,19 +119,14 @@ class Rounds:
         return self
 
     def __exit__(self, *exc) -> None:
-        for df in self._invariants + self._round:
+        for df in (*self._invariants, *self._round):
             rdd = _checkpoint_rdd(df)
             if rdd is None or rdd.id() not in self._reads:
                 release(df)
 
-    def invariant(self, df: DataFrame) -> DataFrame:
-        """Hold ``df`` (persisted or materialized) until the loop ends."""
-        self._invariants.append(df)
-        return df
-
     def hold(self, df: DataFrame) -> DataFrame:
-        """Hold ``df`` (persisted or materialized) until the next round
-        is solid."""
+        """Hold a per-round ``df`` (persisted or checkpointed) until the
+        next ``advance``."""
         self._round.append(df)
         return df
 
@@ -143,10 +139,6 @@ class Rounds:
         self._round = [state]
         self.count += 1
         return state
-
-    def materialize(self, df: DataFrame) -> DataFrame:
-        """Materialize ``df`` as the new round's state (``advance``)."""
-        return self.advance(materialize(df))
 
     def result(self, df: DataFrame) -> DataFrame:
         """Mark ``df`` as returned: the checkpoints it reads outlive the

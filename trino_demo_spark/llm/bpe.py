@@ -168,9 +168,9 @@ def bpe_train_words(
     cur = words.select("w", "freq", seg_init(F.col("w")).alias("s"))
     merges: list[tuple[str, str, int]] = []
     with Rounds() as rounds:
-        # distinct-word frame is vocabulary-sized: cache it and iterate on it
-        cur = rounds.hold(cur.persist())
         for _ in range(n_merges):
+            # distinct-word frame is vocabulary-sized: cache it and iterate on it
+            cur = rounds.hold(cur.persist())
             pairs = cur.select(
                 "freq", seg_syms(F.col("s")).alias("syms")
             ).select(
@@ -208,7 +208,6 @@ def bpe_train_words(
             # entries use, and it bounds recompute depth to 32 rounds.
             if len(merges) % 32 == 0:
                 cur = materialize(cur)
-            cur = rounds.hold(cur.persist())
     return merges
 
 

@@ -819,15 +819,19 @@ def dedup_clusters(
     exactly ONCE instead of once per round."""
     e = _undirected(pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")))
     e, fp_get = _observe_fingerprint(e)
-    fp_new = None
     with Rounds() as rounds:
         e = rounds.hold(materialize(e))
         fp_prev = fp_get(e)
+        converged = False
         for _ in range(max_iters):
             # large-star: for every node u (symmetric view), connect each
             # STRICTLY LARGER neighbor v to m(u) = min(Γ(u) ∪ {u}).
-            sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+            sym = e.unionByName(
+                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+            mins = sym.groupBy("u").agg(
+                F.least(F.min("v"), F.first("u")).alias("m")
+            )
             # ls KEEPS its .distinct() (r12, measured both ways): every
             # consumer is duplicate-insensitive (mins2 is a min-aggregate,
             # ss ends in its own distinct) and |ls| ≤ 2|e| before dedup, so
@@ -845,14 +849,19 @@ def dedup_clusters(
                 .select(F.col("v").alias("a"), F.col("m").alias("b"))
             )
             # ls feeds TWO subtrees inside this round (the mins2 aggregate
-            # and the ss join): a cache computes the large-star pass once,
-            # WITHOUT the checkpoint job a full materialize costs.
+            # and the ss join) — persist() makes the large-star pass
+            # compute once and serve both from cache, WITHOUT the
+            # checkpoint job pair a full materialize costs (~25% of the
+            # loop's fixed local-mode overhead). Lineage/stats blowup is
+            # still reset every round by ss's materialize below.
             ls = rounds.hold(ls.persist())
             # small-star: direct every edge toward its larger endpoint;
             # connect each smaller neighbor (and the node itself) to the
             # minimum of that in-neighborhood.
             dirn = ls.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            mins2 = dirn.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+            mins2 = dirn.groupBy("u").agg(
+                F.least(F.min("v"), F.first("u")).alias("m")
+            )
             ss = _undirected(
                 dirn.join(mins2, "u")
                 .select(F.col("v").alias("a"), F.col("m").alias("b"))
@@ -861,7 +870,7 @@ def dedup_clusters(
                 )
             )
             ss, ss_fp_get = _observe_fingerprint(ss)
-            e = rounds.materialize(ss)
+            e = rounds.advance(materialize(ss))
             # Convergence = edge set unchanged. Both passes are monotone
             # (each strictly decreases the sum-of-endpoints potential until
             # the star fixpoint), so no A→B→A cycling is possible and an
@@ -876,7 +885,8 @@ def dedup_clusters(
             # fingerprint aggregate re-read the full checkpointed edge
             # frame every round.
             fp_new = ss_fp_get(e)
-            if fp_new == fp_prev:
+            converged = fp_new == fp_prev
+            if converged:
                 break
             fp_prev = fp_new
         # observability only (r11, sf100 span evidence): expose the round
@@ -884,7 +894,7 @@ def dedup_clusters(
         # measured number — no dataflow depends on it
         if stats is not None:
             stats["rounds"] = rounds.count
-        if fp_new != fp_prev:
+        if not converged:
             raise RuntimeError(
                 f"dedup_clusters did not converge within max_iters={max_iters} "
                 "rounds of large-star/small-star: returning would silently "
@@ -896,15 +906,16 @@ def dedup_clusters(
         # u < v for every member v). Nodes absent from any pair label
         # themselves.
         lab = e.select(F.col("v").alias("id"), F.col("u").alias("label"))
-        out = ids.select(F.col(id_col).alias("id")).join(lab, "id", "left")
-        label = F.coalesce("label", "id")
         return rounds.result(
-            out.select(
+            ids.select(F.col(id_col).alias("id"))
+            .join(lab, "id", "left")
+            .select(
                 F.col("id").alias(id_col),
-                label.alias("cluster_id"),
-                (F.col("id") == label).alias("is_canonical"),
+                F.coalesce("label", "id").alias("cluster_id"),
+                (F.col("id") == F.coalesce("label", "id")).alias("is_canonical"),
             )
         )
+
 
 # --- incremental dedup against an existing corpus ---------------------------
 

@@ -164,7 +164,7 @@ def logreg_fit(
             ).alias("loss"),
         ).collect()[0]
 
-    try:
+    with Rounds(feats):
         w = [0.0] * dims
         b = 0.0
         cur = evaluate(w, b)
@@ -182,8 +182,6 @@ def logreg_fit(
                 # trace records accepted steps only → non-increasing.
                 step /= 2.0
         return w, b, losses
-    finally:
-        feats.unpersist()
 
 
 def logreg_predict(
@@ -249,18 +247,23 @@ def pagerank(
     # cluster the same reshuffle is the dominating network cost. The
     # out-degree frame inherits the src partitioning through its
     # groupBy, making that join exchange-free on both sides.
-    with Rounds() as rounds:
-        edges = materialize(edges.select(src_col, dst_col).repartition(F.col(src_col)))
-        edges = rounds.invariant(edges)
-        nodes = edges.select(F.col(src_col).alias("node")).union(edges.select(dst_col))
-        nodes = rounds.invariant(nodes.distinct().persist())
+    edges = materialize(
+        edges.select(src_col, dst_col).repartition(F.col(src_col))
+    )
+    nodes = (
+        edges.select(F.col(src_col).alias("node"))
+        .union(edges.select(F.col(dst_col)))
+        .distinct()
+    )
+    out_deg = materialize(
+        edges.groupBy(src_col).agg(F.count("*").alias("out_deg"))
+    )
+    with Rounds(edges, nodes.persist(), out_deg) as rounds:
         n = nodes.count()
         if n == 0:
             # Empty edge list: no nodes, no ranks. Keep the (node, rank)
             # contract with zero rows.
             return rounds.result(nodes.select("node", F.lit(0.0).alias("rank")))
-        out_deg = edges.groupBy(src_col).agg(F.count("*").alias("out_deg"))
-        out_deg = rounds.invariant(materialize(out_deg))
         ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
         for _ in range(iters):
             contribs = (
@@ -298,9 +301,11 @@ def pagerank(
             # the compounded join-size estimate forward, doubling its BigInt
             # digit count per round (see iterutil docstring). On a cluster
             # use reliable checkpointing instead.
-            ranks = rounds.materialize(ranks)
-        rank = F.round(F.col("rank") + F.lit(1e-9), round_to)
-        return rounds.result(ranks.select("node", rank.alias("rank")))
+            ranks = rounds.advance(materialize(ranks))
+        out = ranks.select(
+            "node", F.round(F.col("rank") + F.lit(1e-9), round_to).alias("rank")
+        )
+        return rounds.result(out)
 
 
 def feature_hash(
@@ -457,6 +462,7 @@ def als_fit_distributed(
 
     Returns (item_factors DataFrame (item, q1, q2),
              user_factors DataFrame (user, u1, u2))."""
+
     def solve(joined, key, f1, f2):
         agg = joined.groupBy(key).agg(
             F.sum(F.col(f1) * F.col(f1)).alias("a11"),
@@ -490,39 +496,48 @@ def als_fit_distributed(
     # ratings. Storage trade: 2× the ratings in checkpoint blocks —
     # the standard ALS trade at any scale.
     base = ratings.select(user_col, item_col, rating_col)
-    with Rounds() as rounds:
-        by_item = rounds.invariant(materialize(base.repartition(F.col(item_col))))
-        by_user = rounds.invariant(materialize(by_item.repartition(F.col(user_col))))
-        q2 = 0.1 * (F.pmod(F.xxhash64(F.col(item_col)), F.lit(997)) + 1).cast("double")
-        items = by_item.select(item_col).distinct()
-        items = items.select(item_col, F.lit(1.0).alias("q1"), q2.alias("q2"))
-        # r11 optimization round: ONE materialization per iteration, at the
-        # item_f round boundary (the checkpointInterval discipline of
-        # MLlib's ALS). The user half-step frame has exactly ONE consumer —
-        # the item solve of the same iteration — so checkpointing it bought
-        # nothing: no branch to protect from re-execution, and its lineage
-        # (two joins + two aggregates against already-checkpointed frames
-        # with real stats) is depth-bounded, so the compounding-estimate
-        # trap (iterutil docstring) never engages. Same for the init item
-        # frame (single consumer: iteration 1). Dataflow and results are
-        # unchanged — both half-steps just execute inside one action.
-        # Measured sf0.1 interleaved A/B (the entry wall carries ±25%
-        # session noise, so single-sample comparisons mislead — see
-        # OPTIMIZATION_r11.md): fused 5.05/4.20s vs per-half-step
-        # 6.62/5.65s; at scale it deletes 6 cache-write+read cycles of the
-        # factor frames per fit.
-        item_f = items
+    by_item = materialize(base.repartition(F.col(item_col)))
+    by_user = materialize(by_item.repartition(F.col(user_col)))
+    item_f = (
+        by_item.select(item_col)
+        .distinct()
+        .select(
+            item_col,
+            F.lit(1.0).alias("q1"),
+            (
+                0.1
+                * (F.pmod(F.xxhash64(F.col(item_col)), F.lit(997)) + 1).cast(
+                    "double"
+                )
+            ).alias("q2"),
+        )
+    )
+    # r11 optimization round: ONE materialization per iteration, at the
+    # item_f round boundary (the checkpointInterval discipline of
+    # MLlib's ALS). The user half-step frame has exactly ONE consumer —
+    # the item solve of the same iteration — so checkpointing it bought
+    # nothing: no branch to protect from re-execution, and its lineage
+    # (two joins + two aggregates against already-checkpointed frames
+    # with real stats) is depth-bounded, so the compounding-estimate
+    # trap (iterutil docstring) never engages. Same for the init item
+    # frame (single consumer: iteration 1). Dataflow and results are
+    # unchanged — both half-steps just execute inside one action.
+    # Measured sf0.1 interleaved A/B (the entry wall carries ±25%
+    # session noise, so single-sample comparisons mislead — see
+    # OPTIMIZATION_r11.md): fused 5.05/4.20s vs per-half-step
+    # 6.62/5.65s; at scale it deletes 6 cache-write+read cycles of the
+    # factor frames per fit.
+    with Rounds(by_item, by_user) as rounds:
         for _ in range(iters):
             ju = by_item.join(item_f, item_col)
             users = solve(ju, user_col, "q1", "q2").select(
                 user_col, F.col("x1").alias("u1"), F.col("x2").alias("u2")
             )
             ji = by_user.join(users, user_col)
-            item_f = rounds.materialize(
-                solve(ji, item_col, "u1", "u2").select(
-                    item_col, F.col("x1").alias("q1"), F.col("x2").alias("q2")
-                )
+            item_f = solve(ji, item_col, "u1", "u2").select(
+                item_col, F.col("x1").alias("q1"), F.col("x2").alias("q2")
             )
+            item_f = rounds.advance(materialize(item_f))
         # final user half-step: returned user factors are the ridge solution
         # AGAINST the returned item factors (mutually consistent)
         users = materialize(
